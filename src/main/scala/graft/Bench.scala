@@ -69,11 +69,11 @@ object Bench {
         // stack hundreds of dead RDDs — by the alphabetically-late
         // q_g* cluster, eviction/recompute churn from other queries'
         // debris lands inside the timed reps (r9: triangles median
-        // 9.67 s over a 3.10 s min on an unchanged plan). Pinned ids
+        // 9.67 s over a 3.10 s min on an unchanged plan). Pinned blocks
         // (session-lifetime memos with truncated lineage) survive;
         // everything else is per-execution debris that a fresh
         // application would never have seen.
-        Pinned.dropUnpinned(spark.sparkContext)
+        Memo.dropUnpinned(spark.sparkContext)
         // then drain accumulated garbage — per QUERY was not enough:
         // GC debt from OTHER executions is session noise, not query
         // cost; outside the timed window it cannot poison

@@ -12,33 +12,17 @@ import org.apache.spark.sql.functions._
   * not change.
   */
 object Tables {
-  /** Schema memo for the fixture tables, keyed path → (fingerprint,
-    * schema). `spark.read.parquet` with no schema re-infers from the
-    * parquet footer on EVERY call — a driver-side footer open + read
-    * per table reference per execution that lands in the bench's
-    * driver-gap bucket (guide §1/§7.3: driver work outside any job).
-    * The schema is pure metadata derived from the file set, so the
-    * standard memo rule applies (same fingerprint ⇒ same footer ⇒
-    * same schema); on fingerprint mismatch the table is re-inferred.
-    * Results are unaffected by construction: the memoized schema IS
-    * the schema inference would return. Session-independent
-    * (StructType is plain data), shared across cloned sessions.
+  /** Every table read carries its schema from `Memo.value`:
+    * `spark.read.parquet` with no schema re-infers from the parquet
+    * footer on every call, a driver-side footer read per table
+    * reference per execution, all of it driver work outside any
+    * job. The memoized schema is the one inference would return.
     */
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (String, org.apache.spark.sql.types.StructType)]()
-
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val fp = fingerprint(dir, name)
-    val hit = schemaMemo.get(path)
-    if (hit != null && hit._1 == fp)
-      spark.read.schema(hit._2).parquet(path)
-    else {
-      val df = spark.read.parquet(path)
-      schemaMemo.put(path, (fp, df.schema))
-      df
-    }
+    val schema = Memo.value(s"schema $path", fingerprint(dir, name))(
+      spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
   }
 
   def region(s: SparkSession, d: String): DataFrame    = t(s, d, "region")
@@ -79,15 +63,11 @@ object Tables {
       .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
 
   /** File-metadata fingerprint of `<dir>/<table>.parquet` — part
-    * count, max mtime, total bytes. THE memo re-derivation key for
-    * every cache that outlives one query (EventStream.spanMemo,
-    * StreamToolOps.sliceMemo, GraphOps.edgeMemo, Similarity.centMemo):
-    * an in-JVM rewrite of the source table must re-probe/re-derive,
-    * and hoisting the rule here is what actually guarantees the memos
-    * "can never disagree" about whether a rewrite happened. Byte total
-    * is part of the print because mtime granularity can be 1 s on some
-    * filesystems; a same-second same-size rewrite of identical-span
-    * data is the only aliasing left, which is benign.
+    * count, max mtime, total bytes. The source key of every `Memo`
+    * entry: an in-JVM rewrite of the source table must re-derive. Byte
+    * total is part of the print because mtime granularity can be 1 s
+    * on some filesystems; a same-second same-size rewrite of
+    * identical-span data is the only aliasing left, which is benign.
     */
   private[graft] def fingerprint(dir: String, table: String): String = {
     val t = new java.io.File(dir, s"$table.parquet")
@@ -95,21 +75,10 @@ object Tables {
     s"${parts.length}|${parts.map(_.lastModified).maxOption.getOrElse(0L)}|${parts.map(_.length).sum}"
   }
 
-  /** Layout-probe memo, keyed dir → (fingerprint, layout): the footer
-    * open behind `probeTsLayout` runs once per (events table version),
-    * not once per `events()`/`readEvents()` call — same metadata-memo
-    * rule as `schemaMemo` (the layout is a pure function of the file
-    * set the fingerprint covers).
-    */
-  private val layoutMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, TsLayout)]()
-
-  private[graft] def probeTsLayout(s: SparkSession, d: String): TsLayout = {
-    val fp = fingerprint(d, "events")
-    layoutMemo.compute(d, (_, prev) =>
-      if (prev != null && prev._1 == fp) prev
-      else (fp, probeTsLayoutUncached(s, d)))._2
-  }
+  /** The footer probe runs once per events table version (`Memo`). */
+  private[graft] def probeTsLayout(s: SparkSession, d: String): TsLayout =
+    Memo.value(s"ts-layout $d", fingerprint(d, "events"))(
+      probeTsLayoutUncached(s, d))
 
   private def probeTsLayoutUncached(s: SparkSession, d: String): TsLayout = {
     import org.apache.parquet.schema.LogicalTypeAnnotation

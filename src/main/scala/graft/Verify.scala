@@ -31,7 +31,7 @@ object Verify {
       // same hygiene as Bench: checkpoint-heavy queries persist blocks
       // they never release, and 185 accumulated chains pressure the
       // storage pool for later queries; pinned session memos survive
-      Pinned.dropUnpinned(spark.sparkContext)
+      Memo.dropUnpinned(spark.sparkContext)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

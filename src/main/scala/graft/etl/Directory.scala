@@ -343,36 +343,6 @@ object Directory {
     files
   }
 
-  /** Partition-pruned persistence: layout the snapshot by parent dn so
-    * the engine's frequent LEVEL scans (`parentDn === base`, uidmap
-    * build, GC sweep) read one partition directory instead of the whole
-    * table — at 100 TB this is the difference between a metadata prune
-    * and a full scan. dn stays the row key; `parent` is derived, not
-    * stored in `attrs`.
-    */
-  def savePartitioned(snapshot: Dataset[Entry], dir: String): Unit =
-    snapshot.toDF
-      .withColumn("parent", parentDnCol(col("dn")))
-      .write.mode("overwrite")
-      .partitionBy("parent")
-      .parquet(dir)
-
-  def loadPartitioned(spark: SparkSession, dir: String): Dataset[Entry] = {
-    import spark.implicits._
-    spark.read.parquet(dir).select("dn", "attrs").as[Entry]
-  }
-
-  /** LEVEL scan against a partitioned snapshot — prunes to one
-    * partition directory (verify via `PartitionFilters` in explain).
-    */
-  def levelScan(spark: SparkSession, dir: String, base: String)
-      : Dataset[Entry] = {
-    import spark.implicits._
-    spark.read.parquet(dir)
-      .filter(col("parent") === base)
-      .select("dn", "attrs").as[Entry]
-  }
-
   /** Bucketed persistence: cluster + sort the snapshot by dn so the
     * per-cycle MERGE joins (match, apply) read pre-partitioned,
     * pre-sorted data — the snapshot side of a sort-merge join then

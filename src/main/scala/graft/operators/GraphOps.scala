@@ -67,40 +67,22 @@ object GraphOps {
     (edges, co)
   }
 
-  /** Session-lifetime memo of the derived affinity graph — the
-    * checkpointed edge list and its count, keyed by (session, dataset
-    * fingerprint).
+  /** The derived affinity graph — the checkpointed edge list and its
+    * count — is a `Memo.frame` entry per (session, dataset), re-derived
+    * when the lineitem fingerprint changes.
     *
     * Derive-once-analyze-many: all four graph analytics run over the
     * SAME derived graph, and a real pipeline materializes that graph
     * once, not per analytic. Each query still *means* what its name
     * says — q_g2_pagerank measures PageRank, not a repeated edge
-    * derivation (the EtlOps.memo argument). The derivation itself is
-    * priced once at first use and its plan is pinned by GraphOpsSpec;
-    * before the memo, the bench re-derived identical edges 12× per run
-    * and the derivation's CPU weight made the whole q_g* cluster
-    * volatile under box contention (r9–r11).
-    *
-    * Keying discipline matches the streaming memos: the map key is the
-    * session object (identity — never hand a stopped context's
-    * checkpoint to a new session) plus the dataset DIR; the entry
-    * carries a file-metadata fingerprint of the SOURCE table
-    * (Tables.fingerprint), and a fingerprint mismatch REPLACES the
-    * entry — releasing the superseded pinned blocks first, so an
-    * in-JVM rewrite of the lineitem fixture re-derives instead of
-    * replaying stale edges AND never leaks a dead checkpoint per
-    * rewrite. Blocks are PINNED: the checkpoint's lineage is
-    * truncated, so a cross-query cleanup (Bench.dropUnpinned) dropping
-    * them would hand out an unrecoverable frame; the inner
-    * pre-threshold pair-count cache is explicitly released after the
-    * edge count materializes, so only the edge list itself stays in
-    * session storage.
+    * derivation. The derivation itself is priced once at first use
+    * and its plan is pinned by GraphOpsSpec; before the memo, the
+    * bench re-derived identical edges 12× per run and the
+    * derivation's CPU weight made the whole q_g* cluster volatile
+    * under box contention (r9–r11). The inner pre-threshold pair-count
+    * cache is released after the edge count materializes, so only the
+    * edge list itself stays in session storage.
     */
-  private final case class EdgeEntry(fp: String, edges: DataFrame,
-      n: Long, pinned: Set[Int])
-  private val edgeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), EdgeEntry]()
-
   /** One full UN-memoized derivation (checkpoint + count + release) —
     * the pricing hook for GateCheck's `edges_build` row: with the
     * session memo, the per-query bench rows price the ANALYTICS, and
@@ -117,26 +99,16 @@ object GraphOps {
 
   private[operators] def affinityEdges(s: SparkSession, d: String)
       : (DataFrame, Long) = {
-    val fp = graft.Tables.fingerprint(d, "lineitem")
-    val entry = edgeMemo.compute((s, d), (_, prev) => {
-      if (prev != null && prev.fp == fp) prev
-      else {
-        if (prev != null) graft.Pinned.release(s.sparkContext, prev.pinned)
-        val ((e, n), pinned) =
-          graft.Pinned.pinningTracked(s.sparkContext) {
-            val (edges, scratch) = coEdges(s, d)
-            val e = edges.localCheckpoint(true) // sa < sb
-            val n = e.count()
-            // the pre-threshold pair-count cache only serves the build;
-            // free it so the memo pins nothing but the edge list (its
-            // id may land in the pinned set — a dead id is harmless)
-            scratch.unpersist(blocking = false)
-            (e, n)
-          }
-        EdgeEntry(fp, e, n, pinned)
-      }
-    })
-    (entry.edges, entry.n)
+    graft.Memo.frame(s, s"affinity-edges $d",
+        graft.Tables.fingerprint(d, "lineitem")) {
+      val (edges, scratch) = coEdges(s, d)
+      val e = edges.localCheckpoint(true) // sa < sb
+      val n = e.count()
+      // the pair-count cache only serves the build (its id may land in
+      // the pinned set — a dead id is harmless)
+      scratch.unpersist(blocking = false)
+      (e, n)
+    }
   }
 
   /** Triangle count with DEGREE ORIENTATION — the standard trick that

@@ -146,19 +146,6 @@ object ScaleJoins {
     * operator — bucketing is a table property, so the tables land in
     * the session catalog with external paths under the tmp dir.
     */
-  /** Bucketed-staging memo for `smbJoin`, keyed ns → source
-    * fingerprint — the stagedCdfBucketedTables discipline: bucketed
-    * layouts are written ONCE upstream (that is the entire point of
-    * bucketing — guide §2.4/§8: "only a win if the big table is
-    * already written bucketed that way upstream"), so re-writing both
-    * tables inside every timed rep priced the layout setup, not the
-    * zero-exchange join this query exists to measure. Re-stages when
-    * the source tables' fingerprint changes or the catalog entries
-    * vanished.
-    */
-  private val smbMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def smbJoin(s: SparkSession, d: String): DataFrame = {
     val base = graft.tools.JsonlTools.dumpDir(d, "smb")
     // catalog table names carry the SAME pid+dataset namespace as the
@@ -167,38 +154,25 @@ object ScaleJoins {
     // the second run at the first run's path (stale bucketed data)
     val ns = new java.io.File(base).getName
       .stripPrefix("graft_jsonl_").replaceAll("[^A-Za-z0-9_]", "_")
-    def bucketed(name: String, df: => DataFrame, key: String): DataFrame = {
-      val tbl = s"graft_smb_${ns}_$name"
+    def bucketed(name: String, df: DataFrame, key: String): Unit =
       df.write.mode("overwrite")
         .option("path", s"$base/$name")
         .bucketBy(Buckets, key).sortBy(key)
-        .saveAsTable(tbl)
-      s.table(tbl)
-    }
+        .saveAsTable(s"graft_smb_${ns}_$name")
+    // bucketed layouts are written ONCE upstream (bucketing only wins
+    // when the big table is already written bucketed that way
+    // upstream), so the write is staged once per source version
+    // (`Memo.staged`) and the timed reps price the zero-exchange join
     val fp = graft.Tables.fingerprint(d, "lineitem") + "|" +
       graft.Tables.fingerprint(d, "orders")
-    // on-disk intactness probe (round 20, ADVICE): tableExists only
-    // checks the in-memory catalog, which shares the memo's JVM
-    // lifetime — a /tmp reaper removing $base mid-session would leave a
-    // warm memo pointing at a missing external location (failing or
-    // empty joins instead of a re-stage). Require actual parquet part
-    // files under both table paths, the sliceMemo 'intact' pattern.
-    def tableIntact(name: String): Boolean =
-      Option(new java.io.File(base, name).listFiles())
-        .exists(_.exists(f => f.getName.endsWith(".parquet")
-          && !f.getName.startsWith(".")))
-    smbMemo.compute(ns, (_, prev) => {
-      if (prev == fp && s.catalog.tableExists(s"graft_smb_${ns}_lineitem")
-          && s.catalog.tableExists(s"graft_smb_${ns}_orders")
-          && tableIntact("lineitem") && tableIntact("orders")) prev
-      else {
-        bucketed("lineitem", lineitem(s, d)
-          .select(col("l_orderkey"), col("l_quantity")), "l_orderkey")
-        bucketed("orders", orders(s, d)
-          .select(col("o_orderkey"), col("o_orderpriority")), "o_orderkey")
-        fp
-      }
-    })
+    graft.Memo.staged(base, fp,
+        s.catalog.tableExists(s"graft_smb_${ns}_lineitem")
+          && s.catalog.tableExists(s"graft_smb_${ns}_orders")) {
+      bucketed("lineitem", lineitem(s, d)
+        .select(col("l_orderkey"), col("l_quantity")), "l_orderkey")
+      bucketed("orders", orders(s, d)
+        .select(col("o_orderkey"), col("o_orderpriority")), "o_orderkey")
+    }
     val l = s.table(s"graft_smb_${ns}_lineitem")
     val o = s.table(s"graft_smb_${ns}_orders")
     l.hint("merge").join(o, col("l_orderkey") === col("o_orderkey"))

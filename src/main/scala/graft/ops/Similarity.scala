@@ -314,6 +314,13 @@ object Similarity {
   private[ops] def dedupCells(n: Long): Long =
     math.max(16L, math.ceil(math.sqrt(n.toDouble)).toLong)
 
+  /** Lloyd iteration count — FIXED at 2, not a conf: the DuckDB oracle
+    * unrolls exactly this many update rounds (dedupCellSql splices
+    * dedupKmeansIter twice), so a runtime knob would silently break
+    * oracle agreement the moment anyone set it.
+    */
+  private val kmeansIters = 2
+
   /** TRAINED coarse quantizer for the semantic-dedup pruner (round 12
     * — delivers the promise the first-k quantizer carried): Lloyd's
     * k-means with k = dedupCells(N), first-k seeds, and
@@ -329,80 +336,62 @@ object Similarity {
     * Each update round is ONE narrow argmin pass (k-row broadcast
     * join) plus ONE (cell, dim)-keyed aggregation whose k·dims-row
     * result is the canonical bounded k-means collect — never O(N)
-    * driver data. The result is MEMOIZED per (session, corpus
-    * fingerprint): a coarse quantizer is a trained INDEX artifact —
-    * train once, assign many — so queries built after the first call
-    * are lazy plans over the cached centroid table (the
-    * build-time-eagerness ADVICE on the old N-count applies only to
-    * the first build per session).
+    * driver data. The trained centroid rows and k are a `Memo.value`
+    * entry per corpus fingerprint: a coarse quantizer is a trained
+    * INDEX artifact — train once, assign many — so queries built after
+    * the first call are lazy plans over a k-row local centroid table
+    * (the build-time-eagerness ADVICE on the old N-count applies only
+    * to the first build). The entry holds driver data only, no session
+    * storage.
     */
-  private final case class CentEntry(fp: String, cents: DataFrame, k: Long)
-  private val centMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), CentEntry]()
-
-  /** Lloyd iteration count — FIXED at 2, not a conf: the DuckDB oracle
-    * unrolls exactly this many update rounds (dedupCellSql splices
-    * dedupKmeansIter twice), so a runtime knob would silently break
-    * oracle agreement the moment anyone set it.
-    */
-  private val kmeansIters = 2
-
   private[ops] def trainedCells(s: SparkSession, d: String)
       : (DataFrame, Long) = {
-    val fp = graft.Tables.fingerprint(d, "embeddings")
-    val entry = centMemo.compute((s, d), (_, prev) => {
-      if (prev != null && prev.fp == fp) prev
-      else {
-        // superseded entries carry no storage (the centroid frame is a
-        // local relation; the training scratch was released inside the
-        // build) — replacement is just a map update
-        val vecs = embeddings(s, d)
-          .select(col("vec_id"), Clustering.microVec(col("embedding"))
-            .as("m"))
-          .localCheckpoint(true)
-        val k = dedupCells(vecs.count())
-        val iters = kmeansIters
-        // centroid frames are k-row LOCAL relations at every step (the
-        // seed is a bounded k-row collect, updates come from the k·dims
-        // aggregation collect) — no checkpoint, no storage, and no
-        // lineage into the training scratch frame, so releasing `vecs`
-        // below is safe regardless of the iteration count
-        var cents = s.createDataFrame(
-          vecs.filter(col("vec_id") < k)
-            .select(col("vec_id"), col("m")).collect()
-            .map(r => (r.getLong(0), r.getSeq[Long](1)))
-            .sortBy(_._1).toSeq)
-          .toDF("cid", "cm")
-        for (_ <- 1 to iters) {
-          val asg = vecs.crossJoin(broadcast(cents))
-            .withColumn("d2",
-              graft.functions.LongVecExprs.sqDist(col("m"), col("cm")))
-            .groupBy(col("vec_id"))
-            .agg(min(struct(col("d2"), col("cid"))).as("b"),
-              first(col("m")).as("m"))
-            .select(col("b.cid").as("cid"), col("m"))
-          val rows = asg
-            .select(col("cid"), posexplode(col("m")).as(Seq("dim", "v")))
-            .groupBy("cid", "dim")
-            .agg(sum(col("v")).as("sv"), count(lit(1)).as("n"))
-            .collect() // bounded: ≤ k·dims rows, never O(N)
-            .map(r => (r.getLong(0), r.getInt(1),
-              // HALF_UP (ties away from zero) — matches SQL round();
-              // math.round breaks ties toward +inf on negatives
-              BigDecimal(r.getLong(2).toDouble / r.getLong(3))
-                .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong))
-          val next = rows.groupBy(_._1).toSeq.map { case (cid, rs) =>
-            (cid, rs.sortBy(_._2).map(_._3).toSeq)
-          }.sortBy(_._1)
-          cents = s.createDataFrame(next).toDF("cid", "cm")
-        }
-        // the training scratch frame is not read after the block —
-        // release it so the memo holds no session storage at all
-        vecs.unpersist(blocking = false)
-        CentEntry(fp, cents, k)
+    val (centRows, k) = graft.Memo.value(s"dedup-cells $d",
+        graft.Tables.fingerprint(d, "embeddings")) {
+      val vecs = embeddings(s, d)
+        .select(col("vec_id"), Clustering.microVec(col("embedding"))
+          .as("m"))
+        .localCheckpoint(true)
+      val k = dedupCells(vecs.count())
+      val iters = kmeansIters
+      // centroids are k driver-side rows at every step (the seed is a
+      // bounded k-row collect, updates come from the k·dims aggregation
+      // collect), joined as a LOCAL relation — no checkpoint, no
+      // storage, and no lineage into the training scratch frame
+      var cents: Seq[(Long, Seq[Long])] =
+        vecs.filter(col("vec_id") < k)
+          .select(col("vec_id"), col("m")).collect()
+          .map(r => (r.getLong(0), r.getSeq[Long](1)))
+          .sortBy(_._1).toSeq
+      for (_ <- 1 to iters) {
+        val asg = vecs
+          .crossJoin(broadcast(s.createDataFrame(cents).toDF("cid", "cm")))
+          .withColumn("d2",
+            graft.functions.LongVecExprs.sqDist(col("m"), col("cm")))
+          .groupBy(col("vec_id"))
+          .agg(min(struct(col("d2"), col("cid"))).as("b"),
+            first(col("m")).as("m"))
+          .select(col("b.cid").as("cid"), col("m"))
+        val rows = asg
+          .select(col("cid"), posexplode(col("m")).as(Seq("dim", "v")))
+          .groupBy("cid", "dim")
+          .agg(sum(col("v")).as("sv"), count(lit(1)).as("n"))
+          .collect() // bounded: ≤ k·dims rows, never O(N)
+          .map(r => (r.getLong(0), r.getInt(1),
+            // HALF_UP (ties away from zero) — matches SQL round();
+            // math.round breaks ties toward +inf on negatives
+            BigDecimal(r.getLong(2).toDouble / r.getLong(3))
+              .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong))
+        cents = rows.groupBy(_._1).toSeq.map { case (cid, rs) =>
+          (cid, rs.sortBy(_._2).map(_._3).toSeq)
+        }.sortBy(_._1)
       }
-    })
-    (entry.cents, entry.k)
+      // the training scratch frame is not read after the block; its
+      // local checkpoint is unpinned storage, evicted by dropUnpinned
+      vecs.unpersist(blocking = false)
+      (cents, k)
+    }
+    (s.createDataFrame(centRows).toDF("cid", "cm"), k)
   }
 
   /** Final assignment against the trained centroids: same plan shape

@@ -34,7 +34,7 @@ object GateCheck {
     def timed[T](tag: String)(f: => T): T = {
       var r: T = f // warm-up (untimed)
       val ts = (1 to 3).map { _ =>
-        graft.Pinned.dropUnpinned(spark.sparkContext)
+        graft.Memo.dropUnpinned(spark.sparkContext)
         System.gc()
         val t0 = System.nanoTime()
         r = f

@@ -69,7 +69,7 @@ object ParquetLayout {
     graft.etl.Directory.deleteRecursively(new java.io.File(ck))
     // a cloned session isolates readEvents' layout-dependent conf (the
     // NANOS fixture era sets nanosAsLong session-wide) from the caller
-    val child = s.newSession()
+    val child = graft.StreamScratch.session(s)
     val q = graft.streaming.EventStream.readEvents(child, d)
       .withColumn("event_date", date_format(col("ts"), "yyyy-MM-dd"))
       // cluster each micro-batch by the partition column before the
@@ -87,14 +87,11 @@ object ParquetLayout {
       .outputMode("append")
       .start()
     try q.processAllAvailable()
-    finally {
-      try q.stop()
-      // the checkpoint is not needed once the query stopped (the batch
-      // reader consumes out/'s _spark_metadata manifest, not ck) —
-      // delete it now so dead-pid scratch dirs never accumulate on the
-      // RAM-backed base
-      finally graft.StreamScratch.cleanup(ck)
-    }
+    // the checkpoint is not needed once the query stopped (the batch
+    // reader consumes out/'s _spark_metadata manifest, not ck) —
+    // delete it now so dead-pid scratch dirs never accumulate on the
+    // RAM-backed base
+    finally graft.StreamScratch.stop(q, ck)
     s.read.parquet(out)
       .filter(col("event_date") === "2024-01-15")
       .groupBy("event_type")

@@ -23,4 +23,25 @@ object GraftBridge {
     */
   def experimentalMethods(s: SparkSession): ExperimentalMethods =
     s.asInstanceOf[classic.SparkSession].experimental
+
+  /** Remove the streaming-query listener buses of the throwaway
+    * session that started `q`, and of the clone Spark runs the stream
+    * in, from the SparkContext's listener bus. Every session's
+    * StreamingQueryManager registers one when it is built and Spark
+    * never removes it, so each drain in a fresh session would leave
+    * listeners on the context for the context's lifetime. Call after
+    * `q` stopped; neither session may start a stream afterwards. The
+    * bus is a private field, hence the reflection.
+    */
+  def detachStreamingListenerBuses(q: streaming.StreamingQuery): Unit = {
+    val exec = q.asInstanceOf[
+      execution.streaming.runtime.StreamingQueryWrapper].streamingQuery
+    val field = classOf[classic.StreamingQueryManager]
+      .getDeclaredField("listenerBus")
+    field.setAccessible(true)
+    Seq(exec.sparkSession, exec.sparkSessionForStream).foreach { s =>
+      s.sparkContext.removeSparkListener(field.get(s.streams)
+        .asInstanceOf[org.apache.spark.scheduler.SparkListenerInterface])
+    }
+  }
 }

@@ -348,22 +348,4 @@ class SnapshotStoreSpec extends AnyFunSuite {
     assert(Directory.dump(Directory.load(spark, dir)) == before,
       "compaction must not change snapshot contents")
   }
-
-  test("partitioned layout prunes LEVEL scans to one partition") {
-    val spark = TestSpark.spark
-    val snap = Directory.parseDump(spark, TestSpark.golden("ldapII.txt"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
-    Directory.savePartitioned(snap, dir)
-    assert(Directory.loadPartitioned(spark, dir).count() == snap.count())
-
-    val level = Directory.levelScan(spark, dir, "ou=user,ou=ph08,o=BMUKK")
-    val expected = snap.filter(e =>
-      Directory.parentDn(e.dn) == "ou=user,ou=ph08,o=BMUKK").count()
-    assert(level.count() == expected && expected > 0)
-    // the physical plan must show a partition-pruning filter, i.e. the
-    // scan reads the one matching directory, not the whole snapshot
-    val plan = level.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(parent"),
-      s"expected partition pruning in:\n$plan")
-  }
 }

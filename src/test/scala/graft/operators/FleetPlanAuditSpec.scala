@@ -89,7 +89,7 @@ class FleetPlanAuditSpec extends AnyFunSuite {
         bad += s"$name: $bnlj BroadcastNestedLoopJoin (census $want)"
       // storage hygiene: some constructors eagerly checkpoint; keep the
       // audit from accumulating the whole fleet's debris
-      graft.Pinned.dropUnpinned(spark.sparkContext)
+      graft.Memo.dropUnpinned(spark.sparkContext)
     }
     assert(bad.isEmpty, s"\n${bad.mkString("\n")}")
   }
