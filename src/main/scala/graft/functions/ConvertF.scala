@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Scalar conversion functions — SURVEY.md §2.7 (F1–F12).
   *
   * Each mirrors a per-column converter of the reference engine
-  * (reference: /root/reference/etl.py:156–320, ldaptest.py:142–195,
+  * (reference: etl.py:156–320, ldaptest.py:142–195,
   * ldaptimestamp.py:29–33) re-expressed as a native, codegen-friendly
   * Spark `Column` expression — no UDFs, so every one of these stays
   * inside whole-stage codegen and is pushdown-transparent.

@@ -5,16 +5,17 @@ import org.apache.spark.sql.functions._
 import graft.etl._
 
 /** Driver-contract surface for the CDC/directory-sync engine (SURVEY.md
-  * §2.8, §3). These queries exercise the real pipelines against the
-  * reference's own fixture data; they are not SQL-expressible, so the
-  * driver records rows-only checks — the byte-exact golden equivalence
-  * lives in the ScalaTest suites (EtlCoreSpec).
+  * §2.8, §3). The fixture-bound queries run the real pipelines on the
+  * in-repo fixture (`graft.etl.Fixture`: committed CSVs plus the
+  * two-tree state built from them), so they give the same rows on
+  * every machine; the scale and CDF queries run on the driver's
+  * Parquet tables. Byte-exact parity with the reference's golden dumps
+  * lives in the ScalaTest suites that read the reference checkout's
+  * testdata (EtlCoreSpec, CdcScenarioSpec, TwoTreeScenarioSpec).
   */
 object EtlOps {
 
-  private val refData = "/root/reference/testdata"
-
-  /** Expensive fixture states shared by several queries (the golden
+  /** Expensive fixture states shared by several queries (the fixture's
     * initial-load snapshot, the scale snapshot) are `Memo.frame`
     * entries: each query still *means* what its name says —
     * q_etl_cdc_batch measures a CDC cycle, not a repeated initial load.
@@ -23,12 +24,13 @@ object EtlOps {
       f: => org.apache.spark.sql.Dataset[Directory.Entry]) =
     graft.Memo.frame(s, key, fp)(f.localCheckpoint(true))
 
-  /** Full initial_load against the reference fixtures; returns the
-    * canonical dump as one row per directory entry (deterministic).
+  /** The reference system test's initial_load step on the fixture
+    * (`Fixture.deluidsLoad`); returns the canonical dump as one row per
+    * directory entry (deterministic).
     */
   def etlInitialLoad(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // Fixture-bound (24 users into the golden tree): the cost is not
+    // Fixture-bound (23 users into the two-tree state): the cost is not
     // data but PLAN CONSTANTS — under AQE the merge tree ran as 13
     // jobs / 13 stages / 193 tasks with ~75 % of the wall in
     // driver-side stage orchestration (BenchTrace: driverGap 1.5–2.1 s
@@ -38,15 +40,7 @@ object EtlOps {
     // same reasoning, opposite regime, both measured (the
     // q_etl_scale_cdc planning note records AQE winning at scale).
     graft.Tables.withStaticParts(s, 1) {
-      val pre = Directory.parseDump(s,
-        java.nio.file.Files.readString(
-          java.nio.file.Paths.get(s"$refData/ldapII.txt")))
-      val users = EtlSchema.readUsersCsv(s, s"$refData/initial_data.csv")
-        .filter(!col("pk_uniqueid").isin(4731.0, 4732.0))
-      val conf = EtlConf(baseDn = "ou=user,ou=ph08,o=BMUKK",
-        cryptoIvHex = Some("0" * 32))
-      val out = InitialLoad.run(pre, users, conf)
-      out.snapshot
+      Fixture.deluidsLoad(s).snapshot
         .map(Directory.formatEntry _)
         .toDF("entry_line")
         // total order without a global-sort range exchange: at width 1
@@ -62,10 +56,10 @@ object EtlOps {
     }
   }
 
-  /** Conversion-function surface (F1–F5) over the reference user CSV. */
+  /** Conversion-function surface (F1–F5) over the fixture user CSV. */
   def etlConvert(s: SparkSession, d: String): DataFrame = {
     import graft.functions.ConvertF._
-    EtlSchema.readUsersCsv(s, s"$refData/initial_data.csv")
+    Fixture.users(s)
       .select(
         col("benutzername"),
         fromDbNumber(col("pk_uniqueid")).as("uid"),
@@ -75,8 +69,8 @@ object EtlOps {
       .orderBy("benutzername")
   }
 
-  /** One CDC micro-batch over the reference's scenario-01 fixtures:
-    * golden initial load, apply the changeset, process the events, and
+  /** One CDC micro-batch over the fixture's scenario 01: the
+    * initial-load step, apply the changeset, process the events, and
     * return the per-event status verdicts (C8 matrix) — deterministic.
     */
   def etlCdcBatch(s: SparkSession, d: String): DataFrame = {
@@ -90,23 +84,18 @@ object EtlOps {
     // pays for its job launches, exactly as the q_etl_scale_cdc note
     // records at data scale — so the fixture cycle keeps AQE too, and
     // its ~2.5-3 s is a stage-orchestration constant, not data cost.
-    val pre = Directory.parseDump(s,
-      java.nio.file.Files.readString(
-        java.nio.file.Paths.get(s"$refData/ldapII.txt")))
-    val users0 = EtlSchema.readUsersCsv(s, s"$refData/initial_data.csv")
-      .filter(!col("pk_uniqueid").isin(4731.0, 4732.0))
-    val conf = EtlConf(baseDn = "ou=user,ou=ph08,o=BMUKK",
-      cryptoIvHex = Some("0" * 32))
-    // the reference fixture is read-only: one version per JVM
-    val snap = memoized(s, "golden_load", refData) {
-      InitialLoad.run(pre, users0, conf).snapshot
+    val users0 = Fixture.users(s)
+      .filter(!col("pk_uniqueid").isin(Fixture.deletedUids: _*))
+    // the fixture is read-only: one version per JVM
+    val snap = memoized(s, "fixture_load", Fixture.dir) {
+      Fixture.deluidsLoad(s).snapshot
     }
-    val cs = EtlSchema.readUsersCsv(s, s"$refData/changeset01.csv")
+    val cs = EtlSchema.readUsersCsv(s, s"${Fixture.dir}/changeset01.csv")
     val users = users0.join(cs.select("pk_uniqueid"), Seq("pk_uniqueid"), "left_anti")
       .unionByName(cs)
-    val events = EtlSchema.readEventsCsv(s, s"$refData/eventlog01.csv")
+    val events = EtlSchema.readEventsCsv(s, s"${Fixture.dir}/eventlog01.csv")
     val r = Cdc.cycle(snap, users, events,
-      conf.copy(etlTimestamp = "20170101000100Z"))
+      Fixture.conf.copy(etlTimestamp = "20170101000100Z"))
     r.eventUpdates
       .select(col("record_id"), col("new_status"), col("new_error"))
       .orderBy("record_id")
@@ -688,7 +677,7 @@ object EtlOps {
       .orderBy("record_id")
   }
 
-  /** J7 — cross-tree deletion sweep, oracle-gated: over the golden tree,
+  /** J7 — cross-tree deletion sweep, oracle-gated: over the two-tree state,
     * soft-delete the ph08 caesar1 (so its ph15 twin becomes the single
     * live match) and strip the twin's account-status attrs (the sweep's
     * guard); caesar2 stays live in ph08 and zzz.missing has no entry.
@@ -699,9 +688,7 @@ object EtlOps {
     import s.implicits._
     val base = "ou=user,ou=ph08,o=BMUKK"
     val conf = EtlConf(baseDn = base, cryptoIvHex = Some("0" * 32))
-    val prepared = Directory.parseDump(s,
-      java.nio.file.Files.readString(
-        java.nio.file.Paths.get(s"$refData/ldapII.txt")))
+    val prepared = Fixture.twoTree(s)
       .map { e =>
         if (e.dn == s"cn=caesar1,$base")
           Directory.Entry(e.dn,
@@ -732,9 +719,8 @@ object EtlOps {
   }
 
   /** J8 — ph15 student-email back-sync, oracle-gated: drift two ph15
-    * twins' emails, run the sync, and emit the healed values (the golden
-    * source-tree emails). The golden state itself is a fixpoint
-    * (Ph15EmailSpec), so exactly the drifted rows change.
+    * twins' emails, run the sync, and emit the healed values (the
+    * source-tree emails of the two-tree state).
     */
   def ph15EmailHeal(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -742,9 +728,7 @@ object EtlOps {
     val drifted = Map(
       "cn=caesar1,ou=user,ou=ph15,o=BMUKK" -> "stale@wrong.example",
       "cn=fuahr.ksspofil.1,ou=user,ou=ph15,o=BMUKK" -> "also@stale.example")
-    val snap = Directory.parseDump(s,
-      java.nio.file.Files.readString(
-        java.nio.file.Paths.get(s"$refData/ldapII.txt")))
+    val snap = Fixture.twoTree(s)
       .map { e =>
         drifted.get(e.dn) match {
           case Some(stale) => Directory.Entry(e.dn,
@@ -760,13 +744,7 @@ object EtlOps {
       .orderBy("dn")
   }
 
-  private def loadedSnapshot(s: SparkSession) = {
-    import s.implicits._
-    val pre = Directory.parseDump(s,
-      java.nio.file.Files.readString(
-        java.nio.file.Paths.get(s"$refData/ldapII.txt")))
-    pre.toDF
-  }
+  private def loadedSnapshot(s: SparkSession) = Fixture.twoTree(s).toDF
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_etl_initial_load" -> (etlInitialLoad _),
@@ -789,19 +767,26 @@ object EtlOps {
 
   /** Every query here carries a DuckDB oracle. The MERGE/CDC engine
     * itself is not SQL-expressible, but its *outcomes* are independently
-    * checkable: the full initial load must equal the reference's own
-    * golden dump (read line-wise by DuckDB), the scale load's dn set is
-    * derivable from the customer table + the bootstrap chain, the scale
-    * CDC verdicts are all-S by construction (every event's user exists),
-    * and the fixture-bound lookups/verdicts pin the reference's golden
-    * values as literals.
+    * checkable: the initial load's lines must equal the two-tree dump it
+    * started from minus the ph08 lines of the two deleted uids (read
+    * line-wise by DuckDB from `Fixture.twoTreeDumpPath`; the relation
+    * the reference's ldapII/ldap00 pair records, so this pins the
+    * load's delta, not the dump's absolute content — InitialLoadGoldenSpec
+    * checks that against ldap00 where the reference checkout exists), the
+    * scale load's dn set is derivable from the customer table + the
+    * bootstrap chain, the scale CDC verdicts are all-S by construction
+    * (every event's user exists), the CSV-bound queries re-read the
+    * fixture CSVs, and the fixture-bound lookups/verdicts pin the
+    * fixture's anchor rows (FIXTURES.md §7) as literals.
     */
   val oracles: Map[String, String] = Map(
     "q_etl_initial_load" ->
       s"""SELECT entry_line
-         |FROM read_csv('$refData/ldap00.txt', delim=chr(1), header=false,
-         |  quote='', escape='', columns={'entry_line':'VARCHAR'})
+         |FROM read_csv('${Fixture.twoTreeDumpPath}', delim=chr(1),
+         |  header=false, quote='', escape='', columns={'entry_line':'VARCHAR'})
          |WHERE entry_line IS NOT NULL AND entry_line NOT LIKE 'Count:%'
+         |  AND entry_line NOT LIKE 'cn=ajiqon.qajk.21,${Fixture.ph08} %'
+         |  AND entry_line NOT LIKE 'cn=jnas.orxzgyno.20,${Fixture.ph08} %'
          |ORDER BY entry_line""".stripMargin,
     "q_etl_scale_load" ->
       """SELECT 'cn=user' || CAST(c_custkey AS VARCHAR) ||
@@ -942,7 +927,7 @@ object EtlOps {
          |  CASE WHEN funktionen IS NOT NULL AND trim(funktionen) <> ''
          |    THEN array_to_string(str_split(trim(funktionen), ';'), ';') END AS funk,
          |  NULLIF(rtrim(vorname), '') AS vorname
-         |FROM read_csv('$refData/initial_data.csv',
+         |FROM read_csv('${Fixture.dir}/initial_data.csv',
          |  delim=';', header=true, nullstr='', all_varchar=true)
          |ORDER BY benutzername""".stripMargin,
   )

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.etl.{Directory, EtlSchema}
+import graft.etl.{Directory, EtlSchema, Fixture}
 import graft.streaming.EventStream
 import graft.tools.{Compare, CsvTools}
 
@@ -10,8 +10,6 @@ import graft.tools.{Compare, CsvTools}
   * tools (compare, CSV dump, anonymizer).
   */
 object StreamToolOps {
-
-  private val refData = "/root/reference/testdata"
 
   /** Stage the documents table as a JSONL landing zone once per
     * source version (`Memo.staged`): the dump is zone SETUP (what a
@@ -518,21 +516,21 @@ object StreamToolOps {
             * lit(9007199254740992L)).cast("double"), 6).as("hll_est"))
   }
 
-  /** J4/T1–T3 — ordered tree compare of the reference's two golden
-    * states (the deluids delta must surface as lhs-only lines).
+  /** J4/T1–T3 — ordered tree compare of the fixture's two-tree state
+    * against the state after the reference system test's initial_load
+    * step (`Fixture.deluidsLoad`, the ldapII → ldap00 pair of the
+    * reference): the deluids delta must surface as lhs-only lines.
     */
   def compareTrees(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val a = Directory.parseDump(s, java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$refData/ldapII.txt")))
-    val b = Directory.parseDump(s, java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$refData/ldap00.txt")))
+    val a = Directory.parseDump(s, Fixture.twoTreeDump(s))
+    val b = Fixture.deluidsLoad(s).snapshot
     Compare.compare(a, b, "o=BMUKK", "o=BMUKK").toDF("diff_line")
   }
 
   /** S6 — CSV source read (delimiter/null/CHAR(3) semantics). */
   def csvSource(s: SparkSession, d: String): DataFrame =
-    EtlSchema.readUsersCsv(s, s"$refData/initial_data.csv")
+    Fixture.users(s)
       .select(col("benutzername"), col("pk_uniqueid"),
         col("aktiv_st_person"), col("geburtsdatum").cast("string").as("geb"))
       .orderBy("ident_nr")
@@ -541,17 +539,16 @@ object StreamToolOps {
     * cutoff (semi join).
     */
   def csvCutoff(s: SparkSession, d: String): DataFrame = {
-    val users = EtlSchema.readUsersCsv(s, s"$refData/initial_data.csv")
-    val elog = EtlSchema.readEventsCsv(s, s"$refData/eventlog03.csv")
+    val users = Fixture.users(s)
+    val elog = EtlSchema.readEventsCsv(s, s"${Fixture.dir}/eventlog03.csv")
     CsvTools.cutoffUsers(users, elog,
       java.sql.Timestamp.valueOf("2017-01-01 00:00:00"))
       .select("benutzername", "pk_uniqueid")
   }
 
-  /** F13 — deterministic anonymizer over the reference fixture. */
+  /** F13 — deterministic anonymizer over the fixture user table. */
   def anonymize(s: SparkSession, d: String): DataFrame =
-    CsvTools.anonymizeUsers(
-      EtlSchema.readUsersCsv(s, s"$refData/initial_data.csv"))
+    CsvTools.anonymizeUsers(Fixture.users(s))
       .select("ident_nr", "vorname", "nachname", "emailadresse_st",
         "matrikelnummer")
       .orderBy("ident_nr")
@@ -749,7 +746,7 @@ object StreamToolOps {
         |  AND (epoch_ns(r.ts) // 1000) >= (epoch_ns(l.ts) // 1000) - 60000000
         |  AND (epoch_ns(r.ts) // 1000) < (epoch_ns(l.ts) // 1000)""".stripMargin,
     // the compare output is fixture-bound and deterministic: the two
-    // trees differ exactly by the deluids pair (reference testdata)
+    // trees differ exactly by the deluids pair
     "q_j4_compare_trees" ->
       """SELECT * FROM (VALUES
         |  ('Only in lhs: cn=ajiqon.qajk.21,ou=user,ou=ph08,o=BMUKK'),
@@ -757,11 +754,11 @@ object StreamToolOps {
         |  t(diff_line)""".stripMargin,
     "q_s7_csv_cutoff" ->
       s"""SELECT benutzername, CAST(pk_uniqueid AS DOUBLE) AS pk_uniqueid
-         |FROM read_csv('$refData/initial_data.csv',
+         |FROM read_csv('${Fixture.dir}/initial_data.csv',
          |  delim=';', header=true, nullstr='', all_varchar=true)
          |WHERE CAST(pk_uniqueid AS DOUBLE) IN (
          |  SELECT DISTINCT CAST(str_split(table_key, '=')[2] AS DOUBLE)
-         |  FROM read_csv('$refData/eventlog03.csv',
+         |  FROM read_csv('${Fixture.dir}/eventlog03.csv',
          |    delim=';', header=true, nullstr='', all_varchar=true)
          |  WHERE strptime(event_time, '%Y-%m-%d %H:%M:%S') >
          |    TIMESTAMP '2017-01-01 00:00:00')""".stripMargin,
@@ -774,7 +771,7 @@ object StreamToolOps {
          |  CASE WHEN matrikelnummer IS NOT NULL
          |    THEN ((('0x' || substr(md5('int|' || matrikelnummer), 1, 12))::BIGINT % 90000000 + 10000000))::VARCHAR
          |    END AS matrikelnummer
-         |FROM read_csv('$refData/initial_data.csv',
+         |FROM read_csv('${Fixture.dir}/initial_data.csv',
          |  delim=';', header=true, nullstr='', all_varchar=true)
          |ORDER BY CAST(ident_nr AS DOUBLE)""".stripMargin,
     "q_s6_csv_source" ->
@@ -783,7 +780,7 @@ object StreamToolOps {
          |    THEN rpad(aktiv_st_person, 3, ' ') END AS aktiv_st_person,
          |  CASE WHEN geburtsdatum IS NOT NULL
          |    THEN strftime(strptime(geburtsdatum, '%Y-%m-%d %H:%M:%S'), '%Y-%m-%d %H:%M:%S') END AS geb
-         |FROM read_csv('$refData/initial_data.csv',
+         |FROM read_csv('${Fixture.dir}/initial_data.csv',
          |  delim=';', header=true, nullstr='', all_varchar=true)
          |ORDER BY CAST(ident_nr AS DOUBLE)""".stripMargin,
   )

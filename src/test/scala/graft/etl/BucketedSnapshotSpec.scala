@@ -11,7 +11,7 @@ class BucketedSnapshotSpec extends AnyFunSuite {
   test("dn join against the bucketed snapshot has no snapshot-side shuffle") {
     val spark = TestSpark.spark
     import spark.implicits._
-    val snap = Directory.parseDump(spark, TestSpark.golden("ldapII.txt"))
+    val snap = Directory.parseDump(spark, Fixture.twoTreeDump(spark))
     Directory.saveBucketed(snap, "snap_bucketed_t")
     val table = Directory.loadBucketed(spark, "snap_bucketed_t")
     assert(table.count() == snap.count())

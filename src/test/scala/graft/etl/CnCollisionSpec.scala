@@ -13,7 +13,7 @@ class CnCollisionSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import spark.implicits._
     val base = EtlSchema
-      .readUsersCsv(spark, s"${TestSpark.refData}/initial_data.csv")
+      .readUsersCsv(spark, s"${Fixture.dir}/initial_data.csv")
       .limit(1)
     // forge two users with the same benutzername, different uids
     val u1 = base.withColumn("benutzername", lit("clash.user"))

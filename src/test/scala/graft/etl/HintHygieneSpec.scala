@@ -44,7 +44,7 @@ class HintHygieneSpec extends AnyFunSuite {
       // absent one, so the semi-join AND the anti-join sweep execute
       val base = "ou=user,ou=ph08,o=BMUKK"
       val users = EtlSchema
-        .readUsersCsv(spark, s"${TestSpark.refData}/initial_data.csv")
+        .readUsersCsv(spark, s"${Fixture.dir}/initial_data.csv")
         .filter(col("ident_nr") === -880406.0) // uid 1 present
       val conf = EtlConf(baseDn = base, cryptoIvHex = Some("0" * 32))
       val pre = InitialLoad.run(spark.emptyDataset[Entry], users, conf)

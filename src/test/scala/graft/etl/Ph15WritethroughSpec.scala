@@ -13,21 +13,21 @@ class Ph15WritethroughSpec extends AnyFunSuite {
   test("name, password and student-email changes propagate to ph15") {
     val spark = TestSpark.spark
     import spark.implicits._
-    val pre = Directory.parseDump(spark, TestSpark.golden("ldapII.txt"))
+    val pre = Directory.parseDump(spark, Fixture.twoTreeDump(spark))
     val users0 = EtlSchema
-      .readUsersCsv(spark, s"${TestSpark.refData}/initial_data.csv")
+      .readUsersCsv(spark, s"${Fixture.dir}/initial_data.csv")
     val conf = EtlConf(baseDn = "ou=user,ou=ph08,o=BMUKK",
       cryptoIvHex = Some("0" * 32),
       ph15Dn = Some("ou=user,ou=ph15,o=BMUKK"))
     val snap0 = InitialLoad.run(pre, users0, conf).snapshot.localCheckpoint(true)
 
     // scenario 04: uid 4713 changes sn (Rkbe→Jrpwk), password and email
-    val cs = EtlSchema.readUsersCsv(spark, s"${TestSpark.refData}/changeset04.csv")
+    val cs = EtlSchema.readUsersCsv(spark, s"${Fixture.dir}/changeset04.csv")
     val users = users0
       .join(cs.select("pk_uniqueid"), Seq("pk_uniqueid"), "left_anti")
       .unionByName(cs)
     val events = EtlSchema.readEventsCsv(spark,
-      s"${TestSpark.refData}/eventlog04.csv")
+      s"${Fixture.dir}/eventlog04.csv")
     val r = Cdc.cycle(snap0, users, events,
       conf.copy(etlTimestamp = "20170101000200Z"))
     val dn15 = "cn=rtub.rkbe.2,ou=user,ou=ph15,o=BMUKK"

@@ -44,9 +44,9 @@ class MergeIdempotencySpec extends AnyFunSuite {
   test("a second merge of the same rows is a universal no-op") {
     val spark = TestSpark.spark
     import spark.implicits._
-    val pre = Directory.parseDump(spark, TestSpark.golden("ldapII.txt"))
+    val pre = Directory.parseDump(spark, Fixture.twoTreeDump(spark))
     val users = EtlSchema
-      .readUsersCsv(spark, s"${TestSpark.refData}/initial_data.csv")
+      .readUsersCsv(spark, s"${Fixture.dir}/initial_data.csv")
     val conf = EtlConf(baseDn = "ou=user,ou=ph08,o=BMUKK",
       cryptoIvHex = Some("0" * 32))
     val r1 = InitialLoad.run(pre, users, conf)
@@ -62,19 +62,19 @@ class ReplaySafetySpec extends AnyFunSuite {
   test("replaying a processed CDC batch leaves the snapshot unchanged") {
     val spark = TestSpark.spark
     import spark.implicits._
-    val pre = Directory.parseDump(spark, TestSpark.golden("ldapII.txt"))
+    val pre = Directory.parseDump(spark, Fixture.twoTreeDump(spark))
     val users0 = EtlSchema
-      .readUsersCsv(spark, s"${TestSpark.refData}/initial_data.csv")
+      .readUsersCsv(spark, s"${Fixture.dir}/initial_data.csv")
       .filter(!col("pk_uniqueid").isin(4731.0, 4732.0))
     val conf = EtlConf(baseDn = "ou=user,ou=ph08,o=BMUKK",
       cryptoIvHex = Some("0" * 32))
     val snap0 = InitialLoad.run(pre, users0, conf).snapshot.localCheckpoint(true)
-    val cs = EtlSchema.readUsersCsv(spark, s"${TestSpark.refData}/changeset02.csv")
+    val cs = EtlSchema.readUsersCsv(spark, s"${Fixture.dir}/changeset02.csv")
     val users = users0
       .join(cs.select("pk_uniqueid"), Seq("pk_uniqueid"), "left_anti")
       .unionByName(cs).localCheckpoint(true)
     val events = EtlSchema.readEventsCsv(spark,
-      s"${TestSpark.refData}/eventlog02.csv").localCheckpoint(true)
+      s"${Fixture.dir}/eventlog02.csv").localCheckpoint(true)
 
     val c1 = Cdc.cycle(snap0, users, events,
       conf.copy(etlTimestamp = "20170101000400Z"))
@@ -86,5 +86,24 @@ class ReplaySafetySpec extends AnyFunSuite {
       "replay must be idempotent (password IV reuse included)")
     // and all replayed events are verdicted S
     assert(c2.eventUpdates.filter(col("new_status") =!= "S").count() == 0)
+  }
+
+  // The test above fixes the IV, so the stored IV always equals the
+  // configured one and a compare that ignores the stored IV looks the
+  // same. Under random IVs only the stored-IV compare (etl.py:989–992)
+  // recognises an unchanged password.
+  test("a replayed cycle under random IVs keeps the stored password ciphertext") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val conf = Fixture.conf.copy(cryptoIvHex = None)
+    val users = Fixture.users(spark).filter(col("pk_uniqueid") === 4714.0)
+      .localCheckpoint(true)
+    val boot = spark.createDataset(Directory.bootstrapEntries(Seq(Fixture.ph08)))
+    val snap0 = InitialLoad.run(boot, users, conf).snapshot.localCheckpoint(true)
+    val events = EtlSchema.readEventsCsv(spark, s"${Fixture.dir}/eventlog01.csv")
+    val r = Cdc.cycle(snap0, users, events, conf)
+    assert(Directory.dump(r.snapshot) == Directory.dump(snap0),
+      "an unchanged password must not be re-encrypted under a fresh IV")
+    assert(r.eventUpdates.filter(col("new_status") =!= "S").count() == 0)
   }
 }

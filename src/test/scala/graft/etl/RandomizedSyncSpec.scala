@@ -18,7 +18,7 @@ class RandomizedSyncSpec extends AnyFunSuite {
     val base = "ou=user,ou=ph08,o=BMUKK"
     val conf = EtlConf(baseDn = base, cryptoIvHex = Some("0" * 32))
     val users0 = EtlSchema
-      .readUsersCsv(spark, s"${TestSpark.refData}/initial_data.csv")
+      .readUsersCsv(spark, s"${Fixture.dir}/initial_data.csv")
       .filter(!col("pk_uniqueid").isin(4731.0, 4732.0))
       .localCheckpoint(true)
     val pre = spark.createDataset(Directory.bootstrapEntries(Seq(base)))
@@ -33,7 +33,7 @@ class RandomizedSyncSpec extends AnyFunSuite {
     val shuffled = rnd.shuffle(singleUids.toVector)
 
     val evTemplate = EtlSchema
-      .readEventsCsv(spark, s"${TestSpark.refData}/eventlog01.csv")
+      .readEventsCsv(spark, s"${Fixture.dir}/eventlog01.csv")
       .limit(1).localCheckpoint(true)
     def event(rid: Double, uid: Double, typ: Double) = evTemplate
       .withColumn("record_id", lit(rid))

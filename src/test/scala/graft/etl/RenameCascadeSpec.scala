@@ -12,9 +12,9 @@ class RenameCascadeSpec extends AnyFunSuite {
   test("cn change renames in-place and propagates through the queue") {
     val spark = TestSpark.spark
     import spark.implicits._
-    val pre = Directory.parseDump(spark, TestSpark.golden("ldapII.txt"))
+    val pre = Directory.parseDump(spark, Fixture.twoTreeDump(spark))
     val users0 = EtlSchema
-      .readUsersCsv(spark, s"${TestSpark.refData}/initial_data.csv")
+      .readUsersCsv(spark, s"${Fixture.dir}/initial_data.csv")
       .filter(!col("pk_uniqueid").isin(4731.0, 4732.0))
     val conf = EtlConf(baseDn = "ou=user,ou=ph08,o=BMUKK",
       cryptoIvHex = Some("0" * 32),
@@ -26,7 +26,7 @@ class RenameCascadeSpec extends AnyFunSuite {
       when(col("pk_uniqueid") === 4716.0, "renamed.tgggo.9")
         .otherwise(col("benutzername"))).localCheckpoint(true)
     val ev = EtlSchema
-      .readEventsCsv(spark, s"${TestSpark.refData}/eventlog01.csv")
+      .readEventsCsv(spark, s"${Fixture.dir}/eventlog01.csv")
       .limit(1)
       .withColumn("table_key", lit("pk_uniqueid=4716"))
       .localCheckpoint(true)

@@ -13,7 +13,7 @@ class ReviewRegressionSpec extends AnyFunSuite {
 
   private def baseUsers = {
     val spark = TestSpark.spark
-    EtlSchema.readUsersCsv(spark, s"${TestSpark.refData}/initial_data.csv")
+    EtlSchema.readUsersCsv(spark, s"${Fixture.dir}/initial_data.csv")
   }
   private val base = "ou=user,ou=ph08,o=BMUKK"
   private val conf = EtlConf(baseDn = base, cryptoIvHex = Some("0" * 32))
@@ -84,7 +84,7 @@ class ReviewRegressionSpec extends AnyFunSuite {
       .withColumn("vorname", lit("Newname"))
     val users = u.unionByName(u) // duplicate rows, same cn/uid
     val elog = EtlSchema
-      .readEventsCsv(spark, s"${TestSpark.refData}/eventlog01.csv")
+      .readEventsCsv(spark, s"${Fixture.dir}/eventlog01.csv")
       .limit(1)
       .withColumn("table_key", lit("pk_uniqueid=888"))
     val r = Cdc.cycle(pre, users, elog, confWt)
@@ -107,7 +107,7 @@ class ReviewRegressionSpec extends AnyFunSuite {
       .withColumn("benutzername", lit("dupuser"))
     val users = u.unionByName(u) // two identical rows, same cn, same uid
     val elog = EtlSchema
-      .readEventsCsv(spark, s"${TestSpark.refData}/eventlog01.csv")
+      .readEventsCsv(spark, s"${Fixture.dir}/eventlog01.csv")
       .limit(1)
       .withColumn("table_key", lit("pk_uniqueid=777"))
     val r = Cdc.cycle(pre, users, elog, conf)
@@ -125,7 +125,7 @@ class ReviewRegressionSpec extends AnyFunSuite {
     // A record_id-ordered cut with maxRecords=1 would process B and
     // advance the HWM past A, dropping it forever.
     val elog0 = EtlSchema
-      .readEventsCsv(spark, s"${TestSpark.refData}/eventlog01.csv").limit(1)
+      .readEventsCsv(spark, s"${Fixture.dir}/eventlog01.csv").limit(1)
     def ev(rid: Double, uid: Double, t: String) = elog0
       .withColumn("record_id", lit(rid))
       .withColumn("table_key", concat(lit("pk_uniqueid="), lit(uid.toLong)))
@@ -190,7 +190,7 @@ class ReviewRegressionSpec extends AnyFunSuite {
       .withColumn("benutzername", lit("wtcase"))
       .withColumn("vorname", lit("Fresh"))
     val elog = EtlSchema
-      .readEventsCsv(spark, s"${TestSpark.refData}/eventlog01.csv")
+      .readEventsCsv(spark, s"${Fixture.dir}/eventlog01.csv")
       .limit(1)
       .withColumn("table_key", lit("pk_uniqueid=444"))
     val r = Cdc.cycle(pre, u, elog, confWt)
@@ -231,7 +231,7 @@ class ReviewRegressionSpec extends AnyFunSuite {
       .withColumn("pk_uniqueid", lit(9.0))
       .withColumn("benutzername", lit("mix"))
     val elog = EtlSchema
-      .readEventsCsv(spark, s"${TestSpark.refData}/eventlog01.csv")
+      .readEventsCsv(spark, s"${Fixture.dir}/eventlog01.csv")
       .limit(1)
       .withColumn("event_type", lit(5.0)) // insert
       .withColumn("table_key", lit("pk_uniqueid=9"))
@@ -262,7 +262,7 @@ class ReviewRegressionSpec extends AnyFunSuite {
       .withColumn("pk_uniqueid", lit(555.0))
       .withColumn("benutzername", lit("bob"))
     val elog = EtlSchema
-      .readEventsCsv(spark, s"${TestSpark.refData}/eventlog01.csv")
+      .readEventsCsv(spark, s"${Fixture.dir}/eventlog01.csv")
       .limit(1)
       .withColumn("table_key", lit("pk_uniqueid=555"))
     val r = Cdc.cycle(pre, u1.unionByName(u2), elog, conf)
@@ -282,7 +282,7 @@ class ReviewRegressionSpec extends AnyFunSuite {
       .filter(col("count") === 1)
       .agg(min("pk_uniqueid")).as[Double].head()
     val elog = EtlSchema
-      .readEventsCsv(spark, s"${TestSpark.refData}/eventlog01.csv")
+      .readEventsCsv(spark, s"${Fixture.dir}/eventlog01.csv")
       .limit(1)
       .withColumn("event_type", lit(5.0)) // clean insert → S
       .withColumn("table_key", concat(lit("pk_uniqueid="), lit(uid.toLong)))

@@ -10,11 +10,11 @@ class SnapshotStoreSpec extends AnyFunSuite {
 
   test("save/load round-trips through the versioned pointer") {
     val spark = TestSpark.spark
-    val snap = Directory.parseDump(spark, TestSpark.golden("ldapII.txt"))
+    val snap = Directory.parseDump(spark, Fixture.twoTreeDump(spark))
     val dir = java.nio.file.Files.createTempDirectory("graft-snap").toString
     Directory.save(snap, dir)
     val back = Directory.load(spark, dir)
-    assert(Directory.dump(back) == TestSpark.golden("ldapII.txt"))
+    assert(Directory.dump(back) == Fixture.twoTreeDump(spark))
     // a second save atomically supersedes the first
     Directory.save(back.filter(_.dn.contains("ph08")), dir)
     assert(Directory.load(spark, dir).count() ==
@@ -330,7 +330,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
   test("compaction bounds file count and preserves contents exactly") {
     val spark = TestSpark.spark
     import spark.implicits._
-    val snap = Directory.parseDump(spark, TestSpark.golden("ldapII.txt"))
+    val snap = Directory.parseDump(spark, Fixture.twoTreeDump(spark))
     val dir = java.nio.file.Files.createTempDirectory("graft-compact").toString
     // simulate a fragmented store: one commit with write parallelism 16
     Directory.save(snap.repartition(16).as[Directory.Entry], dir)

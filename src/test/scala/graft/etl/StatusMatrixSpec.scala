@@ -13,7 +13,7 @@ class StatusMatrixSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import spark.implicits._
     val users = EtlSchema
-      .readUsersCsv(spark, s"${TestSpark.refData}/initial_data.csv")
+      .readUsersCsv(spark, s"${Fixture.dir}/initial_data.csv")
       .filter(col("ident_nr").isin(-880406.0, -912508.0)) // uids 1, 4713
       .withColumn("benutzername",
         when(col("ident_nr") === -912508.0, lit(null))
@@ -41,7 +41,7 @@ class StatusMatrixSpec extends AnyFunSuite {
     val snap = spark.createDataset(
       Directory.bootstrapEntries(Seq(base)) ++ Seq(mk("ghost1"), mk("ghost2")))
     val users = EtlSchema
-      .readUsersCsv(spark, s"${TestSpark.refData}/initial_data.csv")
+      .readUsersCsv(spark, s"${Fixture.dir}/initial_data.csv")
       .limit(1)
       .withColumn("pk_uniqueid", lit(777.0))
       .withColumn("benutzername", lit("newname"))

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.etl.{Directory, EtlConf, EtlSchema, InitialLoad, TestSpark}
+import graft.etl.{Directory, EtlConf, EtlSchema, Fixture, InitialLoad, TestSpark}
 import graft.tools.{Compare, CsvTools}
 
 class StreamingSpec extends AnyFunSuite {
@@ -344,7 +344,7 @@ class StreamingCdcSpec extends AnyFunSuite {
           "cn" -> Seq("oldname"), "phonlineUniqueId" -> Seq("321"),
           "objectClass" -> Seq("inetOrgPerson", "phonlinePerson", "idnSyncstat")))))
     val users = EtlSchema
-      .readUsersCsv(spark, s"${TestSpark.refData}/initial_data.csv")
+      .readUsersCsv(spark, s"${Fixture.dir}/initial_data.csv")
       .limit(1)
       .withColumn("pk_uniqueid", lit(321.0))
       .withColumn("benutzername", lit("newname"))
@@ -354,7 +354,7 @@ class StreamingCdcSpec extends AnyFunSuite {
       spark, pre, () => users, evDir.toString, conf)
     // one benutzername-change event arrives
     val src = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"${TestSpark.refData}/eventlog01.csv"))
+      java.nio.file.Paths.get(s"${Fixture.dir}/eventlog01.csv"))
     val lines = src.split("\n")
     java.nio.file.Files.writeString(evDir.resolve("ev.csv"),
       lines.head + "\n" +
@@ -414,7 +414,7 @@ class CsvToolsSpec extends AnyFunSuite {
   test("CSV round-trip, cutoff semi-join, deterministic anonymizer") {
     val spark = TestSpark.spark
     val users = EtlSchema
-      .readUsersCsv(spark, s"${TestSpark.refData}/initial_data.csv")
+      .readUsersCsv(spark, s"${Fixture.dir}/initial_data.csv")
     val out = java.nio.file.Files.createTempDirectory("graft-csv").toString
     CsvTools.writeCsv(users, out)
     val back = EtlSchema.readUsersCsv(spark, out)
@@ -423,7 +423,7 @@ class CsvToolsSpec extends AnyFunSuite {
       users.orderBy("ident_nr").collect().toSeq)
 
     val elog = EtlSchema.readEventsCsv(spark,
-      s"${TestSpark.refData}/eventlog01.csv")
+      s"${Fixture.dir}/eventlog01.csv")
     val cut = CsvTools.cutoffUsers(users, elog,
       java.sql.Timestamp.valueOf("2017-01-01 00:00:00"))
     assert(cut.select("pk_uniqueid").distinct().collect()
