@@ -1,28 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — one JSON line on stdout (driver contract).
   *
-  * Runs every registered query against SPARK_GRAFT_SF_DIR with the
-  * local-mode tuning we'd also start from on a real cluster: shuffle
-  * partitions sized to cores (not the 200 default), AQE on (runtime
-  * coalescing + skew-join splitting), auto broadcast for the small dims.
+  * Runs every registered query against SPARK_GRAFT_SF_DIR on the
+  * shared `Session.local` tuning.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     // Per-query timing with explicit failure tracking: a query that
     // throws is listed under "failed" so a regression can never
@@ -51,17 +37,8 @@ object Bench {
       // sf-dir parquet. r7 measured q_dedup_canonical spread
       // [5.0, 13.7] with the max always on the first rep; excluding it
       // makes round-over-round medians attributable to code changes.
-      // the warm-up's count doubles as the artifact's result
-      // cardinality ("rows"): SCALING.md's throughput rows derive
-      // their event/user counts from it instead of hard-coding
-      // constants that can drift from the queries they label
-      val warmRows: Option[Long] =
-        try Some(fn(spark, sfDir).count()) catch { case _: Throwable => None }
-      // fallback cardinality from the first successful TIMED rep: a
-      // transient warm-up failure must not silently drop the rows
-      // entry (only the scale queries would fail loudly later, via
-      // RenderScaling.rowsOf)
-      var repRows: Option[Long] = None
+      // A warm-up failure is not recorded: the timed reps report it.
+      try fn(spark, sfDir).count() catch { case _: Throwable => () }
       val runs = (1 to reps).map { _ =>
         // drop accumulated STORAGE before each rep's timer starts: the
         // checkpoint-heavy chains (graph/dedup/cdc) eagerly persist
@@ -81,24 +58,18 @@ object Bench {
         System.gc()
         val w0 = BenchTrace.nowMs
         val t0 = System.nanoTime()
-        val ok = try {
-          val c = fn(spark, sfDir).count()
-          if (repRows.isEmpty) repRows = Some(c)
-          true
-        } catch { case _: Throwable => false }
+        val ok = try { fn(spark, sfDir).count(); true }
+          catch { case _: Throwable => false }
         val dt = (System.nanoTime() - t0) / 1e9
         if (BenchTrace.enabled)
           System.err.println(BenchTrace.report(name, w0, BenchTrace.nowMs))
         (dt, ok)
       }
       val ts = runs.map(_._1)
-      ((name, median(ts), runs.forall(_._2), ts.min, ts.max),
-        warmRows.orElse(repRows))
+      (name, median(ts), runs.forall(_._2), ts.min, ts.max)
     }
-    val rows = results.collect { case ((n, _, _, _, _), Some(r)) => n -> r }.toMap
-    val timings = results.map(_._1)
-    val full = renderJson(timings, sfDir, rows)
-    val short = renderShortJson(timings, sfDir)
+    val full = renderJson(results, sfDir)
+    val short = renderShortJson(results, sfDir)
     // Redundant channels so any driver heuristic finds a parseable
     // line. The stdout copies are the SHORT rendering: rounds 1-3 all
     // shipped parsed:null because the 88-query line (~2.3 KB) overflows
@@ -116,17 +87,6 @@ object Bench {
         (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
       catch { case e: Throwable =>
         System.err.println(s"BENCH_LAST.json write failed: $e") }
-    // explicit artifact path (SPARK_GRAFT_BENCH_OUT): full per-query
-    // JSON regardless of filtering — the sf1 sweep runs a filtered
-    // headline slice at two SF dirs and assembles BENCH_sf1.json from
-    // these files; stdout's short line would truncate past its top
-    // slice (18 queries since the round-16 mins map)
-    sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { p =>
-      try java.nio.file.Files.write(java.nio.file.Paths.get(p),
-        (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      catch { case e: Throwable =>
-        System.err.println(s"$p write failed: $e") }
-    }
     System.out.println(short)
     System.out.flush()
     spark.stop()
@@ -265,19 +225,13 @@ object Bench {
     * to ms; Locale.ROOT because a comma-decimal default locale would
     * corrupt the JSON.
     */
-  def renderJson(results: Seq[(String, Double, Boolean, Double, Double)], sfDir: String,
-                 rows: Map[String, Long] = Map.empty): String = {
+  def renderJson(results: Seq[(String, Double, Boolean, Double, Double)],
+                 sfDir: String): String = {
     val total = results.map(_._2).sum
-    // "rows" = each query's result cardinality (warm-up rep count):
-    // the SCALING.md renderer derives the scale queries' event/user
-    // counts from it — one verdict row per event (q_etl_scale_cdc),
-    // one dn row per loaded user (q_etl_scale_load)
-    val rowsObj = rows.toSeq.sorted
-      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     // value_min mirrors the short line's headline diagnostic (the
     // per-query floors are already in "spread"; this is their total)
     val totalMin = results.map(_._4).sum
-    s"""{"metric":"total","value":${r3(total)},"value_min":${r3(totalMin)},"unit":"sec","queries":${queriesObj(results)},"spread":${spreadObj(results)},"rows":$rowsObj,"failed":${failedArr(results)},"volatile":${volatileArr(results)},"slow_tail":${slowTailArr(results)},"sf":"$sfDir"}"""
+    s"""{"metric":"total","value":${r3(total)},"value_min":${r3(totalMin)},"unit":"sec","queries":${queriesObj(results)},"spread":${spreadObj(results)},"failed":${failedArr(results)},"volatile":${volatileArr(results)},"slow_tail":${slowTailArr(results)},"sf":"$sfDir"}"""
   }
 
   /** The driver-contract stdout line: ONE JSON object, bounded-length.

@@ -275,8 +275,7 @@ object Directory {
     * structurally). At 100 TB the CDF's only cost was the dn shuffle of
     * two full snapshot versions; routing the versions through the
     * bucketed store makes the feed a co-located merge, the same
-    * write-once/join-forever trade as the SMB join. GateCheck prices
-    * plain vs bucketed at both sweep SFs (forced_paths `cdf_*` rows).
+    * write-once/join-forever trade as the SMB join.
     */
   def changesBucketed(spark: SparkSession, fromTable: String,
       toTable: String): DataFrame =

@@ -187,7 +187,7 @@ object EtlOps {
     * carry a pid+dataset namespace like the SMB join's — a fixed name
     * benched against two datasets in one JVM would alias stale data.
     */
-  private[graft] def stagedCdfBucketedTables(s: SparkSession, d: String)
+  private def stagedCdfBucketedTables(s: SparkSession, d: String)
       : (String, String) = {
     val ns = ProcessHandle.current().pid() + "_" +
       java.security.MessageDigest.getInstance("MD5")
@@ -331,8 +331,8 @@ object EtlOps {
     * (round 19): `Directory.changesBucketed` over the dn-bucketed
     * catalog twins of the same two synthetic versions. BucketedCdfSpec
     * pins the PLAN (SortMergeJoin, zero exchanges, both scans
-    * bucketed) and GateCheck asserts classification equality while
-    * pricing both layouts — this row closes the remaining gap: every
+    * bucketed) and classification equality with the plain store —
+    * this row closes the remaining gap: every
     * other operator twin in the engine (rocksdb/HDFS, salted/plain)
     * carries its own green CORRECTNESS row, so the zero-exchange CDF
     * gets one too, against the identical rescan-derived oracle.
@@ -607,17 +607,6 @@ object EtlOps {
 
   private val scaleConf = EtlConf(baseDn = "ou=user,ou=ph01,o=BMUKK",
     cryptoIvHex = Some("0" * 32))
-
-  /** Structural bootstrap rows in the scale-load snapshot (the base-dn
-    * chain plus the `ou=ETD,ou=idnSync` sibling — 5 for the scale
-    * conf's 3-level base). `q_etl_scale_load`'s result cardinality is
-    * users + this constant; RenderScaling subtracts it so the
-    * headline's user count and users/s rate are the loaded USERS, not
-    * the structural DNs. Derived from the same bootstrapEntries call
-    * the load itself makes, so it cannot drift from the query.
-    */
-  val scaleLoadBootstrapRows: Int =
-    graft.etl.Directory.bootstrapEntries(Seq(scaleConf.baseDn)).size
 
   /** Initial load of the sf-scaled synthetic user table into an empty
     * tree — the MERGE engine at data scale (scales with SF).

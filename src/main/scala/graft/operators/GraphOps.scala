@@ -80,23 +80,9 @@ object GraphOps {
     * bench re-derived identical edges 12× per run and the
     * derivation's CPU weight made the whole q_g* cluster volatile
     * under box contention (r9–r11). The inner pre-threshold pair-count
-    * cache is released after the edge count materializes, so only the
-    * edge list itself stays in session storage.
+    * checkpoint is released after the edge count materializes, so only
+    * the edge list itself stays in session storage.
     */
-  /** One full UN-memoized derivation (checkpoint + count + release) —
-    * the pricing hook for GateCheck's `edges_build` row: with the
-    * session memo, the per-query bench rows price the ANALYTICS, and
-    * this is where the one-time derivation cost stays measured.
-    */
-  private[graft] def buildEdgesUnmemoized(s: SparkSession, d: String): Long = {
-    val (edges, scratch) = coEdges(s, d)
-    val e = edges.localCheckpoint(true)
-    val n = e.count()
-    scratch.unpersist(blocking = true)
-    e.unpersist(blocking = true)
-    n
-  }
-
   private[operators] def affinityEdges(s: SparkSession, d: String)
       : (DataFrame, Long) = {
     graft.Memo.frame(s, s"affinity-edges $d",
@@ -104,9 +90,15 @@ object GraphOps {
       val (edges, scratch) = coEdges(s, d)
       val e = edges.localCheckpoint(true) // sa < sb
       val n = e.count()
-      // the pair-count cache only serves the build (its id may land in
-      // the pinned set — a dead id is harmless)
-      scratch.unpersist(blocking = false)
+      // the pair counts only serve the build. A local checkpoint's
+      // blocks belong to its RDD, which Dataset.unpersist never
+      // touches; release that RDD before Memo.frame pins what the
+      // build left persistent
+      scratch.queryExecution.logical.foreach {
+        case r: org.apache.spark.sql.execution.LogicalRDD =>
+          r.rdd.unpersist(blocking = false)
+        case _ => ()
+      }
       (e, n)
     }
   }
@@ -499,7 +491,7 @@ object GraphOps {
     * bit-equality with `pagerankLocal`.
     */
   private[operators] def pagerankDistributed(s: SparkSession, e: DataFrame,
-      nEdges: Long, rounds: Int = 3): DataFrame = {
+      nEdges: Long): DataFrame = {
     // Static planning for the iteration chain (Tables.withStaticWidth):
     // the graph size is KNOWN after the checkpoint, so AQE's per-
     // exchange materialization jobs (one per join/agg per round —
@@ -508,31 +500,11 @@ object GraphOps {
     // INSIDE the block — the whole chain runs as one static pipelined
     // job and consumers read the cached result.
     graft.Tables.withStaticWidth(s, 2L * nEdges, perPart = 32768L) {
-      val (pr, handles) = pagerankRounds(e, rounds)
+      val (pr, handles) = pagerankRounds(e)
       val out = pr.localCheckpoint(true) // eager: safe to release below
       handles.foreach(_.unpersist(false))
       out
     }
-  }
-
-  /** Multi-round pricing + equality hook for GateCheck (round 16): the
-    * 3-round oracle rows price one regime; this runs the SAME iteration
-    * at an arbitrary round count so BENCH_sf1's forced_paths carries a
-    * measured multi-round point (near-linear cost in rounds = the "one
-    * combinable shuffle per round" claim, measured, with the
-    * `iterPersistEvery` depth bound crossed at rounds > 8).
-    * distributed=true runs the exchange-free round loop (the 100 TB
-    * plan); false the CSR driver kernel — exact integers both sides,
-    * so GateCheck asserts them bit-identical.
-    */
-  private[graft] def pagerankN(s: SparkSession, d: String, rounds: Int,
-      distributed: Boolean): DataFrame = {
-    val (e, nEdges) = affinityEdges(s, d)
-    import s.implicits._
-    if (nEdges == 0L) return Seq.empty[(Long, Long)].toDF("v", "pr")
-    if (distributed) pagerankDistributed(s, e, nEdges, rounds)
-    else localPairsToDF(s, pagerankLocal(
-      e.collect().map(r => (r.getLong(0), r.getLong(1))), rounds), "pr")
   }
 
   /** Iteration rounds between plan-depth truncation points: every

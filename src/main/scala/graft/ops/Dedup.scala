@@ -578,15 +578,10 @@ object Dedup {
     // linear-rule width 32, 6.59 s at 17, 5.93 s at 5, 7.05 s at 2;
     // the √ rule lands width 11 there and width 5 at sf0.1 (inside the
     // measured 4–8 optimum band), and still scales up for genuinely
-    // large label frames before the fanout cap. Overridable via
-    // `graft.cc.width`.
-    // clamp AFTER the conf override resolves: a "0"/negative conf value
-    // must be corrected too, not just the computed default — it would
-    // otherwise reach withStaticParts/shuffle.partitions and mis-plan
-    val ccWidth = sess.conf.getOption("graft.cc.width")
-      .flatMap(_.toIntOption).getOrElse(
-        math.min(graft.Tables.fanout(sess).toDouble,
-          math.sqrt(2.0 * nPairs / 32768.0) + 3.0).toInt).max(1)
+    // large label frames before the fanout cap. The clamp keeps a
+    // degenerate fanout from reaching withStaticParts as width 0.
+    val ccWidth = math.min(graft.Tables.fanout(sess).toDouble,
+      math.sqrt(2.0 * nPairs / 32768.0) + 3.0).toInt.max(1)
     graft.Tables.withStaticParts(pairs0.sparkSession, ccWidth) {
     // 20 hop+jump rounds cover component diameters up to ~2^20; beyond
     // that we fail loudly rather than return split groups

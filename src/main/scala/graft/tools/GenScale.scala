@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: shard-replicate an existing sf dir K× into a larger
@@ -33,19 +33,11 @@ object GenScale {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse(".bench/sf1")
     val k = args.lift(2).flatMap(_.toIntOption).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // the source events table is parquet TIMESTAMP(NANOS); read the
-      // raw nanos as a long and write it back as a plain long column —
-      // Tables.events reads either representation identically
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
+    // the source events table is parquet TIMESTAMP(NANOS); read the
+    // raw nanos as a long and write it back as a plain long column —
+    // Tables.events reads either representation identically
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def read(name: String): DataFrame =
       spark.read.parquet(s"$src/$name.parquet")

@@ -7,8 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * committed and must have PASSED — the audit output of record travels
   * with the code it gates, and a round that skipped the gate or
   * shipped over a failing one is a red build (the round-16 wiring of
-  * tools/dtype_audit.py into the gate; same discipline as
-  * ScalingDocSpec for SCALING.md).
+  * tools/dtype_audit.py into the gate).
   */
 class GateRecordSpec extends AnyFunSuite {
 

@@ -9,9 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * feed consumes bucket i against bucket i with ZERO exchanges — the
   * write-once/join-forever trade, applied to the feed that would
   * otherwise shuffle two full snapshot versions every refresh at
-  * 100 TB. Answers are pinned against the plain-store `changes`;
-  * GateCheck prices both layouts at the sweep SFs (forced_paths
-  * `cdf_plain`/`cdf_bucketed`).
+  * 100 TB. Answers are pinned against the plain-store `changes`.
   */
 class BucketedCdfSpec extends AnyFunSuite {
 

@@ -88,11 +88,10 @@ class GraphOpsSpec extends AnyFunSuite {
   }
 
   test("sf0.1: forced local and distributed paths agree end-to-end") {
-    // the in-suite form of the GateCheck harness: the sf0.1 derived
-    // graph is big enough to make the equality non-vacuous, and forcing
-    // BOTH sides of every budget gate here pins the distributed path —
-    // the one that runs at 100 TB — every `sbt test`, not only in a
-    // manual sf1 sweep
+    // the sf0.1 derived graph is big enough to make the equality
+    // non-vacuous, and forcing BOTH sides of every budget gate here
+    // pins the distributed path — the one that runs at 100 TB — every
+    // `sbt test`
     val spark = TestSpark.spark
     val sf01 = "/root/testdata/sf0.1"
     assume(new java.io.File(sf01).exists)
@@ -191,6 +190,26 @@ class GraphOpsSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val local = GraphOps.pagerankLocal(edges.toArray).toMap
     assert(local == dist, s"local $local vs distributed $dist")
+  }
+
+  test("the affinity memo leaves only the edge list persistent") {
+    // the pair-count checkpoint serves the build alone: Memo.frame pins
+    // every RDD the build leaves persistent, so a leaked one would sit
+    // in storage for the whole session, out of dropUnpinned's reach.
+    // A fresh dir gives a fresh memo key whatever ran before.
+    val spark = TestSpark.spark
+    val sc = spark.sparkContext
+    val tmp = java.nio.file.Files.createTempDirectory("affinity").toFile
+    try {
+      graft.Tables.lineitem(spark, dir).select("l_orderkey", "l_suppkey")
+        .write.parquet(s"$tmp/lineitem.parquet")
+      val before = sc.getPersistentRDDs.keySet
+      val (_, n) = GraphOps.affinityEdges(spark, tmp.toString)
+      val added = sc.getPersistentRDDs.keySet -- before
+      assert(added.size == 1, s"persistent after the build: $added")
+      assert(n > 0 && sc.getPersistentRDDs(added.head).count() == n,
+        "the one survivor is not the edge list")
+    } finally graft.etl.Directory.deleteRecursively(tmp)
   }
 
   test("an empty above-threshold graph yields empty ranks, not an error") {

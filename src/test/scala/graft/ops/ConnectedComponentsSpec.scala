@@ -95,8 +95,8 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   }
 
   test("sf0.1: forced local and distributed component paths agree end-to-end") {
-    // in-suite GateCheck: the real sf0.1 candidate-pair graph through
-    // the production operator, both sides of the budget gate — pins
+    // the real sf0.1 candidate-pair graph through the production
+    // operator, both sides of the budget gate — pins
     // the distributed loop (the 100 TB path) every `sbt test`
     val spark = TestSpark.spark
     val sf01 = "/root/testdata/sf0.1"
