@@ -1,12 +1,15 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import scala.collection.mutable
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import Directory.Entry
+import org.apache.spark.sql.types._
+import Directory.{Entry, parentDn, rdnValue}
+import SyncEngine.{MatchIn, MergeRow}
 
 /** §3.1 — the CDC micro-batch: one poll cycle of the reference's `etl`
-  * action (etl.py:576–733) as a set-based pipeline:
+  * action (etl.py:576–733):
   *
   *   garbage-collect → scan ≤N new/errored events → validate (P3, fatal
   *   rows routed to status F, never exceptions) → J1 join to current
@@ -15,10 +18,26 @@ import Directory.Entry
   *   writeback.
   *
   * The reference applies events one at a time and re-reads the current
-  * DB row per event, so replays are idempotent; the set-based engine
-  * exploits exactly that: one MERGE per distinct uid, while the status
-  * matrix still produces a verdict per event (sequencing within a uid is
+  * DB row per event, so replays are idempotent; the engine exploits
+  * exactly that: one MERGE per distinct uid, while the status matrix
+  * still produces a verdict per event (sequencing within a uid is
   * reconstructed from record_id order — SURVEY.md §4.3).
+  *
+  * Two paths compute the same cycle; `driverBatchBound` on `maxRecords`
+  * selects between them:
+  *  - capped (`maxRecords <= driverBatchBound`, the poll loop's 100):
+  *    `CappedCycle` collects the batch, its user rows and the snapshot
+  *    entries they touch, computes the cycle on the driver with the typed
+  *    kernel (`SyncEngine.mergeOne`), and applies it with one pass over
+  *    the snapshot and one over the eventlog. Its cost follows the batch,
+  *    and its handful of plans keep one shape from cycle to cycle, so the
+  *    generated code is reused.
+  *  - set-based (`cycleSetBased`, unbounded drains): matching, merge,
+  *    deletes and the status matrix as joins and aggregations over the
+  *    whole batch, with the column kernel (`SyncEngine.mergeRowsPlan`).
+  *
+  * Both share the batch selection and validation, the source-row
+  * conversion, the GC filter and the eventlog writeback.
   */
 object Cdc {
   /** Largest batch cap that may FORCE a uid-set broadcast in the batch
@@ -28,12 +47,29 @@ object Cdc {
     */
   val broadcastUidBound: Int = 1 << 20
 
+  /** Largest batch cap that runs on the driver (`CappedCycle`). The
+    * collected inputs grow with the cap; at this one the capped cycle
+    * still wins: a poll cycle of 10,000 events on 37,678 users took
+    * 5.2–5.5 s capped and 11.4–12.6 s set-based (syncbench's poll
+    * workload at a 10,000-event cap, 4 cores), and the capped run also
+    * passed in a 2 GB heap. Larger caps, unbounded drains among them,
+    * run set-based.
+    */
+  val driverBatchBound: Int = 10000
 
+  /** `selected` (events the cycle selected) and `renameQueued` (whether
+    * `renames` is non-empty) are driver values on the capped path; on the
+    * set-based path each costs one job, run on first use.
+    */
   case class CycleResult(
       snapshot: Dataset[Entry],
       eventlog: DataFrame,        // full table with statuses written back
       eventUpdates: DataFrame,    // record_id, status, error_message, attempt
       renames: DataFrame)         // old_cn, new_cn queue for ph15 (C3)
+      (selectedOf: () => Long, renameQueuedOf: () => Boolean) {
+    lazy val selected: Long = selectedOf()
+    lazy val renameQueued: Boolean = renameQueuedOf()
+  }
 
   private def trimEq(c: Column, v: String): Column =
     graft.functions.ConvertF.char3Eq(c, v)
@@ -45,33 +81,44 @@ object Cdc {
   def cycle(snapshot0: Dataset[Entry], users: DataFrame, eventlog: DataFrame,
       conf: EtlConf, maxRecords: Int = 100,
       readTime: java.sql.Timestamp = new java.sql.Timestamp(System.currentTimeMillis / 1000 * 1000))
-      : CycleResult = {
-    val spark = snapshot0.sparkSession
-    import spark.implicits._
+      : CycleResult =
+    if (maxRecords > driverBatchBound)
+      cycleSetBased(snapshot0, users, eventlog, conf, maxRecords, readTime)
+    else
+      try CappedCycle.run(snapshot0, users, eventlog, conf, maxRecords, readTime)
+      catch {
+        case _: CappedCycle.Unmodelled =>
+          cycleSetBased(snapshot0, users, eventlog, conf, maxRecords, readTime)
+      }
 
-    // C6 — collect already-ETD-synced deleted entries at cycle start;
-    // the reference never garbage-collects the ph15 instance itself
-    // (etl.py:406–407)
-    val snap1 =
-      if (conf.isPh15) snapshot0
-      else SyncEngine.garbageCollect(snapshot0, conf)
+  /** C6 — collect already-ETD-synced deleted entries at cycle start; the
+    * reference never garbage-collects the ph15 instance itself
+    * (etl.py:406–407).
+    */
+  private[etl] def collectGarbage(snapshot0: Dataset[Entry], conf: EtlConf)
+      : Dataset[Entry] =
+    if (conf.isPh15) snapshot0 else SyncEngine.garbageCollect(snapshot0, conf)
 
-    // S3 — bounded work-queue scan (status flags are the offsets). An
-    // unbounded batch (Int.MaxValue) skips the global sort entirely —
-    // the cap exists only to emulate the reference's cycle batching,
-    // and a top-2^31 sort would be pure waste on a process-everything
-    // scan.
+  /** S3 — bounded work-queue scan (status flags are the offsets). An
+    * unbounded batch (Int.MaxValue) skips the global sort entirely — the
+    * cap exists only to emulate the reference's cycle batching, and a
+    * top-2^31 sort would be pure waste on a process-everything scan.
+    */
+  private[etl] def selectBatch(eventlog: DataFrame, maxRecords: Int): DataFrame = {
     val pendingEv = eventlog
       .filter(trimEq(col("status"), "N") || trimEq(col("status"), "E"))
-    val batch =
-      if (maxRecords == Int.MaxValue) pendingEv
-      else pendingEv.orderBy("record_id").limit(maxRecords)
+    if (maxRecords == Int.MaxValue) pendingEv
+    else pendingEv.orderBy("record_id").limit(maxRecords)
+  }
 
-    // P3 — validation with error routing (etl.py:615–652). NULL fields
-    // must fail validation, not slip through a null-valued when():
-    // every predicate is explicitly null-armed.
+  /** P3 — validation with error routing (etl.py:615–652): adds `v_error`
+    * (NULL for a valid event) and the numeric `uid`. NULL fields must
+    * fail validation, not slip through a null-valued when(): every
+    * predicate is explicitly null-armed.
+    */
+  private[etl] def validate(batch: DataFrame, conf: EtlConf): DataFrame = {
     val uidStr = expr("split(table_key, '=', 2)[1]")
-    val validated = batch.withColumn("v_error",
+    batch.withColumn("v_error",
       when(col("event_type").isNull || !col("event_type").isin(4.0, 5.0, 6.0),
         concat(lit(s"Invalid event_type in ${conf.db}: "),
           coalesce(col("event_type").cast("string"), lit("None"))))
@@ -85,7 +132,39 @@ object Cdc {
           concat(lit("Invalid table_key: "), coalesce(uidStr, lit("None")),
             lit(s" in ${conf.db}, expect numeric id"))))
       .withColumn("uid", when(col("v_error").isNull, uidStr.cast("long")))
+  }
 
+  /** S16 — batched writeback, one idempotent overwrite per cycle.
+    * `updates`: record_id, new_status, new_error, new_attempt, new_read.
+    */
+  private[etl] def writeback(eventlog: DataFrame, updates: DataFrame): DataFrame =
+    eventlog.alias("e")
+      .join(updates.alias("u"), col("e.record_id") === col("u.record_id"),
+        "left_outer")
+      .select(
+        (eventlog.columns.filterNot(Set("status", "error_message", "attempt",
+          "read_time")).map(c => col("e." + c)) ++ Seq(
+          // the eventlog status column is CHAR(3) — re-pad like the
+          // source database stores it (readEventsCsv does the same)
+          coalesce(rpad(col("u.new_status"), 3, " "), col("e.status"))
+            .as("status"),
+          coalesce(col("u.new_error"), col("e.error_message")).as("error_message"),
+          coalesce(col("u.new_attempt"), col("e.attempt")).as("attempt"),
+          coalesce(col("u.new_read"), col("e.read_time")).as("read_time"))): _*)
+      .select(EtlSchema.eventFields.map(col): _*)
+
+  /** The set-based cycle: every step a join or aggregation over the whole
+    * batch. `cycle` runs it for caps above `driverBatchBound` and for the
+    * states the capped path does not model.
+    */
+  private[etl] def cycleSetBased(snapshot0: Dataset[Entry], users: DataFrame,
+      eventlog: DataFrame, conf: EtlConf, maxRecords: Int,
+      readTime: java.sql.Timestamp): CycleResult = {
+    val spark = snapshot0.sparkSession
+    import spark.implicits._
+
+    val snap1 = collectGarbage(snapshot0, conf)
+    val validated = validate(selectBatch(eventlog, maxRecords), conf)
     val valid = validated.filter(col("v_error").isNull)
       .select(col("record_id"), col("uid"), col("event_type"),
         col("attempt"))
@@ -110,13 +189,12 @@ object Cdc {
 
     // MERGE the uids that still have rows (is_new=false: event_type only
     // influences warnings, which the status matrix reconstructs).
-    // Materialized once (LAZY checkpoint: computed inside the first
-    // consuming job, reused by every later one): the merge, the row
-    // counts, and the ph15 write-through all consume it — without this
-    // the users join + the 30-column conversion projection re-execute
-    // per consumer; with an EAGER checkpoint every cycle pays a
-    // separate up-front job even when the consumer evaluates only the
-    // event-status side of the result.
+    // Materialized once: the merge, the row counts and the ph15
+    // write-through all consume it — without this the users join + the
+    // 30-column conversion projection re-execute per consumer. The
+    // checkpoint is lazy in name only: under AQE the call itself runs
+    // the plan's shuffle and broadcast stages (one job here) before any
+    // consumer does; the consumers then read the stored partitions.
     val newRows0 = SyncEngine.toNewRows(batchUsers).localCheckpoint(false)
     val newRows = newRows0.withColumn("is_new", lit(false))
     val (snapMerged, outcomes) = SyncEngine.merge(snap1, newRows, conf)
@@ -224,22 +302,6 @@ object Cdc {
         lit(null).cast("timestamp").as("new_read"))
     val allUpdates = evUpdates.unionByName(fUpdates)
 
-    // S16 — batched writeback, one idempotent overwrite per cycle
-    val updated = eventlog.alias("e")
-      .join(allUpdates.alias("u"), col("e.record_id") === col("u.record_id"),
-        "left_outer")
-      .select(
-        (eventlog.columns.filterNot(Set("status", "error_message", "attempt",
-          "read_time")).map(c => col("e." + c)) ++ Seq(
-          // the eventlog status column is CHAR(3) — re-pad like the
-          // source database stores it (readEventsCsv does the same)
-          coalesce(rpad(col("u.new_status"), 3, " "), col("e.status"))
-            .as("status"),
-          coalesce(col("u.new_error"), col("e.error_message")).as("error_message"),
-          coalesce(col("u.new_attempt"), col("e.attempt")).as("attempt"),
-          coalesce(col("u.new_read"), col("e.read_time")).as("read_time"))): _*)
-      .select(EtlSchema.eventFields.map(col): _*)
-
     // C3 — rename queue for the end-of-cycle ph15 pass
     val renames = outcomes.toDF
       .filter(col("renameOldCn").isNotNull)
@@ -252,7 +314,38 @@ object Cdc {
       if (conf.ph15Dn.isEmpty || conf.isPh15) snapFinal
       else ph15Writethrough(snapFinal, newRows0, outcomes.toDF, conf)
 
-    CycleResult(snapWithPh15, updated, allUpdates, renames)
+    CycleResult(snapWithPh15, writeback(eventlog, allUpdates), allUpdates,
+      renames)(() => allUpdates.count(), () => !renames.isEmpty)
+  }
+
+  /** The write-through columns: the ph15 twin receives these source
+    * columns when they change (etl.py:338), the password as its own path.
+    */
+  private[etl] val writethroughKeys: Seq[String] =
+    EtlSchema.ph15Writethrough :+ "passwort"
+
+  /** C9 — the attributes one changed row writes through into its ph15
+    * twin: the changed write-through columns present in the new row,
+    * never a delete, and the password re-encrypted under the configured
+    * IV (etl.py:1112–1165).
+    */
+  private[etl] def ph15Patch(newAttrs: Map[String, Seq[String]],
+      pw: Option[String], changedKeys: Seq[String], conf: EtlConf)
+      : Map[String, Seq[String]] = {
+    val attrs = scala.collection.mutable.Map.empty[String, Seq[String]]
+    changedKeys.filter(writethroughKeys.contains).foreach {
+      case "passwort" =>
+        pw.foreach { p =>
+          attrs("idnDistributionPassword") =
+            Seq(Aes.encryptHex(p, conf.aesKey, conf.cryptoIvHex))
+          attrs("userPassword") = Seq("{CRYPT}")
+        }
+      case k =>
+        newAttrs.get(EtlSchema.odbcToLdap(k)).foreach { v =>
+          attrs(EtlSchema.odbcToLdap(k)) = v // never delete in ph15
+        }
+    }
+    attrs.toMap
   }
 
   /** C9 — patch the ph15 twin entry (matched by cn under the ph15 base)
@@ -263,10 +356,9 @@ object Cdc {
   private def ph15Writethrough(snapshot: Dataset[Entry], newRows0: DataFrame,
       outcomes: DataFrame, conf: EtlConf): Dataset[Entry] = {
     import snapshot.sparkSession.implicits._
-    val wt = EtlSchema.ph15Writethrough :+ "passwort"
     val hits = outcomes
       .filter(col("changed") && arrays_overlap(col("changedSrcKeys"),
-        typedLit(wt)))
+        typedLit(writethroughKeys)))
       .select(col("srcCn").as("wt_cn"), col("changedSrcKeys"))
     if (hits.isEmpty) return snapshot
     // one row per cn (case-insensitively, like the merge's cn-dedup,
@@ -283,20 +375,7 @@ object Cdc {
       col("pw_plain"), col("changedSrcKeys"))
       .as[(String, Map[String, Seq[String]], Option[String], Seq[String])]
     val patch = changesDs.map { case (cn, newAttrs, pw, changedKeys) =>
-      val attrs = scala.collection.mutable.Map.empty[String, Seq[String]]
-      changedKeys.filter(wt.contains).foreach {
-        case "passwort" =>
-          pw.foreach { p =>
-            attrs("idnDistributionPassword") =
-              Seq(Aes.encryptHex(p, conf.aesKey, conf.cryptoIvHex))
-            attrs("userPassword") = Seq("{CRYPT}")
-          }
-        case k =>
-          newAttrs.get(EtlSchema.odbcToLdap(k)).foreach { v =>
-            attrs(EtlSchema.odbcToLdap(k)) = v // never delete in ph15
-          }
-      }
-      (s"cn=$cn,${conf.dn15}", attrs.toMap)
+      (s"cn=$cn,${conf.dn15}", ph15Patch(newAttrs, pw, changedKeys, conf))
     }.toDF("p_dn", "p_attrs")
     // the twin is matched case-insensitively (LDAP caseIgnoreMatch,
     // same rule as the merge's cn match): a case-divergent twin — e.g.
@@ -394,5 +473,305 @@ object Cdc {
       "left_semi")
     val rows = SyncEngine.toNewRows(hit).withColumn("is_new", lit(false))
     SyncEngine.merge(snapshot, rows, ph15Conf)._1
+  }
+}
+
+/** The capped CDC cycle (`Cdc.cycle` with `maxRecords <=
+  * Cdc.driverBatchBound`): the cycle's inputs are batch-sized, so they
+  * are collected and the cycle is computed on the driver, with the
+  * semantics of `Cdc.cycleSetBased` step for step. Spark runs:
+  *
+  *  1. the batch selection and validation (shared with the set-based
+  *     path), collected;
+  *  2. the batch's user rows (`SyncEngine.toNewRows`, with the cn-dedup
+  *     content hash), collected;
+  *  3. the entries of the GC'd snapshot the batch touches: lower(rdn) is
+  *     one of the batch's cns or the uid one of its uids, under any base
+  *     (cn match, uid fallback and ambiguity, ph15 twins), collected;
+  *  4. only when the batch deletes: the entries whose cn is a victim's
+  *     cn, for the ph15 sweep, collected;
+  *  5. the snapshot: the GC'd snapshot minus the changed and removed dns,
+  *     plus the local upserts;
+  *  6. the eventlog: the shared writeback over the local verdicts.
+  *
+  * Everything in between — cn-dedup, J2 matching, the typed kernel
+  * (`SyncEngine.mergeOne`), one change per dn, deletes, the ph15 sweep
+  * and write-through, the C8 status matrix and the rename queue — is
+  * driver code over batch-sized collections. Where the set-based path
+  * takes a max, max_by or array_sort over strings, the driver compares by
+  * UTF-8 bytes as Spark does.
+  *
+  * The snapshot's `dn` is unique (the Directory invariant). A state the
+  * set-based path would turn into duplicate rows — a duplicate dn, a
+  * change landing on an existing dn, two write-through patches for one
+  * twin — or a batch with a null record_id is not modelled here: `run`
+  * throws `Unmodelled` and `Cdc.cycle` runs the set-based path instead.
+  */
+private[etl] object CappedCycle {
+
+  final class Unmodelled(why: String) extends RuntimeException(why)
+
+  /** One selected event; `attempt_now` is C8's attempt as Spark casts it. */
+  case class Ev(record_id: Option[Double], v_error: Option[String],
+      uid: Option[Long], event_type: Option[Double], attempt_now: Option[Int])
+
+  /** One converted user row with its cn-dedup content hash; `src_uid`
+    * is one of the batch's uids.
+    */
+  case class UserRow(src_cn: String, src_uid: String, pw_plain: Option[String],
+      new_attrs: Map[String, Seq[String]], h: Long)
+
+  private implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
+  private implicit val rowEnc: Encoder[UserRow] = Encoders.product[UserRow]
+
+  /** Spark's string order: unsigned UTF-8 bytes (= code point order). */
+  val utf8Order: Ordering[String] = new Ordering[String] {
+    def compare(a: String, b: String): Int = java.util.Arrays.compareUnsigned(
+      a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  }
+
+  private def uidOf(attrs: Map[String, Seq[String]]): Option[String] =
+    attrs.get("phonlineUniqueId").flatMap(_.headOption)
+
+  /** `SyncEngine.cnDedupOrder` (winner = min): highest uid, then content
+    * hash, then password (nulls last).
+    */
+  private val dedupOrder: Ordering[UserRow] =
+    Ordering.by((r: UserRow) => (r.src_uid.toLong, r.h, r.pw_plain))(Ordering.Tuple3(
+      Ordering.Long.reverse, Ordering.Long.reverse, Ordering.Option(utf8Order).reverse))
+
+  private def maxUtf8(xs: Iterable[String]): Option[String] =
+    xs.reduceOption((a, b) => if (utf8Order.gteq(a, b)) a else b)
+
+  def run(snapshot0: Dataset[Entry], users: DataFrame, eventlog: DataFrame,
+      conf: EtlConf, maxRecords: Int, readTime: java.sql.Timestamp)
+      : Cdc.CycleResult = {
+    val spark = snapshot0.sparkSession
+    import spark.implicits._
+    val snap1 = Cdc.collectGarbage(snapshot0, conf)
+
+    // 1 — the batch
+    val evs = Cdc.validate(Cdc.selectBatch(eventlog, maxRecords), conf)
+      .select(col("record_id"), col("v_error"), col("uid"),
+        col("event_type"),
+        when(col("v_error").isNull,
+          coalesce(col("attempt"), lit(0.0)).cast("int")).as("attempt_now"))
+      .as[Ev].collect().toSeq
+    if (evs.exists(_.record_id.isEmpty))
+      throw new Unmodelled("a selected event has no record_id")
+    val valid = evs.filter(_.v_error.isEmpty)
+    val batchUids = valid.map(_.uid.get.toString).distinct
+
+    // 2 — the batch's user rows (the set-based J1 semi-join on
+    // pk_uniqueid cast to long, in its string form `src_uid`)
+    val rows: Seq[UserRow] =
+      if (batchUids.isEmpty) Nil
+      else SyncEngine.toNewRows(users)
+        .filter(col("src_uid").isInCollection(batchUids))
+        .select(col("src_cn"), col("src_uid"), col("pw_plain"),
+          col("new_attrs"), SyncEngine.cnDedupHash.as("h"))
+        .as[UserRow].collect().toSeq
+
+    // 3 — the touched entries of the GC'd snapshot
+    val writethrough = conf.ph15Dn.nonEmpty && !conf.isPh15
+    val srcCns = rows.flatMap(r => Option(r.src_cn)).distinct
+    val cnKeys = srcCns.map(_.toLowerCase).distinct
+    lazy val twinKeys = srcCns.map(c => s"cn=$c,${conf.dn15}".toLowerCase)
+    val touchedBy = Seq(
+      Option.when(cnKeys.nonEmpty)(
+        lower(Directory.rdnValueCol(col("dn"))).isInCollection(cnKeys)),
+      Option.when(batchUids.nonEmpty)(
+        element_at(col("attrs")("phonlineUniqueId"), 1).isInCollection(batchUids)),
+      Option.when(writethrough && srcCns.nonEmpty)(
+        lower(col("dn")).isInCollection(twinKeys))).flatten
+    val touched = touchedBy.reduceOption(_ || _)
+      .map(c => snap1.filter(c).collect().toSeq).getOrElse(Nil)
+
+    val dir = new Overlay(touched)
+
+    // J2 match + typed kernel over the cn-deduped rows
+    val (nullCn, withCn) = rows.partition(_.src_cn == null)
+    val winners = withCn.groupBy(_.src_cn.toLowerCase).map { case (k, rs) =>
+      k -> rs.min(dedupOrder)
+    }
+    val deduped = nullCn ++ winners.values
+    val under = touched.filter(e => parentDn(e.dn) == conf.baseDn)
+    val byCn = under.groupBy(e => rdnValue(e.dn).toLowerCase)
+    val byUid = under.groupBy(e => uidOf(e.attrs))
+    val outcomes: Seq[MergeRow] = deduped.flatMap { r =>
+      def in(e: Option[Entry], cnMatched: Boolean, ambiguous: Boolean) =
+        MatchIn(r.src_cn, r.src_uid, r.pw_plain, r.new_attrs, isNew = false,
+          e.map(_.dn), e.map(_.attrs), cnMatched, ambiguous)
+      val cnHits = Option(r.src_cn).toSeq
+        .flatMap(c => byCn.getOrElse(c.toLowerCase, Nil))
+      val ins =
+        if (cnHits.nonEmpty) cnHits.map(e => in(Some(e), cnMatched = true, ambiguous = false))
+        else {
+          val g = byUid.getOrElse(Some(r.src_uid), Nil)
+          Seq(in(g.headOption.filter(_ => g.size == 1), cnMatched = false,
+            ambiguous = g.size > 1))
+        }
+      ins.map(SyncEngine.mergeOne(_, conf))
+    }
+
+    // applyMerge: one change per consumed dn (highest uid, then cn), adds
+    val changes = outcomes.filter(o => o.changed && o.consumedDn.isDefined)
+      .groupBy(_.consumedDn.get).toSeq.map { case (dn0, os) =>
+        dn0 -> os.max(Ordering.by((o: MergeRow) => (o.srcUid.toLong, o.srcCn))(
+          Ordering.Tuple2(Ordering.Long, utf8Order)))
+      }
+    changes.foreach { case (dn0, _) => dir.remove(dn0) }
+    changes.foreach { case (_, o) => dir.add(o.resultDn.get, o.resultAttrs.get) }
+    outcomes.filter(o => o.changed && o.consumedDn.isEmpty)
+      .foreach(o => dir.add(o.resultDn.get, o.resultAttrs.get))
+
+    // C4 — delete the uids with no user row left
+    val gone = batchUids.toSet -- rows.map(_.src_uid)
+    val victims = dir.entries.filter { case (dn, a) =>
+      parentDn(dn) == conf.baseDn && uidOf(a).exists(gone)
+    }.keys.toSeq
+    val hard = conf.isPh15 || conf.noEtd.contains(conf.db)
+    if (hard) victims.foreach(dir.remove)
+    else victims.foreach(dn =>
+      dir.put(dn, SyncEngine.softDeleteAttrs(dir.entries(dn), conf)))
+    if (!hard && conf.baseDn.contains("ou=ph") && victims.nonEmpty) {
+      // 4 — the ph15 sweep's candidates (SyncEngine.deleteInPh15)
+      val victimCns = victims.map(rdnValue).distinct
+      dir.fetch(snap1.filter(Directory.rdnValueCol(col("dn"))
+        .isInCollection(victimCns)).collect().toSeq)
+      val cnSet = victimCns.toSet
+      dir.entries.toSeq
+        .filter { case (dn, a) => !a.contains("idnDeleted") && cnSet(rdnValue(dn)) }
+        .groupBy { case (dn, _) => rdnValue(dn) }
+        .foreach { case (cn, es) =>
+          val (dn, a) = es.head
+          if (es.size == 1 && !EtlSchema.accStatus.exists(a.contains) &&
+              dn == s"cn=$cn,${conf.dn15}") dir.remove(dn)
+        }
+    }
+
+    // C9 — ph15 write-through of the changed write-through columns
+    if (writethrough) {
+      val patches = outcomes
+        .filter(o => o.changed && o.changedSrcKeys.exists(Cdc.writethroughKeys.contains))
+        .flatMap(o => winners.get(o.srcCn.toLowerCase).map { r =>
+          s"cn=${r.src_cn},${conf.dn15}".toLowerCase ->
+            Cdc.ph15Patch(r.new_attrs, r.pw_plain, o.changedSrcKeys, conf)
+        })
+      if (patches.map(_._1).distinct.size != patches.size)
+        throw new Unmodelled("two write-through patches for one ph15 twin")
+      val byDn = patches.toMap
+      dir.entries.toSeq.foreach { case (dn, a) =>
+        byDn.get(dn.toLowerCase).foreach(p => dir.put(dn, a -- p.keys ++ p))
+      }
+    }
+
+    // C8 — status matrix per event
+    val byUidOut = outcomes.groupBy(_.srcUid)
+    val rowN = rows.groupBy(_.src_uid).map { case (u, rs) => u -> rs.size.toLong }
+    val firstRid = valid.groupBy(_.uid.get).map { case (u, es) =>
+      u -> es.map(_.record_id.get).min
+    }
+    val evRows = valid.map { e =>
+      val uid = e.uid.get
+      val rid = e.record_id.get
+      val os = byUidOut.getOrElse(uid.toString, Nil)
+      val n = if (os.isEmpty) 0L else rowN.getOrElse(uid.toString, 0L)
+      val preMatched = os.exists(_.consumedDn.isDefined)
+      val matchedDn = maxUtf8(os.flatMap(_.consumedDn)).orElse(
+        maxUtf8(os.filter(o => o.consumedDn.isEmpty && o.changed).flatMap(_.resultDn)))
+      val errors = os.flatMap(_.error).sorted(utf8Order)
+      val kernelError = Option.when(errors.nonEmpty)(errors.mkString("\n"))
+      val kernelWarning = maxUtf8(os.flatMap(_.warning))
+      val first = rid == firstRid(uid)
+      val existsAt = preMatched || (n > 0 && rid > firstRid(uid))
+      val isInsert = e.event_type.contains(5.0)
+      val isDelete = e.event_type.contains(4.0)
+      val baseW =
+        if (n >= 1 && isDelete) Some(s"Record $uid existing in DB ${conf.db}")
+        else if (n > 1) Some(s"Duplicate pk_uniqueid: $uid in ${conf.db}")
+        else None
+      val syncW =
+        if (n >= 1 && isInsert && existsAt)
+          kernelWarning.filter(_ => first).orElse(matchedDn.map(dn =>
+            s"""Found dn "$dn" when sync says it should be new"""))
+        else if (n >= 1 && !isInsert && first) kernelWarning
+        else if (n == 0 && !isDelete) Some(s"Record $uid not existing in DB")
+        else None
+      val warn = (baseW ++ syncW).mkString("\n")
+      val attemptNow = e.attempt_now.get
+      val hasErr = kernelError.isDefined && n >= 1
+      val status =
+        if (hasErr && attemptNow > 10) "F" else if (hasErr) "E"
+        else if (warn.nonEmpty) "W" else "S"
+      Row(rid, status,
+        if (hasErr) kernelError.get else if (warn.nonEmpty) warn else null,
+        if (hasErr) (attemptNow + 1).toDouble else null, readTime)
+    }
+    val fRows = evs.filter(_.v_error.isDefined).map(e =>
+      Row(e.record_id.get, "F", e.v_error.get, null, null))
+    val updates = spark.createDataFrame(
+      java.util.Arrays.asList((evRows ++ fRows): _*), updateSchema)
+    val renames = outcomes.filter(_.renameOldCn.isDefined)
+      .map(o => (o.renameOldCn.get, o.srcCn)).toDF("old_cn", "new_cn")
+
+    // 5 — the snapshot: one anti-filter pass plus the local upserts. A
+    // checkpointed snapshot (the poll loop's) is coalesced back to its
+    // partition count, or the upserts' own partitions pile up over the
+    // loop's cycles; that count is known without a job only there
+    // (`Dataset.rdd` would run the plan of any other snapshot).
+    val (dropped, upserts) = dir.diff
+    val merged = snap1
+      .filter(!coalesce(col("dn").isInCollection(dropped), lit(false)))
+      .union(spark.createDataset(upserts))
+    val snapshot = snapshot0.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        merged.coalesce(r.rdd.getNumPartitions)
+      case _ => merged
+    }
+
+    Cdc.CycleResult(snapshot, Cdc.writeback(eventlog, broadcast(updates)),
+      updates, renames)(() => evs.size.toLong, () => outcomes.exists(_.renameOldCn.isDefined))
+  }
+
+  private val updateSchema = StructType(Seq(
+    StructField("record_id", DoubleType), StructField("new_status", StringType),
+    StructField("new_error", StringType), StructField("new_attempt", DoubleType),
+    StructField("new_read", TimestampType)))
+
+  /** The snapshot entries the cycle has read, with its changes applied
+    * in place. `diff` gives the fetched dns that changed or went, and the
+    * entries to write in their place.
+    */
+  private final class Overlay(fetched0: Seq[Entry]) {
+    private val fetched = mutable.Map.empty[String, Map[String, Seq[String]]]
+    val entries = mutable.LinkedHashMap.empty[String, Map[String, Seq[String]]]
+    fetch(fetched0)
+
+    /** Entries read from the GC'd snapshot; one already read keeps its
+      * current state.
+      */
+    def fetch(es: Seq[Entry]): Unit = {
+      if (es.map(_.dn).distinct.size != es.size)
+        throw new Unmodelled("a dn occurs twice in the snapshot")
+      es.filterNot(e => fetched.contains(e.dn)).foreach { e =>
+        if (entries.contains(e.dn))
+          throw new Unmodelled(s"a change lands on the existing dn ${e.dn}")
+        fetched(e.dn) = e.attrs
+        entries(e.dn) = e.attrs
+      }
+    }
+    def remove(dn: String): Unit = entries.remove(dn)
+    def put(dn: String, attrs: Map[String, Seq[String]]): Unit = entries(dn) = attrs
+    /** A new dn; one that exists would be a second row set-based. */
+    def add(dn: String, attrs: Map[String, Seq[String]]): Unit = {
+      if (entries.contains(dn))
+        throw new Unmodelled(s"a change lands on the existing dn $dn")
+      entries(dn) = attrs
+    }
+    def diff: (Seq[String], Seq[Entry]) = (
+      fetched.keys.filter(dn => !entries.get(dn).contains(fetched(dn))).toSeq,
+      entries.collect { case (dn, a) if !fetched.get(dn).contains(a) => Entry(dn, a) }.toSeq)
   }
 }

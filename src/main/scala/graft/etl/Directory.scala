@@ -24,11 +24,21 @@ object Directory {
 
   // ---- dn algebra (reference etl.py:79–81, 1095, ldaptest.py:142–146) --
 
-  def parentDn(dn: String): String = dn.split(",", 2) match {
-    case Array(_, rest) => rest
-    case _ => ""
+  /** The dn's parent and its rdn's value, as the Column forms below
+    * compute them: a dn without ',' is its own parent, and one without
+    * '=' has the rdn value "".
+    */
+  def parentDn(dn: String): String = {
+    val i = dn.indexOf(',')
+    if (i < 0) dn else dn.substring(i + 1)
   }
-  def rdnValue(dn: String): String = dn.split(",", 2)(0).split("=", 2)(1)
+  def rdnValue(dn: String): String = {
+    val i = dn.indexOf('=')
+    if (i < 0) "" else {
+      val j = dn.indexOf(',', i + 1)
+      dn.substring(i + 1, if (j < 0) dn.length else j)
+    }
+  }
 
   /** Column forms for set-based use. */
   def parentDnCol(dn: Column): Column = regexp_replace(dn, "^[^,]*,", "")

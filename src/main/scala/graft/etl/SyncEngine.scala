@@ -28,11 +28,14 @@ case class EtlConf(
   * The reference syncs one row at a time with two network round-trips per
   * row (etl.py:923–1110). Here the *matching* is two shuffling joins
   * (cn-equi join, then uid-equi join for the misses — J2) and the
-  * *diff/apply* is a row-local typed kernel (`mergeOne`) that reproduces
-  * the reference's field-level diff semantics exactly (compare-under-old-
-  * IV passwords, attribute deletes on NULL, resurrection, rename-on-cn-
-  * change). Row-local ⇒ embarrassingly parallel ⇒ scales with executors;
-  * the joins are the only shuffles.
+  * *diff/apply* is a row-local kernel that reproduces the reference's
+  * field-level diff semantics exactly (compare-under-old-IV passwords,
+  * attribute deletes on NULL, resurrection, rename-on-cn-change). The
+  * kernel exists twice: typed (`mergeOne`, the capped CDC cycle's kernel
+  * on the driver) and as column expressions (`mergeRowsPlan`, whole-stage
+  * codegen for loads and unbounded drains); MergeKernelEquivalenceSpec
+  * proves them pointwise equal. Row-local ⇒ embarrassingly parallel ⇒
+  * scales with executors; the joins are the only shuffles.
   */
 object SyncEngine {
 
@@ -221,8 +224,8 @@ object SyncEngine {
     * diff loop unrolls into one fixed expression per source field, AES
     * goes through Spark's built-in `aes_encrypt` (ConvertF.fromPassword),
     * and the whole kernel stays inside whole-stage codegen. This is the
-    * engine's hot path on every load and every CDC cycle; the typed
-    * kernel above is retained as its executable specification
+    * engine's hot path on every load and every unbounded CDC drain; the
+    * typed kernel above runs the capped cycles on the driver
     * (MergeKernelEquivalenceSpec proves them pointwise equal).
     *
     * Input: the camelCase matched columns (srcCn, srcUid, pwPlain,
@@ -393,8 +396,13 @@ object SyncEngine {
     */
   val cnDedupOrder: Seq[Column] = Seq(
     col("src_uid").cast("long").desc_nulls_last,
-    xxhash64(to_json(col("new_attrs"))).desc,
+    cnDedupHash.desc,
     col("pw_plain").desc_nulls_last)
+
+  /** The content hash of `cnDedupOrder`; the capped cycle collects it as
+    * a column, so the driver orders by the same value.
+    */
+  def cnDedupHash: Column = xxhash64(to_json(col("new_attrs")))
 
   /** Two-key priority match (J2) + merge. `newRows` needs the columns of
     * `toNewRows` plus a boolean `is_new`.
@@ -470,10 +478,11 @@ object SyncEngine {
 
     // materialize once: the rows feed the snapshot apply, the status
     // matrix, the rename queue and the write-through — without this the
-    // two match joins + kernel re-execute per consumer (~5×). Lazy:
-    // the first consuming job computes it in-line (no dedicated
-    // up-front job per merge — the CDC cycle constant), later jobs
-    // reuse the stored partitions.
+    // two match joins + kernel re-execute per consumer (~5×). The
+    // checkpoint is lazy in name only: under AQE the call itself runs
+    // every shuffle and broadcast stage of the plan (7 jobs in a CDC
+    // cycle) before any consumer does; later jobs reuse the stored
+    // partitions.
     val mergeRows = mergeRowsPlan(matched, conf).as[MergeRow]
       .localCheckpoint(false)
     (applyMerge(snapshot, mergeRows), mergeRows)

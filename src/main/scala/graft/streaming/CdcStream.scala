@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation}
 import graft.etl._
 import graft.etl.Directory.Entry
 
@@ -35,20 +35,26 @@ object CdcStream {
   /** One (baseDn, db) source; `key` selects its eventlog in LoopState. */
   case class Source(conf: EtlConf, users: () => DataFrame, key: String = "postgres")
 
+  /** `backlog`: the N/E events each source's eventlog held after its
+    * last cycle (`Long.MaxValue` for a source that failed).
+    */
   case class LoopState(
       snapshot: Dataset[Entry],
       eventlogs: Map[String, DataFrame],
       cyclesRun: Int,
       sleeps: Int,
       sourceErrors: Map[String, Int] = Map.empty,
-      lastErrors: Map[String, String] = Map.empty)
+      lastErrors: Map[String, String] = Map.empty,
+      backlog: Map[String, Long] = Map.empty)
 
   /** Structured-Streaming form of the CDC loop: eventlog files appended
     * to a directory become micro-batches; `foreachBatch` folds each
     * batch through `Cdc.cycle` against the current user table, holding
     * the snapshot in an atomic reference (at cluster scale this state
     * would live in the copy-on-write snapshot store — Directory.save —
-    * with the stream checkpoint carrying only source offsets).
+    * with the stream checkpoint carrying only source offsets). The
+    * trigger's file is the unit of work, so each micro-batch runs
+    * unbounded: every pending event in it gets a verdict.
     */
   def startStreaming(
       spark: org.apache.spark.sql.SparkSession,
@@ -77,11 +83,11 @@ object CdcStream {
           df.withColumn(c, when(col(c).isNotNull, rpad(col(c), 3, " "))))
         val n = batchNo.incrementAndGet()
         val r = Cdc.cycle(state.get(), users(), padded,
-          conf.copy(etlTimestamp = f"stream$n%04d"))
+          conf.copy(etlTimestamp = f"stream$n%04d"), maxRecords = Int.MaxValue)
         // streaming parity with the poll loop: queued cn renames
         // propagate into the ph15 twin tree at the end of each batch
         val withRenames =
-          if (conf.ph15Dn.isDefined && !r.renames.isEmpty)
+          if (conf.ph15Dn.isDefined && r.renameQueued)
             Cdc.updatePh15Cn(r.snapshot, users(), r.renames,
               conf.copy(baseDn = conf.ph15Dn.get))
           else r.snapshot
@@ -107,8 +113,9 @@ object CdcStream {
       sleeper: () => Unit = () => Thread.sleep(20000),
       heartbeat: Option[java.nio.file.Path] = None): LoopState = {
     import org.apache.spark.sql.functions._
-    def pending(df: DataFrame): Long =
-      df.filter(rtrim(col("status")).isin("N", "E")).count()
+    // the ph15 rename pass drains the queue; without a ph15 source
+    // nothing is queued
+    val ph15Source = sources.find(_.conf.isPh15)
     var st = state0
     var done = false
     while (!done && st.cyclesRun < maxCycles) {
@@ -133,18 +140,23 @@ object CdcStream {
           val r = Cdc.cycle(st.snapshot, src.users(), elog, conf, maxRecords)
           // accumulate across sources (the reference's ph15_change_dn
           // dict grows over the whole cycle and is drained once)
-          if (!r.renames.isEmpty)
+          if (ph15Source.isDefined && r.renameQueued)
             renameQueue = Some(renameQueue
               .map(_.unionByName(r.renames).distinct())
               .getOrElse(r.renames))
-          val elogNew = r.eventlog.localCheckpoint(true)
+          // the post-cycle backlog is observed on the checkpoint's own
+          // pass over the eventlog, not counted by a job of its own
+          val backlogObs = Observation()
+          val elogNew = r.eventlog
+            .observe(backlogObs, count(when(rtrim(col("status")).isin("N", "E"), 1))
+              .as("pending"))
+            .localCheckpoint(true)
           st = st.copy(
             snapshot = r.snapshot.localCheckpoint(true),
             eventlogs = st.eventlogs + (src.key -> elogNew))
-          backlog += src.key -> pending(elogNew)
+          backlog += src.key -> backlogObs.get("pending").asInstanceOf[Long]
           // full batch ⇔ the cycle selected exactly maxRecords events
-          // (eventUpdates carries one verdict per selected event)
-          if (r.eventUpdates.count() >= maxRecords) anyFull = true
+          if (r.selected >= maxRecords) anyFull = true
         } catch {
           case scala.util.control.NonFatal(e) =>
             // retain the cause — a silently spinning loop is
@@ -160,13 +172,13 @@ object CdcStream {
       }
       // C3 — end-of-cycle ph15 rename pass (etl.py:411–418)
       renameQueue.foreach { rq =>
-        sources.find(_.conf.isPh15).foreach { p15 =>
+        ph15Source.foreach { p15 =>
           st = st.copy(snapshot = Cdc
             .updatePh15Cn(st.snapshot, p15.users(), rq, p15.conf)
             .localCheckpoint(true))
         }
       }
-      st = st.copy(cyclesRun = st.cyclesRun + 1)
+      st = st.copy(cyclesRun = st.cyclesRun + 1, backlog = st.backlog ++ backlog)
       // reuse the per-source backlog counts gathered above (one scan per
       // source per cycle, not two); eventlogs without a source row this
       // cycle are unreachable and excluded by construction. An empty

@@ -1,0 +1,134 @@
+package graft.etl
+
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.scalatest.funsuite.AnyFunSuite
+import graft.streaming.CdcStream
+
+/** What one `CdcStream.run` cycle costs, what it reports, and the
+  * streaming form's unit of work, on the in-repo fixture.
+  */
+class CdcStreamCycleSpec extends AnyFunSuite {
+  import CdcStreamCycleSpec._
+
+  private val conf = Fixture.conf.copy(ph15Dn = Some(Fixture.ph15))
+
+  test("a capped poll cycle runs at most 12 jobs and, once warm, compiles at most 20 classes") {
+    val spark = TestSpark.spark
+    val sc = spark.sparkContext
+    val users0 = Fixture.users(spark).collect().toSeq
+    var st = CdcStream.LoopState(Fixture.twoTree(spark), Map("postgres" -> noEvents), 0, 0)
+    val jobs = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // one cycle per version: 12 name changes (one a write-through), a
+    // rename, a delete with a ph15 twin and an invalid event
+    val perCycle = (1 to 3).map { v =>
+      val (users, events) = version(users0, v)
+      st = st.copy(eventlogs = Map("postgres" -> st.eventlogs("postgres")
+        .unionByName(events).localCheckpoint(true)))
+      org.apache.spark.BusDrain(sc)
+      val (j0, c0) = (jobs.get, compiles)
+      sc.addSparkListener(listener)
+      try {
+        st = CdcStream.run(st, Seq(CdcStream.Source(conf, () => users)),
+          maxRecords = 100, maxCycles = st.cyclesRun + 1, sleeper = () => ())
+        org.apache.spark.BusDrain(sc)
+      } finally sc.removeSparkListener(listener)
+      assert(st.sourceErrors.isEmpty, st.lastErrors)
+      (jobs.get - j0, compiles - c0)
+    }
+    info(s"(jobs, compiles) per cycle: $perCycle")
+    perCycle.foreach { case (j, _) => assert(j <= 12, s"jobs per cycle: $perCycle") }
+    assert(perCycle(2)._2 <= 20, s"(jobs, compiles) per cycle: $perCycle")
+  }
+
+  test("the observed backlog equals a direct count of N/E events") {
+    val spark = TestSpark.spark
+    val users0 = Fixture.users(spark).collect().toSeq
+    val (users, events) = version(users0, 1)
+    var st = CdcStream.LoopState(Fixture.twoTree(spark),
+      Map("postgres" -> events.localCheckpoint(true)), 0, 0)
+    val src = Seq(CdcStream.Source(conf, () => users))
+    val direct = (df: DataFrame) =>
+      df.filter(rtrim(col("status")).isin("N", "E")).count()
+    // 15 events at 10 per cycle: a backlog, then none
+    for (left <- Seq(true, false)) {
+      st = CdcStream.run(st, src, maxRecords = 10, maxCycles = st.cyclesRun + 1,
+        sleeper = () => ())
+      assert(st.backlog("postgres") == direct(st.eventlogs("postgres")))
+      assert((st.backlog("postgres") > 0) == left, st.backlog)
+    }
+    // an empty eventlog is observed too
+    st = CdcStream.run(st.copy(eventlogs = Map("postgres" -> noEvents)), src,
+      maxCycles = st.cyclesRun + 1, sleeper = () => ())
+    assert(st.backlog("postgres") == 0)
+  }
+
+  test("a streamed micro-batch gets a verdict for every event in it") {
+    val spark = TestSpark.spark
+    val dir = java.nio.file.Files.createTempDirectory("graft-cdc-stream")
+    val staged = java.nio.file.Files.createTempFile("graft-cdc-events", ".csv")
+    val uids = Fixture.users(spark).select("pk_uniqueid").distinct()
+      .collect().map(_.getDouble(0).toLong).sorted
+    val lines = (1 to 150).map { i =>
+      s"$i.0;pk_uniqueid=${uids(i % uids.length)};N  ;6.0;2017-07-11 10:15:02;" +
+        "TEST;benutzer_alle_dirxml_v;;;;;N  ;N  ;;;;N  "
+    }
+    java.nio.file.Files.write(staged, java.util.Arrays.asList(
+      (EtlSchema.eventFields.mkString(";") +: lines): _*))
+    val verdicts = new AtomicLong
+    val (q, _) = CdcStream.startStreaming(spark, Fixture.twoTree(spark),
+      () => Fixture.users(spark), dir.toString, conf,
+      onCycle = r => verdicts.addAndGet(r.eventUpdates.count()))
+    try {
+      java.nio.file.Files.move(staged, dir.resolve("events.csv"))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(verdicts.get == 150)
+  }
+}
+
+object CdcStreamCycleSpec {
+  private val idx = EtlSchema.userFields.zipWithIndex.toMap
+
+  def noEvents: DataFrame = TestSpark.spark.createDataFrame(
+    java.util.List.of[Row](), EtlSchema.eventSchema)
+
+  /** User table version `v` of the fixture and the events that describe
+    * the change from version v-1: 12 uids get a new vorname, one is
+    * renamed, one is deleted; plus one invalid event. The caesar trio
+    * (uid 1) is left alone.
+    */
+  def version(users0: Seq[Row], v: Int): (DataFrame, DataFrame) = {
+    val spark = TestSpark.spark
+    val uid = (r: Row) => r.getDouble(idx("pk_uniqueid")).toLong
+    val singles = users0.map(uid).filter(_ > 1).distinct.sorted
+    val deleted = singles.takeRight(3).take(v)
+    val renamed = singles.slice(v, v + 1)
+    val updated = singles.drop(4).take(12)
+    def set(r: Row, k: String, x: Any) = Row.fromSeq(r.toSeq.updated(idx(k), x))
+    val rows = users0.filterNot(r => deleted.contains(uid(r))).map { r =>
+      val u = uid(r)
+      val named = if (updated.contains(u)) set(r, "vorname", s"V$v$u") else r
+      if (renamed.contains(u)) set(named, "benutzername", s"ren$v.$u") else named
+    }
+    def event(rid: Double, key: String, typ: Double) = Row(rid, key, "N  ", typ,
+      java.sql.Timestamp.valueOf("2017-07-11 10:00:00"), "TEST",
+      "benutzer_alle_dirxml_v", null, null, null, null, "N  ", "N  ", null,
+      null, null, "N  ")
+    val base = v * 1000.0
+    val evs = (updated ++ renamed).zipWithIndex.map { case (u, i) =>
+      event(base + i, s"pk_uniqueid=$u", 6.0) } ++
+      Seq(event(base + 100, s"pk_uniqueid=${deleted.last}", 4.0),
+        event(base + 101, "pk_uniqueid=x", 6.0))
+    (spark.createDataFrame(java.util.Arrays.asList(rows: _*), EtlSchema.userSchema)
+      .localCheckpoint(true),
+      spark.createDataFrame(java.util.Arrays.asList(evs: _*), EtlSchema.eventSchema))
+  }
+}

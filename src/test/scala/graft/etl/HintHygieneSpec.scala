@@ -60,10 +60,15 @@ class HintHygieneSpec extends AnyFunSuite {
         mkEvent(2.0, "424242")))  // absent → anti-join delete-mark path
         .toDF(EtlSchema.eventFields: _*)
 
-      val r = Cdc.cycle(pre.snapshot, users, elog, conf)
-      r.snapshot.count()
-      r.eventUpdates.count()
-      r.eventlog.count()
+      // both paths: `Cdc.cycle` at its default cap runs the capped one;
+      // the set-based one carries the hinted semi-join
+      val readTime = java.sql.Timestamp.valueOf("2017-07-11 10:00:00")
+      for (r <- Seq(Cdc.cycle(pre.snapshot, users, elog, conf),
+          Cdc.cycleSetBased(pre.snapshot, users, elog, conf, 100, readTime))) {
+        r.snapshot.count()
+        r.eventUpdates.count()
+        r.eventlog.count()
+      }
 
       val hits = cap.messages.toArray(Array.empty[String])
         .filter(m => m.contains("not supported") || m.contains("Hint"))

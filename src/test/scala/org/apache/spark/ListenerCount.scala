@@ -6,3 +6,10 @@ package org.apache.spark
 object ListenerCount {
   def of(sc: SparkContext): Int = sc.listenerBus.listeners.size
 }
+
+/** Waits until the listener bus has delivered every posted event: the
+  * bus is asynchronous, and its wait is package-private.
+  */
+object BusDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}

@@ -8,9 +8,14 @@ Reads each <verifyOutDir>/<name> parquet dir (written by graft.Verify),
 runs the matching SQL from oracle_sql.json in DuckDB against the same
 parquet tables, sorts columns by name and rows by value, and compares
 cell-exactly. Exit code 1 if any query mismatches.
+
+Each oracle runs once, into a DuckDB temp table that both the compare
+and tools/dtype_audit.py's dtype audit read; the audit's report follows
+the compare's, and exit code 1 also if the audit fails.
 """
 import sys, os, json, glob
 import duckdb
+import dtype_audit
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -32,6 +37,7 @@ def main(sf_dir, out_dir):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_ok = n_bad = n_skip = 0
+    dangerous, benign, errs = [], [], []
     for name in sorted(os.listdir(out_dir)):
         d = os.path.join(out_dir, name)
         if not os.path.isdir(d):
@@ -40,6 +46,8 @@ def main(sf_dir, out_dir):
         if not files:
             print(f"[MISS] {name}: no parquet written")
             n_bad += 1
+            if name in oracle:
+                errs.append((name, "no parquet written"))
             continue
         got_rel = con.sql(f"SELECT * FROM read_parquet({files!r})")
         if name not in oracle:
@@ -47,11 +55,16 @@ def main(sf_dir, out_dir):
             n_skip += 1
             continue
         try:
-            exp_rel = con.sql(oracle[name])
+            con.execute("CREATE OR REPLACE TEMP TABLE oracle_result AS "
+                        + oracle[name])
         except Exception as e:
             print(f"[FAIL] {name}: oracle SQL error: {e}")
+            errs.append((name, str(e)[:100]))
             n_bad += 1
             continue
+        exp_rel = con.table("oracle_result")
+        dtype_audit.audit(name, got_rel.df(), exp_rel.df(),
+                          dangerous, benign, errs)
         got_cols = sorted(got_rel.columns)
         exp_cols = sorted(exp_rel.columns)
         if [c.lower() for c in got_cols] != [c.lower() for c in exp_cols]:
@@ -96,7 +109,8 @@ def main(sf_dir, out_dir):
                 print(f"         duck-only : {r}")
             n_bad += 1
     print(f"== {n_ok} ok, {n_bad} bad, {n_skip} rows-only")
-    return 1 if n_bad else 0
+    failed = dtype_audit.report(dangerous, benign, errs, len(oracle))
+    return 1 if n_bad or failed else 0
 
 
 if __name__ == "__main__":

@@ -1,8 +1,5 @@
-#!/usr/bin/env python3
 """Driver-hash dtype audit (dev-only tooling; the shipped engine is the
 Scala tree under src/).
-
-Usage: python3 tools/dtype_audit.py <sfDir> <verifyOutDir>
 
 The driver's correctness gate hashes pandas values and is TYPE-
 sensitive in one specific way: a column that lands as `object` on one
@@ -18,14 +15,10 @@ KIND classes:
     STRING or ::BIGINT on BOTH sides)
   - float vs integer (a 3.0-vs-3 repr/hash hazard)
 
-Exit 1 if any dangerous mismatch exists. Run it after graft.Verify on
-any round that adds or retypes an output column.
+`tools/check.py` runs this audit on every query, over the oracle
+results its compare has already replayed, and exits 1 if any dangerous
+mismatch exists.
 """
-import sys, os, json, glob
-import duckdb
-
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
 
 
 def kind(dtype: str) -> str:
@@ -42,42 +35,28 @@ def kind(dtype: str) -> str:
     return dtype
 
 
-def main(sf_dir, out_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    dangerous, benign, errs = [], [], []
-    for name in sorted(os.listdir(out_dir)):
-        d = os.path.join(out_dir, name)
-        if not os.path.isdir(d) or name not in oracle:
-            continue
-        files = glob.glob(f"{d}/*.parquet")
-        try:
-            sdf = con.sql(f"SELECT * FROM read_parquet({files!r})").df()
-            odf = con.sql(oracle[name]).df()
-        except Exception as e:
-            errs.append((name, str(e)[:100]))
-            continue
-        s = dict(sdf.dtypes.astype(str))
-        o = dict(odf.dtypes.astype(str))
-        # a column on only one side is name drift between the engine and
-        # the oracle output — report it, don't silently skip it (the
-        # driver's compare would fail on it anyway; this keeps the audit
-        # a superset of what can go red)
-        for c in sorted(s.keys() ^ o.keys()):
-            errs.append((name, f"column {c!r} only on "
-                         f"{'spark' if c in s else 'oracle'} side"))
-        for c in s:
-            if c in o and s[c] != o[c]:
-                row = (name, c, s[c], o[c])
-                if kind(s[c]) != kind(o[c]):
-                    dangerous.append(row)
-                else:
-                    benign.append(row)
+def audit(name, sdf, odf, dangerous, benign, errs):
+    """Compare one query's Spark-side and oracle-side pandas dtypes."""
+    s = dict(sdf.dtypes.astype(str))
+    o = dict(odf.dtypes.astype(str))
+    # a column on only one side is name drift between the engine and
+    # the oracle output — report it, don't silently skip it (the
+    # driver's compare would fail on it anyway; this keeps the audit
+    # a superset of what can go red)
+    for c in sorted(s.keys() ^ o.keys()):
+        errs.append((name, f"column {c!r} only on "
+                     f"{'spark' if c in s else 'oracle'} side"))
+    for c in s:
+        if c in o and s[c] != o[c]:
+            row = (name, c, s[c], o[c])
+            if kind(s[c]) != kind(o[c]):
+                dangerous.append(row)
+            else:
+                benign.append(row)
+
+
+def report(dangerous, benign, errs, n_oracled):
+    """Print the audit; returns 1 if anything is dangerous or failed."""
     for n, c, a, b in dangerous:
         print(f"[DANGER] {n}.{c}: spark={a} oracle={b} — hash-unstable "
               "kind mismatch; emit a canonical STRING/::BIGINT both sides")
@@ -86,9 +65,5 @@ def main(sf_dir, out_dir):
     for n, e in errs:
         print(f"[ ERR  ] {n}: {e}")
     print(f"== {len(dangerous)} dangerous, {len(benign)} width-only, "
-          f"{len(errs)} errors across {len(oracle)} oracled queries")
-    sys.exit(1 if dangerous or errs else 0)
-
-
-if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2])
+          f"{len(errs)} errors across {n_oracled} oracled queries")
+    return 1 if dangerous or errs else 0

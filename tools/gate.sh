@@ -3,11 +3,12 @@
 # Scala tree under src/). Runs, at ALL THREE SFs:
 #
 #   1. graft.Verify        — dump every registered query + oracle_sql.json
-#   2. tools/check.py      — DuckDB oracle replay, cell-exact compare
-#   3. tools/dtype_audit.py — driver-hash dtype KIND audit (round 16:
-#      wired in here so a dangerous object-vs-numeric split blocks the
-#      round locally instead of shipping to the driver's hash gate —
-#      the round-6 HUGEINT / round-14 DECIMAL(38,0) family)
+#   2. tools/check.py      — DuckDB oracle replay, cell-exact compare,
+#      and the driver-hash dtype KIND audit of tools/dtype_audit.py on
+#      the same replayed oracle results (each oracle runs once); a
+#      dangerous object-vs-numeric split blocks the round locally
+#      instead of shipping to the driver's hash gate — the round-6
+#      HUGEINT / round-14 DECIMAL(38,0) family
 #
 # Any failure exits nonzero and blocks the round. The check + audit
 # transcript is recorded to GATE_LAST.log at the repo root (committed
@@ -30,10 +31,7 @@ cd "$(dirname "$0")/.." || exit 1
     fi
     echo "+ check.py $dir"
     python3 tools/check.py "$dir" "$out" \
-      || { echo "GATE FAIL: oracle check at $dir"; exit 1; }
-    echo "+ dtype_audit.py $dir"
-    python3 tools/dtype_audit.py "$dir" "$out" \
-      || { echo "GATE FAIL: dtype audit at $dir"; exit 1; }
+      || { echo "GATE FAIL: oracle check or dtype audit at $dir"; exit 1; }
   done
   echo "GATE OK: verify + oracle check + dtype audit green at sf0.001/sf0.01/sf0.1"
 } 2>&1 | tee GATE_LAST.log
