@@ -23,18 +23,23 @@ import SyncEngine.{MatchIn, MergeRow}
   * still produces a verdict per event (sequencing within a uid is
   * reconstructed from record_id order — SURVEY.md §4.3).
   *
-  * Two paths compute the same cycle; `driverBatchBound` on `maxRecords`
-  * selects between them:
-  *  - capped (`maxRecords <= driverBatchBound`, the poll loop's 100):
-  *    `CappedCycle` collects the batch, its user rows and the snapshot
-  *    entries they touch, computes the cycle on the driver with the typed
-  *    kernel (`SyncEngine.mergeOne`), and applies it with one pass over
-  *    the snapshot and one over the eventlog. Its cost follows the batch,
-  *    and its handful of plans keep one shape from cycle to cycle, so the
-  *    generated code is reused.
-  *  - set-based (`cycleSetBased`, unbounded drains): matching, merge,
+  * Two paths compute the same cycle; the batch the cycle selected, not
+  * the cap, chooses between them:
+  *  - on the driver (`CappedCycle`), whenever the selected batch holds at
+  *    most `driverEventBound` events on at most `driverBatchBound`
+  *    distinct valid uids, capped or not (the poll loop's 100, an
+  *    outage drain, a streaming micro-batch): it collects the batch, its
+  *    user rows and the snapshot entries they touch, computes the cycle
+  *    with the typed kernel (`SyncEngine.mergeOne`), and applies it with
+  *    one pass over the snapshot and one over the eventlog. Its cost
+  *    follows the batch, and its handful of plans keep one shape from
+  *    cycle to cycle, so the generated code is reused.
+  *  - set-based (`cycleSetBased`), for a batch over either bound and for
+  *    the states the driver path does not model: matching, merge,
   *    deletes and the status matrix as joins and aggregations over the
   *    whole batch, with the column kernel (`SyncEngine.mergeRowsPlan`).
+  *    Reaching it from an over-bound batch costs one wasted collect of
+  *    at most `driverEventBound + 1` events.
   *
   * Both share the batch selection and validation, the source-row
   * conversion, the GC filter and the eventlog writeback.
@@ -47,15 +52,33 @@ object Cdc {
     */
   val broadcastUidBound: Int = 1 << 20
 
-  /** Largest batch cap that runs on the driver (`CappedCycle`). The
-    * collected inputs grow with the cap; at this one the capped cycle
-    * still wins: a poll cycle of 10,000 events on 37,678 users took
-    * 5.2–5.5 s capped and 11.4–12.6 s set-based (syncbench's poll
-    * workload at a 10,000-event cap, 4 cores), and the capped run also
-    * passed in a 2 GB heap. Larger caps, unbounded drains among them,
-    * run set-based.
+  /** Most distinct valid uids a batch may hold and run on the driver
+    * (`CappedCycle`). The driver-held inputs that grow with a batch, its
+    * user rows and the snapshot entries it touches, grow with its
+    * distinct uids, not with its events. Measured near this bound: a poll
+    * cycle of 10,000 events on 8,888–8,971 distinct uids at 37,678 users
+    * took 5.2–5.5 s on the driver against 11.4–12.6 s set-based
+    * (syncbench's poll workload at a 10,000-event cap, seeds 101–103,
+    * 4 cores), and also passed in a 2 GB heap. A batch over the bound
+    * runs set-based.
     */
   val driverBatchBound: Int = 10000
+
+  /** Most events a batch may hold and run on the driver; the driver holds
+    * five scalars per event (`CappedCycle.Ev`) and one verdict row.
+    * Measured at 37,678 users with syncbench's bulk drain (`Sizes(users =
+    * 37678, bulkEvents = n)`, Zipf-skewed, 4 cores, one run each), the
+    * driver path against the set-based one: 20,000 events on 7,741 uids
+    * took 6.6 s against 15.6 s, 50,000 on 16,002 uids 10.9 s against
+    * 25.2 s, and 100,000 on 26,663 uids 17.7 s against 28.8 s (seed 101;
+    * the two larger runs with both bounds lifted, so they load the driver
+    * with more uids than the bounds admit). In a 2 GB heap, 20,000 events
+    * on 7,752 uids took 8.8 s at these bounds, and 100,000 on 26,436 uids
+    * 21.0 s with both lifted, with at most 1,521 and 1,984 MB of heap in
+    * use over the whole run (seed 102). A batch over the bound runs
+    * set-based, after one wasted collect of `driverEventBound + 1` events.
+    */
+  val driverEventBound: Int = 100000
 
   /** `selected` (events the cycle selected) and `renameQueued` (whether
     * `renames` is non-empty) are driver values on the capped path; on the
@@ -82,14 +105,21 @@ object Cdc {
       conf: EtlConf, maxRecords: Int = 100,
       readTime: java.sql.Timestamp = new java.sql.Timestamp(System.currentTimeMillis / 1000 * 1000))
       : CycleResult =
-    if (maxRecords > driverBatchBound)
-      cycleSetBased(snapshot0, users, eventlog, conf, maxRecords, readTime)
-    else
-      try CappedCycle.run(snapshot0, users, eventlog, conf, maxRecords, readTime)
-      catch {
-        case _: CappedCycle.Unmodelled =>
-          cycleSetBased(snapshot0, users, eventlog, conf, maxRecords, readTime)
-      }
+    boundedCycle(snapshot0, users, eventlog, conf, maxRecords, readTime,
+      driverEventBound, driverBatchBound)
+
+  /** `cycle` with the driver path's bounds as parameters, so that a test
+    * can lower them.
+    */
+  private[etl] def boundedCycle(snapshot0: Dataset[Entry], users: DataFrame,
+      eventlog: DataFrame, conf: EtlConf, maxRecords: Int,
+      readTime: java.sql.Timestamp, eventBound: Int, uidBound: Int): CycleResult =
+    try CappedCycle.run(snapshot0, users, eventlog, conf, maxRecords, readTime,
+      eventBound, uidBound)
+    catch {
+      case _: CappedCycle.Unmodelled =>
+        cycleSetBased(snapshot0, users, eventlog, conf, maxRecords, readTime)
+    }
 
   /** C6 — collect already-ETD-synced deleted entries at cycle start; the
     * reference never garbage-collects the ph15 instance itself
@@ -154,8 +184,8 @@ object Cdc {
       .select(EtlSchema.eventFields.map(col): _*)
 
   /** The set-based cycle: every step a join or aggregation over the whole
-    * batch. `cycle` runs it for caps above `driverBatchBound` and for the
-    * states the capped path does not model.
+    * batch. `cycle` runs it for a batch over the driver path's bounds and
+    * for the states the driver path does not model.
     */
   private[etl] def cycleSetBased(snapshot0: Dataset[Entry], users: DataFrame,
       eventlog: DataFrame, conf: EtlConf, maxRecords: Int,
@@ -476,13 +506,15 @@ object Cdc {
   }
 }
 
-/** The capped CDC cycle (`Cdc.cycle` with `maxRecords <=
-  * Cdc.driverBatchBound`): the cycle's inputs are batch-sized, so they
+/** The CDC cycle on the driver (`Cdc.cycle` for a batch within
+  * `Cdc.driverEventBound` events and `Cdc.driverBatchBound` distinct
+  * uids, whatever its cap): the cycle's inputs are batch-sized, so they
   * are collected and the cycle is computed on the driver, with the
   * semantics of `Cdc.cycleSetBased` step for step. Spark runs:
   *
   *  1. the batch selection and validation (shared with the set-based
-  *     path), collected;
+  *     path), collected; past a cap above the event bound, only to one
+  *     event over it, and a batch over either bound throws `Unmodelled`;
   *  2. the batch's user rows (`SyncEngine.toNewRows`, with the cn-dedup
   *     content hash), collected;
   *  3. the entries of the GC'd snapshot the batch touches: lower(rdn) is
@@ -504,8 +536,9 @@ object Cdc {
   * The snapshot's `dn` is unique (the Directory invariant). A state the
   * set-based path would turn into duplicate rows — a duplicate dn, a
   * change landing on an existing dn, two write-through patches for one
-  * twin — or a batch with a null record_id is not modelled here: `run`
-  * throws `Unmodelled` and `Cdc.cycle` runs the set-based path instead.
+  * twin — or a batch with a null record_id is not modelled here, and
+  * neither is a batch over the bounds: `run` throws `Unmodelled` and
+  * `Cdc.cycle` runs the set-based path instead.
   */
 private[etl] object CappedCycle {
 
@@ -545,23 +578,31 @@ private[etl] object CappedCycle {
     xs.reduceOption((a, b) => if (utf8Order.gteq(a, b)) a else b)
 
   def run(snapshot0: Dataset[Entry], users: DataFrame, eventlog: DataFrame,
-      conf: EtlConf, maxRecords: Int, readTime: java.sql.Timestamp)
+      conf: EtlConf, maxRecords: Int, readTime: java.sql.Timestamp,
+      eventBound: Int = Cdc.driverEventBound, uidBound: Int = Cdc.driverBatchBound)
       : Cdc.CycleResult = {
     val spark = snapshot0.sparkSession
     import spark.implicits._
     val snap1 = Cdc.collectGarbage(snapshot0, conf)
 
-    // 1 — the batch
-    val evs = Cdc.validate(Cdc.selectBatch(eventlog, maxRecords), conf)
+    // 1 — the batch; past a cap above the event bound, read to one event
+    // over it
+    val batch = Cdc.validate(Cdc.selectBatch(eventlog, maxRecords), conf)
       .select(col("record_id"), col("v_error"), col("uid"),
         col("event_type"),
         when(col("v_error").isNull,
           coalesce(col("attempt"), lit(0.0)).cast("int")).as("attempt_now"))
-      .as[Ev].collect().toSeq
+      .as[Ev]
+    val evs = (if (maxRecords > eventBound) batch.limit(eventBound + 1) else batch)
+      .collect().toSeq
+    if (evs.size > eventBound)
+      throw new Unmodelled(s"the batch holds more than $eventBound events")
     if (evs.exists(_.record_id.isEmpty))
       throw new Unmodelled("a selected event has no record_id")
     val valid = evs.filter(_.v_error.isEmpty)
     val batchUids = valid.map(_.uid.get.toString).distinct
+    if (batchUids.size > uidBound)
+      throw new Unmodelled(s"the batch holds more than $uidBound distinct uids")
 
     // 2 — the batch's user rows (the set-based J1 semi-join on
     // pk_uniqueid cast to long, in its string form `src_uid`)
@@ -716,15 +757,16 @@ private[etl] object CappedCycle {
     val renames = outcomes.filter(_.renameOldCn.isDefined)
       .map(o => (o.renameOldCn.get, o.srcCn)).toDF("old_cn", "new_cn")
 
-    // 5 — the snapshot: one anti-filter pass plus the local upserts. A
-    // checkpointed snapshot (the poll loop's) is coalesced back to its
-    // partition count, or the upserts' own partitions pile up over the
-    // loop's cycles; that count is known without a job only there
+    // 5 — the snapshot: one anti-filter pass plus the local upserts, in
+    // one partition, so that a saved snapshot gains at most one file per
+    // cycle. A checkpointed snapshot (the poll loop's) is coalesced back
+    // to its partition count, or that one partition piles up over the
+    // loop's cycles; the count is known without a job only there
     // (`Dataset.rdd` would run the plan of any other snapshot).
     val (dropped, upserts) = dir.diff
     val merged = snap1
       .filter(!coalesce(col("dn").isInCollection(dropped), lit(false)))
-      .union(spark.createDataset(upserts))
+      .union(spark.createDataset(upserts).coalesce(1))
     val snapshot = snapshot0.queryExecution.logical match {
       case r: org.apache.spark.sql.execution.LogicalRDD =>
         merged.coalesce(r.rdd.getNumPartitions)

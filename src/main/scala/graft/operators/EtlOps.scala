@@ -652,13 +652,14 @@ object EtlOps {
     // oracle asserts a verdict per event — a finite cap would silently
     // under-report at a large enough sf
     //
-    // Planning note: ~2 s of this query's ~3 s sf0.1 cost is driver-side
-    // work around the 11 AQE jobs (the CDC tree is one of the engine's
-    // largest plans). The dedup-loop static-width treatment was tried
-    // and REGRESSED it (3.1 s → 4.5-5.0 s at widths 1-8): here AQE's
-    // per-stage replanning pays for itself by collapsing/reusing
-    // exchanges (11 stages / 32 tasks under AQE vs 22 / 163 static), so
-    // the adaptive plan stands.
+    // Path note: the cycle takes the path its selected batch fits
+    // (Cdc header). At sf0.001-0.1 the batch (1,000-100,000 events on
+    // 15-1,500 uids) runs on the driver; GenScale sf1's 1M events run
+    // set-based. For that set-based plan, AQE's per-stage replanning
+    // pays for itself by collapsing and reusing exchanges: a static
+    // width REGRESSED it when it was the sf0.1 plan (3.1 s -> 4.5-5.0 s
+    // at widths 1-8; 11 stages / 32 tasks under AQE vs 22 / 163 static),
+    // so the adaptive plan stands.
     val r = Cdc.cycle(snap, users, ev,
       scaleConf.copy(etlTimestamp = "20170101000300Z"),
       maxRecords = Int.MaxValue)

@@ -54,7 +54,9 @@ object CdcStream {
     * would live in the copy-on-write snapshot store — Directory.save —
     * with the stream checkpoint carrying only source offsets). The
     * trigger's file is the unit of work, so each micro-batch runs
-    * unbounded: every pending event in it gets a verdict.
+    * unbounded: every pending event in it gets a verdict. As any cycle,
+    * a micro-batch runs on the driver when it fits `Cdc.driverEventBound`
+    * and `Cdc.driverBatchBound`, and set-based otherwise.
     */
   def startStreaming(
       spark: org.apache.spark.sql.SparkSession,
@@ -145,9 +147,13 @@ object CdcStream {
               .map(_.unionByName(r.renames).distinct())
               .getOrElse(r.renames))
           // the post-cycle backlog is observed on the checkpoint's own
-          // pass over the eventlog, not counted by a job of its own
+          // pass over the eventlog, not counted by a job of its own. A
+          // caller that appends each arriving batch by a union adds its
+          // partitions every cycle; the narrow coalesce keeps the
+          // checkpoint at most one partition per core.
           val backlogObs = Observation()
           val elogNew = r.eventlog
+            .coalesce(elog.sparkSession.sparkContext.defaultParallelism)
             .observe(backlogObs, count(when(rtrim(col("status")).isin("N", "E"), 1))
               .as("pending"))
             .localCheckpoint(true)

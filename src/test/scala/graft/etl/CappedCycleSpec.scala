@@ -3,13 +3,16 @@ package graft.etl
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import Directory.Entry
 
-/** The capped cycle (`CappedCycle`, on the driver) against the set-based
-  * cycle (`Cdc.cycleSetBased`) on the same inputs: identical per-event
+/** The driver cycle (`CappedCycle`) against the set-based cycle
+  * (`Cdc.cycleSetBased`) on the same inputs: identical per-event
   * verdicts (status, error_message, attempt), eventlog writeback, rename
-  * queue and `Directory.dump`.
+  * queue and `Directory.dump`, for capped batches (`CappedCycle.run` at a
+  * cap of 5,000) and unbounded ones (`Cdc.cycle` at `Int.MaxValue`, which
+  * must take the driver path: its job count is pinned below).
   *
   * The batches are built from the fixture's user rows. Each random batch
   * lives in a "world" of its own uid range and cn prefix, so the 67
@@ -31,8 +34,22 @@ class CappedCycleSpec extends AnyFunSuite {
   import CappedCycleSpec._
 
   test("capped and set-based cycles agree on 201 seeded random batches") {
+    differential(count = 67, seed = 20261018L, maxRecords = 5000)(
+      CappedCycle.run(_, _, _, _, 5000, _))
+  }
+
+  test("unbounded cycles agree with the set-based path on 201 seeded random batches") {
+    differential(count = 67, seed = 20261019L, maxRecords = Int.MaxValue)(
+      Cdc.cycle(_, _, _, _, Int.MaxValue, _))
+  }
+
+  /** `count` worlds × 3 rounds: `cycle` against `Cdc.cycleSetBased` at
+    * `maxRecords`.
+    */
+  private def differential(count: Int, seed: Long, maxRecords: Int)(cycle: (Dataset[Entry],
+      DataFrame, DataFrame, EtlConf, java.sql.Timestamp) => Cdc.CycleResult): Unit = {
     val spark = TestSpark.spark
-    val w = new Worlds(spark, count = 67, seed = 20261018L)
+    val w = new Worlds(spark, count, seed)
     var snap = w.snapshot0
     var elog = spark.createDataFrame(java.util.List.of[Row](), EtlSchema.eventSchema)
     val seen = mutable.Map.empty[String, Int].withDefaultValue(0)
@@ -43,19 +60,19 @@ class CappedCycleSpec extends AnyFunSuite {
         etlTimestamp = f"diff$round%04dZ")
       val eventlog = elog.unionByName(events).localCheckpoint(true)
       val readTime = java.sql.Timestamp.valueOf(s"2026-01-0$round 00:00:00")
-      val capped = CappedCycle.run(snap, users, eventlog, conf, 5000, readTime)
-      val setBased = Cdc.cycleSetBased(snap, users, eventlog, conf, 5000, readTime)
+      val got = cycle(snap, users, eventlog, conf, readTime)
+      val setBased = Cdc.cycleSetBased(snap, users, eventlog, conf, maxRecords, readTime)
       val (sbSnap, sbElog) =
         (setBased.snapshot.localCheckpoint(true), setBased.eventlog.localCheckpoint(true))
 
-      val (vc, vs) = (verdicts(capped.eventUpdates), verdicts(setBased.eventUpdates))
-      assert(vc.size == vs.size && vc.size == capped.selected, s"round $round counts")
+      val (vc, vs) = (verdicts(got.eventUpdates), verdicts(setBased.eventUpdates))
+      assert(vc.size == vs.size && vc.size == got.selected, s"round $round counts")
       vc.zip(vs).foreach { case (c, s) => assert(c == s, s"round $round verdict") }
-      assert(renames(capped) == renames(setBased), s"round $round renames")
-      assert(capped.renameQueued == renames(setBased).nonEmpty)
+      assert(renames(got) == renames(setBased), s"round $round renames")
+      assert(got.renameQueued == renames(setBased).nonEmpty)
       val dump = Directory.dump(sbSnap)
-      assert(Directory.dump(capped.snapshot) == dump, s"round $round dump")
-      assert(verdicts(capped.eventlog.select(col("record_id"),
+      assert(Directory.dump(got.snapshot) == dump, s"round $round dump")
+      assert(verdicts(got.eventlog.select(col("record_id"),
         col("status").as("new_status"), col("error_message").as("new_error"),
         col("attempt").as("new_attempt"))) == verdicts(sbElog.select(
         col("record_id"), col("status").as("new_status"),
@@ -106,30 +123,106 @@ class CappedCycleSpec extends AnyFunSuite {
     val events = (rid: Any) => spark.createDataFrame(java.util.List.of(
       eventRow(rid, s"pk_uniqueid=${uidOf(ua)}", 6.0),
       eventRow(11.0, s"pk_uniqueid=${uidOf(ub)}", 6.0)), EtlSchema.eventSchema)
+    // (reason, snapshot, eventlog, cap, event bound, uid bound)
+    val (cap, evB, uidB) = (100, Cdc.driverEventBound, Cdc.driverBatchBound)
     val cases = Seq(
-      ("a selected event has no record_id", loaded, events(null)),
+      ("a selected event has no record_id", loaded, events(null), cap, evB, uidB),
       ("a dn occurs twice", withEntries(Entry(uaDn, uaAttrs + ("sn" -> Seq("Twice")))),
-        events(10.0)),
+        events(10.0), cap, evB, uidB),
       // the entry under ua's cn in upper case is renamed onto ua's dn
       ("a change lands on the existing dn", withEntries(Entry(s"cn=UA,${Fixture.ph08}",
-        uaAttrs + ("cn" -> Seq("UA")))), events(10.0)),
+        uaAttrs + ("cn" -> Seq("UA")))), events(10.0), cap, evB, uidB),
       // both ua entries change a write-through column of one ph15 twin
       ("two write-through patches for one ph15 twin",
-        withEntries(Entry(s"cn=UA,${Fixture.ph08}", uaAttrs)), events(10.0)))
+        withEntries(Entry(s"cn=UA,${Fixture.ph08}", uaAttrs)), events(10.0), cap, evB, uidB),
+      // an unbounded batch of two events on two uids, over lowered bounds
+      ("the batch holds more than 1 events", loaded, events(10.0), Int.MaxValue, 1, uidB),
+      ("the batch holds more than 1 distinct uids", loaded, events(10.0), Int.MaxValue,
+        evB, 1))
     val readTime = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
     def rows(df: DataFrame): Seq[String] = df.collect().toSeq.map(_.toString).sorted
     def lines(snap: Dataset[Entry]): Seq[String] =
       Directory.dump(snap).split("\n").toSeq.sorted
-    for ((why, snap, elog) <- cases) {
+    for ((why, snap, elog, max, eventBound, uidBound) <- cases) {
       val e = intercept[CappedCycle.Unmodelled](
-        CappedCycle.run(snap, changed, elog, conf, 100, readTime))
+        CappedCycle.run(snap, changed, elog, conf, max, readTime, eventBound, uidBound))
       assert(e.getMessage.startsWith(why), e.getMessage)
-      val viaCycle = Cdc.cycle(snap, changed, elog, conf, 100, readTime)
-      val setBased = Cdc.cycleSetBased(snap, changed, elog, conf, 100, readTime)
+      val viaCycle = Cdc.boundedCycle(snap, changed, elog, conf, max, readTime,
+        eventBound, uidBound)
+      val setBased = Cdc.cycleSetBased(snap, changed, elog, conf, max, readTime)
       assert(rows(viaCycle.eventUpdates) == rows(setBased.eventUpdates), why)
       assert(rows(viaCycle.eventlog) == rows(setBased.eventlog), why)
       assert(lines(viaCycle.snapshot) == lines(setBased.snapshot), why)
     }
+    // within the bounds, the same unbounded batch runs on the driver
+    val inBound = CappedCycle.run(loaded, changed, events(10.0), conf, Int.MaxValue,
+      readTime, 2, 2)
+    assert(rows(inBound.eventUpdates) == rows(Cdc.cycleSetBased(loaded, changed,
+      events(10.0), conf, Int.MaxValue, readTime).eventUpdates))
+  }
+
+  test("an unbounded batch within the bounds runs on the driver: few jobs, nothing stored") {
+    val spark = TestSpark.spark
+    val sc = spark.sparkContext
+    val w = new Worlds(spark, count = 12, seed = 20261020L)
+    val (users, events) = w.round(1)
+    val conf = Fixture.conf.copy(ph15Dn = Some(Fixture.ph15), etlTimestamp = "jobs0001Z")
+    val readTime = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def stored: Set[Int] = sc.getRDDStorageInfo.map(_.id).toSet
+    // jobs to run the cycle and read both its outputs, and the RDDs it
+    // left stored (another suite's RDDs may only go meanwhile)
+    def measure(cycle: => Cdc.CycleResult): (Long, Set[Int]) = {
+      org.apache.spark.BusDrain(sc)
+      val (j0, before) = (jobs.get, stored)
+      sc.addSparkListener(listener)
+      try {
+        val r = cycle
+        r.snapshot.collect()
+        r.eventlog.collect()
+        org.apache.spark.BusDrain(sc)
+        (jobs.get - j0, stored -- before)
+      } finally sc.removeSparkListener(listener)
+    }
+    val (driverJobs, driverKept) =
+      measure(Cdc.cycle(w.snapshot0, users, events, conf, Int.MaxValue, readTime))
+    val (setJobs, setKept) =
+      measure(Cdc.cycleSetBased(w.snapshot0, users, events, conf, Int.MaxValue, readTime))
+    info(s"jobs: driver path $driverJobs, set-based $setJobs")
+    assert(driverJobs <= 10, s"driver path ran $driverJobs jobs (set-based $setJobs)")
+    assert(driverKept.isEmpty, s"driver path left RDDs $driverKept stored")
+    // the check sees what the set-based path stores
+    assert(setKept.nonEmpty)
+  }
+
+  test("a drain over a loaded snapshot adds at most one file to the saved snapshot") {
+    val spark = TestSpark.spark
+    val w = new Worlds(spark, count = 12, seed = 20261021L)
+    val dir = java.nio.file.Files.createTempDirectory("graft-capped-files").toString
+    def files: Int = {
+      val v = java.nio.file.Files.readString(java.nio.file.Paths.get(dir, "CURRENT")).trim
+      new java.io.File(dir, v).listFiles().count(_.getName.startsWith("part-"))
+    }
+    Directory.save(w.snapshot0, dir)
+    var elog = spark.createDataFrame(java.util.List.of[Row](), EtlSchema.eventSchema)
+    // (partitions of the loaded snapshot, files of the one saved after it)
+    val counts = (1 to 2).map { round =>
+      val (users, events) = w.round(round)
+      val loaded = Directory.load(spark, dir)
+      val parts = loaded.rdd.getNumPartitions
+      val r = Cdc.cycle(loaded, users, elog.unionByName(events),
+        Fixture.conf.copy(ph15Dn = Some(Fixture.ph15), etlTimestamp = f"file$round%04dZ"),
+        Int.MaxValue)
+      assert(r.eventUpdates.count() > 1)
+      Directory.save(r.snapshot, dir)
+      elog = r.eventlog.localCheckpoint(true)
+      (parts, files)
+    }
+    info(s"(loaded partitions, saved files) per drain: $counts")
+    counts.foreach { case (loaded, saved) => assert(saved <= loaded + 1, counts) }
   }
 }
 

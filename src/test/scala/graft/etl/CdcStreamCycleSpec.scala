@@ -70,6 +70,28 @@ class CdcStreamCycleSpec extends AnyFunSuite {
     assert(st.backlog("postgres") == 0)
   }
 
+  test("an eventlog appended to every cycle stays within one partition per core") {
+    val spark = TestSpark.spark
+    val users0 = Fixture.users(spark).collect().toSeq
+    var st = CdcStream.LoopState(Fixture.twoTree(spark), Map("postgres" -> noEvents), 0, 0)
+    val parts = (1 to 12).map { v =>
+      val (users, events) = version(users0, v)
+      st = st.copy(eventlogs = Map("postgres" ->
+        st.eventlogs("postgres").unionByName(events)))
+      // 14 events arrive and 10 go per cycle: the backlog grows
+      st = CdcStream.run(st, Seq(CdcStream.Source(conf, () => users)),
+        maxRecords = 10, maxCycles = st.cyclesRun + 1, sleeper = () => ())
+      assert(st.sourceErrors.isEmpty, st.lastErrors)
+      val elog = st.eventlogs("postgres")
+      assert(st.backlog("postgres") ==
+        elog.filter(rtrim(col("status")).isin("N", "E")).count(), s"cycle $v")
+      elog.rdd.getNumPartitions
+    }
+    info(s"eventlog partitions per cycle: $parts")
+    assert(parts.max <= spark.sparkContext.defaultParallelism, parts)
+    assert(st.backlog("postgres") > 0)
+  }
+
   test("a streamed micro-batch gets a verdict for every event in it") {
     val spark = TestSpark.spark
     val dir = java.nio.file.Files.createTempDirectory("graft-cdc-stream")
