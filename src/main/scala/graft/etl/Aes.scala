@@ -1,5 +1,6 @@
 package graft.etl
 
+import java.util.HexFormat
 import javax.crypto.Cipher
 import javax.crypto.spec.{IvParameterSpec, SecretKeySpec}
 
@@ -7,35 +8,33 @@ import javax.crypto.spec.{IvParameterSpec, SecretKeySpec}
   * the reference's deterministic password encryption
   * (aes_pkcs7.py:36–69; key = raw UTF-8 password bytes, etl.py:354–355).
   *
-  * JVM-side twin of `ConvertF.fromPassword` (the Column form over
-  * Spark's built-in `aes_encrypt`); this one is used inside the typed
-  * merge kernel where the IV depends on the row (compare-under-old-IV,
-  * etl.py:989–992). PKCS5Padding in JCA == PKCS7 for the 16-byte AES
-  * block.
+  * The merge kernel (`SyncEngine.mergeOne`) and the ph15 write-through
+  * encrypt through it; the kernel passes a row-dependent IV
+  * (compare-under-old-IV, etl.py:989–992). PKCS5Padding in JCA == PKCS7
+  * for the 16-byte AES block.
   */
 object Aes {
 
-  private def hex(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
-  private def unhex(s: String): Array[Byte] =
-    s.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+  private val hex = HexFormat.of()
+  private val random = new java.security.SecureRandom()
 
   def encryptHex(plain: String, keyUtf8: String, ivHex: Option[String]): String = {
     val iv = ivHex match {
-      case Some(h) => unhex(h)
+      case Some(h) => hex.parseHex(h)
       case None =>
         val b = new Array[Byte](16)
-        new java.security.SecureRandom().nextBytes(b)
+        random.nextBytes(b)
         b
     }
     val c = Cipher.getInstance("AES/CBC/PKCS5Padding")
     c.init(Cipher.ENCRYPT_MODE,
       new SecretKeySpec(keyUtf8.getBytes("UTF-8"), "AES"),
       new IvParameterSpec(iv))
-    hex(iv ++ c.doFinal(plain.getBytes("UTF-8")))
+    hex.formatHex(iv ++ c.doFinal(plain.getBytes("UTF-8")))
   }
 
   def decryptHex(hexStr: String, keyUtf8: String): String = {
-    val all = unhex(hexStr)
+    val all = hex.parseHex(hexStr)
     val c = Cipher.getInstance("AES/CBC/PKCS5Padding")
     c.init(Cipher.DECRYPT_MODE,
       new SecretKeySpec(keyUtf8.getBytes("UTF-8"), "AES"),

@@ -1,10 +1,9 @@
 package graft.etl
 
 import scala.collection.mutable
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types._
 import Directory.{Entry, parentDn, rdnValue}
 import SyncEngine.{MatchIn, MergeRow}
 
@@ -36,13 +35,17 @@ import SyncEngine.{MatchIn, MergeRow}
   *    cycle to cycle, so the generated code is reused.
   *  - set-based (`cycleSetBased`), for a batch over either bound and for
   *    the states the driver path does not model: matching, merge,
-  *    deletes and the status matrix as joins and aggregations over the
-  *    whole batch, with the column kernel (`SyncEngine.mergeRowsPlan`).
-  *    Reaching it from an over-bound batch costs one wasted collect of
-  *    at most `driverEventBound + 1` events.
+  *    deletes and the per-uid aggregates of the status matrix as joins
+  *    and aggregations over the whole batch, with the typed kernel mapped
+  *    over the matched rows (`SyncEngine.merge`). Reaching it from an
+  *    over-bound batch costs one wasted collect of at most
+  *    `driverEventBound + 1` events.
   *
   * Both share the batch selection and validation, the source-row
-  * conversion, the GC filter and the eventlog writeback.
+  * conversion, the GC filter, the merge kernel, the per-event C8 verdict
+  * (`verdict`) and the eventlog writeback. Each path computes its own
+  * matching, cn-dedup order, apply and the per-uid aggregates that feed
+  * the verdict.
   */
 object Cdc {
   /** Largest batch cap that may FORCE a uid-set broadcast in the batch
@@ -92,6 +95,60 @@ object Cdc {
       (selectedOf: () => Long, renameQueuedOf: () => Boolean) {
     lazy val selected: Long = selectedOf()
     lazy val renameQueued: Boolean = renameQueuedOf()
+  }
+
+  /** C8's inputs for one valid event: the event's own fields plus its
+    * uid's merge aggregates. `row_n` counts the uid's user rows (0 when
+    * the merge produced no outcome for it), `pre_matched` is whether any
+    * of its rows consumed an entry, `matched_dn` the entry its rows
+    * consumed or added, `kernel_error` its kernel errors sorted and
+    * '\n'-joined, and `kernel_warning` the greatest kernel warning.
+    */
+  private[etl] case class EventFacts(record_id: Option[Double], uid: Long,
+      event_type: Option[Double], attempt_now: Int, first_rid: Option[Double],
+      row_n: Long, pre_matched: Boolean, matched_dn: Option[String],
+      kernel_error: Option[String], kernel_warning: Option[String])
+
+  /** One eventlog update, the input of `writeback`. */
+  private[etl] case class Update(record_id: Option[Double], new_status: String,
+      new_error: Option[String], new_attempt: Option[Double],
+      new_read: Option[java.sql.Timestamp])
+
+  /** C8 — one valid event's verdict (etl.py:689–718): its status (S, W,
+    * E or F), error_message and new attempt counter. Sequencing within a
+    * uid is reconstructed from record_id order: the uid's first event
+    * carries the kernel warning, a later insert of a uid that has rows
+    * finds the entry the first one wrote. A missing record_id compares
+    * false, as in SQL.
+    */
+  private[etl] def verdict(e: EventFacts, db: String): (String, Option[String], Option[Double]) = {
+    val first = e.record_id.isDefined && e.record_id == e.first_rid
+    val later = e.record_id.exists(r => e.first_rid.exists(r > _))
+    val existsAt = e.pre_matched || (e.row_n > 0 && later)
+    val isInsert = e.event_type.contains(5.0)
+    val isDelete = e.event_type.contains(4.0)
+    // base warning: "row exists on delete" overwrites "duplicate rows"
+    // (dict replacement in the reference, etl.py:658–688)
+    val baseW =
+      if (e.row_n >= 1 && isDelete) Some(s"Record ${e.uid} existing in DB $db")
+      else if (e.row_n > 1) Some(s"Duplicate pk_uniqueid: ${e.uid} in $db")
+      else None
+    // For an insert whose matched entry carries a different
+    // phonlineUniqueId, the reference overwrites "should be new" with the
+    // uid-mismatch text (etl.py:981–989), so the kernel warning wins for
+    // the uid's first event and the reconstruction is the fallback.
+    val syncW =
+      if (e.row_n >= 1 && isInsert && existsAt)
+        e.kernel_warning.filter(_ => first).orElse(e.matched_dn.map(dn =>
+          s"""Found dn "$dn" when sync says it should be new"""))
+      else if (e.row_n >= 1 && !isInsert && first) e.kernel_warning
+      else if (e.row_n == 0 && !isDelete) Some(s"Record ${e.uid} not existing in DB")
+      else None
+    val warn = (baseW ++ syncW).mkString("\n")
+    if (e.kernel_error.isDefined && e.row_n >= 1)
+      (if (e.attempt_now > 10) "F" else "E", e.kernel_error, Some(e.attempt_now + 1.0))
+    else if (warn.nonEmpty) ("W", Some(warn), None)
+    else ("S", None, None)
   }
 
   private def trimEq(c: Column, v: String): Column =
@@ -200,15 +257,16 @@ object Cdc {
         col("attempt"))
 
     // J1 — current user rows for the batch's uids (set-based lookup).
-    // On a SMALL capped batch the uid set is bounded by maxRecords, so
-    // it BROADCASTS: the users table — the 100 TB side — is probed in
-    // place, never shuffled. The hint is gated on a broadcast-SAFE
-    // bound, not merely on the cap being finite: a finite-but-large cap
-    // (say 10M) would otherwise force a driver-side build of up to
-    // maxRecords uids past autoBroadcastJoinThreshold and risk driver
-    // OOM. Above the bound — and for an unbounded drain — the shuffle
-    // join stands, and AQE still downgrades to broadcast when the
-    // RUNTIME size allows.
+    // A batch within the driver path's bounds runs on the driver, so this
+    // path sees a batch over them or one the driver path does not model.
+    // When the cap bounds the uid set within `broadcastUidBound` it
+    // BROADCASTS: the users table — the 100 TB side — is probed in place,
+    // never shuffled. The hint is gated on a broadcast-SAFE bound, not
+    // merely on the cap being finite: a finite-but-large cap (say 10M)
+    // would otherwise force a driver-side build of up to maxRecords uids
+    // past autoBroadcastJoinThreshold and risk driver OOM. Above the
+    // bound — and for an unbounded drain — the shuffle join stands, and
+    // AQE still downgrades to broadcast when the RUNTIME size allows.
     val batchUids0 = valid.select(col("uid")).distinct()
     val batchUids =
       if (maxRecords <= Cdc.broadcastUidBound) broadcast(batchUids0)
@@ -247,10 +305,11 @@ object Cdc {
       .select(col("uid").cast("string")).as[String]
     val snapFinal = SyncEngine.deleteInLdap(snapMerged, goneUids, conf)
 
-    // C8 — status matrix per event (etl.py:689–718). Multiple DB rows
-    // for one uid can each raise a kernel error; the reference appends
-    // one message per row ('\n'-joined, etl.py msg list) — mirrored
-    // here with a sorted join so no row's diagnostic is lost.
+    // C8 — the per-uid aggregates of the status matrix (etl.py:689–718),
+    // then `verdict` per event. Multiple DB rows for one uid can each
+    // raise a kernel error; the reference appends one message per row
+    // ('\n'-joined, etl.py msg list) — mirrored here with a sorted join
+    // so no row's diagnostic is lost.
     val uidAgg = outcomes.toDF.groupBy(col("srcUid"))
       .agg(
         max(col("consumedDn").isNotNull).as("pre_matched"),
@@ -262,67 +321,23 @@ object Cdc {
       .withColumn("kernel_error",
         when(size(col("kernel_errors")) > 0,
           array_join(array_sort(col("kernel_errors")), "\n")))
-      .drop("kernel_errors")
       .join(rowCounts, col("srcUid") === col("src_uid"), "left_outer")
-      .drop("src_uid")
 
-    val ev = valid
+    val db = conf.db
+    val evUpdates = valid
       .join(uidAgg, col("uid").cast("string") === col("srcUid"), "left_outer")
-      .withColumn("row_n", coalesce(col("row_n"), lit(0L)))
-      .withColumn("first_rid", min(col("record_id")).over(
-        Window.partitionBy(col("uid"))))
-      .withColumn("exists_at",
-        coalesce(col("pre_matched"), lit(false)) ||
-          (col("row_n") > 0 && col("record_id") > col("first_rid")))
-      .withColumn("matched_dn", coalesce(col("pre_dn"), col("add_dn")))
-
-    val isInsert = col("event_type") === 5.0
-    val isDelete = col("event_type") === 4.0
-
-    // base warning: "row exists on delete" overwrites "duplicate rows"
-    // (dict replacement in the reference, etl.py:658–688)
-    val baseW =
-      when(col("row_n") >= 1 && isDelete,
-        concat(lit("Record "), col("uid"), lit(s" existing in DB ${conf.db}")))
-        .when(col("row_n") > 1,
-          concat(lit("Duplicate pk_uniqueid: "), col("uid"),
-            lit(s" in ${conf.db}")))
-    // sync-path warning per event (reconstructed sequencing; see
-    // header). For an insert whose matched entry carries a different
-    // phonlineUniqueId, the reference overwrites "should be new" with
-    // the uid-mismatch text (etl.py:981–989) — so the kernel warning
-    // wins for the first event of the uid, and the reconstruction is
-    // the fallback.
-    val syncW =
-      when(col("row_n") >= 1 && isInsert && col("exists_at"),
-        coalesce(
-          when(col("record_id") === col("first_rid"), col("kernel_warning")),
-          concat(lit("Found dn \""), col("matched_dn"),
-            lit("\" when sync says it should be new"))))
-        .when(col("row_n") >= 1 && !isInsert &&
-            col("record_id") === col("first_rid"), col("kernel_warning"))
-        .when(col("row_n") === 0 && !isDelete,
-          concat(lit("Record "), col("uid"), lit(" not existing in DB")))
-
-    val warnMsg = concat_ws("\n", baseW, syncW)
-    val hasErr = col("kernel_error").isNotNull && col("row_n") >= 1
-    val attemptNow = coalesce(col("attempt"), lit(0.0)).cast("int")
-    val statusCol =
-      when(hasErr && attemptNow > 10, "F")
-        .when(hasErr, "E")
-        .when(length(warnMsg) > 0, "W")
-        .otherwise("S")
-    val errMsgCol =
-      when(hasErr, col("kernel_error"))
-        .when(length(warnMsg) > 0, warnMsg)
-    val attemptCol = when(hasErr, attemptNow + 1)
-
-    val evUpdates = ev.select(
-      col("record_id"),
-      statusCol.as("new_status"),
-      errMsgCol.as("new_error"),
-      attemptCol.cast("double").as("new_attempt"),
-      lit(readTime).as("new_read"))
+      .select(col("record_id"), col("uid"), col("event_type"),
+        coalesce(col("attempt"), lit(0.0)).cast("int").as("attempt_now"),
+        min(col("record_id")).over(Window.partitionBy(col("uid"))).as("first_rid"),
+        coalesce(col("row_n"), lit(0L)).as("row_n"),
+        coalesce(col("pre_matched"), lit(false)).as("pre_matched"),
+        coalesce(col("pre_dn"), col("add_dn")).as("matched_dn"),
+        col("kernel_error"), col("kernel_warning"))
+      .as[EventFacts]
+      .map { e =>
+        val (status, msg, attempt) = verdict(e, db)
+        Update(e.record_id, status, msg, attempt, Some(readTime))
+      }.toDF
     // validation failures `continue` before the reference's read_time
     // stamp (etl.py:615–652 vs 718): no read_time for them
     val fUpdates = validated.filter(col("v_error").isNotNull)
@@ -481,17 +496,17 @@ object Cdc {
     * re-sync user rows whose benutzername matches either side of a
     * queued rename, against the ph15 base.
     *
-    * Scale bound: `renames` is derived from the CURRENT cycle's
-    * outcomes (one row per rename event in the batch), so its size is
-    * ≤ the cycle's event cap (`maxRecords` — 100 in the reference's
-    * poll loop, 10k in the bench) regardless of snapshot or user-table
-    * size; the key set is ≤ 2× that. It is therefore always a small
-    * frame at 100 TB too — but we deliberately do NOT hint
-    * `broadcast(keys)`: Catalyst's size-estimated auto-broadcast makes
-    * the same choice when the bound holds, and if an operator misuse
-    * ever feeds an unbounded frame here the plan degrades to a shuffle
-    * semi join instead of a driver OOM. RenameCascadeSpec pins the
-    * absence of an unconditional hint.
+    * Scale bound: `renames` holds one row per renaming merge outcome of
+    * the batches it was collected from, so it grows with those batches,
+    * not with the snapshot or the user table: ≤ `maxRecords` for one
+    * capped cycle (100 in the reference's poll loop), but as large as an
+    * unbounded drain or a streaming micro-batch, and `CdcStream.run`
+    * unions the queues of all its sources. The key set is ≤ 2× that. We
+    * deliberately do NOT hint `broadcast(keys)`: Catalyst's
+    * size-estimated auto-broadcast makes the choice when the frame is
+    * small, and a large queue degrades to a shuffle semi join instead of
+    * a driver OOM. RenameCascadeSpec pins the absence of an
+    * unconditional hint.
     */
   def updatePh15Cn(snapshot: Dataset[Entry], users: DataFrame,
       renames: DataFrame, ph15Conf: EtlConf): Dataset[Entry] = {
@@ -526,10 +541,11 @@ object Cdc {
   *     plus the local upserts;
   *  6. the eventlog: the shared writeback over the local verdicts.
   *
-  * Everything in between — cn-dedup, J2 matching, the typed kernel
+  * Everything in between — cn-dedup, J2 matching, the merge kernel
   * (`SyncEngine.mergeOne`), one change per dn, deletes, the ph15 sweep
-  * and write-through, the C8 status matrix and the rename queue — is
-  * driver code over batch-sized collections. Where the set-based path
+  * and write-through, the C8 per-uid aggregates with the shared
+  * `Cdc.verdict` per event, and the rename queue — is driver code over
+  * batch-sized collections. Where the set-based path
   * takes a max, max_by or array_sort over strings, the driver compares by
   * UTF-8 bytes as Spark does.
   *
@@ -708,7 +724,7 @@ private[etl] object CappedCycle {
       }
     }
 
-    // C8 — status matrix per event
+    // C8 — the per-uid aggregates, then `Cdc.verdict` per event
     val byUidOut = outcomes.groupBy(_.srcUid)
     val rowN = rows.groupBy(_.src_uid).map { case (u, rs) => u -> rs.size.toLong }
     val firstRid = valid.groupBy(_.uid.get).map { case (u, es) =>
@@ -716,44 +732,21 @@ private[etl] object CappedCycle {
     }
     val evRows = valid.map { e =>
       val uid = e.uid.get
-      val rid = e.record_id.get
       val os = byUidOut.getOrElse(uid.toString, Nil)
-      val n = if (os.isEmpty) 0L else rowN.getOrElse(uid.toString, 0L)
-      val preMatched = os.exists(_.consumedDn.isDefined)
-      val matchedDn = maxUtf8(os.flatMap(_.consumedDn)).orElse(
-        maxUtf8(os.filter(o => o.consumedDn.isEmpty && o.changed).flatMap(_.resultDn)))
       val errors = os.flatMap(_.error).sorted(utf8Order)
-      val kernelError = Option.when(errors.nonEmpty)(errors.mkString("\n"))
-      val kernelWarning = maxUtf8(os.flatMap(_.warning))
-      val first = rid == firstRid(uid)
-      val existsAt = preMatched || (n > 0 && rid > firstRid(uid))
-      val isInsert = e.event_type.contains(5.0)
-      val isDelete = e.event_type.contains(4.0)
-      val baseW =
-        if (n >= 1 && isDelete) Some(s"Record $uid existing in DB ${conf.db}")
-        else if (n > 1) Some(s"Duplicate pk_uniqueid: $uid in ${conf.db}")
-        else None
-      val syncW =
-        if (n >= 1 && isInsert && existsAt)
-          kernelWarning.filter(_ => first).orElse(matchedDn.map(dn =>
-            s"""Found dn "$dn" when sync says it should be new"""))
-        else if (n >= 1 && !isInsert && first) kernelWarning
-        else if (n == 0 && !isDelete) Some(s"Record $uid not existing in DB")
-        else None
-      val warn = (baseW ++ syncW).mkString("\n")
-      val attemptNow = e.attempt_now.get
-      val hasErr = kernelError.isDefined && n >= 1
-      val status =
-        if (hasErr && attemptNow > 10) "F" else if (hasErr) "E"
-        else if (warn.nonEmpty) "W" else "S"
-      Row(rid, status,
-        if (hasErr) kernelError.get else if (warn.nonEmpty) warn else null,
-        if (hasErr) (attemptNow + 1).toDouble else null, readTime)
+      val (status, msg, attempt) = Cdc.verdict(Cdc.EventFacts(e.record_id, uid,
+        e.event_type, e.attempt_now.get, firstRid.get(uid),
+        row_n = if (os.isEmpty) 0L else rowN.getOrElse(uid.toString, 0L),
+        pre_matched = os.exists(_.consumedDn.isDefined),
+        matched_dn = maxUtf8(os.flatMap(_.consumedDn)).orElse(maxUtf8(
+          os.filter(o => o.consumedDn.isEmpty && o.changed).flatMap(_.resultDn))),
+        kernel_error = Option.when(errors.nonEmpty)(errors.mkString("\n")),
+        kernel_warning = maxUtf8(os.flatMap(_.warning))), conf.db)
+      Cdc.Update(e.record_id, status, msg, attempt, Some(readTime))
     }
     val fRows = evs.filter(_.v_error.isDefined).map(e =>
-      Row(e.record_id.get, "F", e.v_error.get, null, null))
-    val updates = spark.createDataFrame(
-      java.util.Arrays.asList((evRows ++ fRows): _*), updateSchema)
+      Cdc.Update(e.record_id, "F", e.v_error, None, None))
+    val updates = (evRows ++ fRows).toDF
     val renames = outcomes.filter(_.renameOldCn.isDefined)
       .map(o => (o.renameOldCn.get, o.srcCn)).toDF("old_cn", "new_cn")
 
@@ -776,11 +769,6 @@ private[etl] object CappedCycle {
     Cdc.CycleResult(snapshot, Cdc.writeback(eventlog, broadcast(updates)),
       updates, renames)(() => evs.size.toLong, () => outcomes.exists(_.renameOldCn.isDefined))
   }
-
-  private val updateSchema = StructType(Seq(
-    StructField("record_id", DoubleType), StructField("new_status", StringType),
-    StructField("new_error", StringType), StructField("new_attempt", DoubleType),
-    StructField("new_read", TimestampType)))
 
   /** The snapshot entries the cycle has read, with its changes applied
     * in place. `diff` gives the fetched dns that changed or went, and the

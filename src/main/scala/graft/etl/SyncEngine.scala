@@ -31,11 +31,11 @@ case class EtlConf(
   * *diff/apply* is a row-local kernel that reproduces the reference's
   * field-level diff semantics exactly (compare-under-old-IV passwords,
   * attribute deletes on NULL, resurrection, rename-on-cn-change). The
-  * kernel exists twice: typed (`mergeOne`, the capped CDC cycle's kernel
-  * on the driver) and as column expressions (`mergeRowsPlan`, whole-stage
-  * codegen for loads and unbounded drains); MergeKernelEquivalenceSpec
-  * proves them pointwise equal. Row-local ⇒ embarrassingly parallel ⇒
-  * scales with executors; the joins are the only shuffles.
+  * kernel is one typed function, `mergeOne`: the driver path of a CDC
+  * cycle (`CappedCycle`) calls it on collected rows, and `merge` maps it
+  * over the matched rows of a load, a set-based cycle or the rename
+  * cascade. Row-local ⇒ embarrassingly parallel ⇒ scales with
+  * executors; the joins are the only shuffles.
   */
 object SyncEngine {
 
@@ -216,175 +216,6 @@ object SyncEngine {
   }
 
   // ------------------------------------------------------------------
-  // The same kernel as column expressions (whole-stage codegen)
-  // ------------------------------------------------------------------
-
-  /** `mergeOne` re-expressed as a single column projection over the
-    * matched frame — no Encoder round-trip, no per-row JVM closure: the
-    * diff loop unrolls into one fixed expression per source field, AES
-    * goes through Spark's built-in `aes_encrypt` (ConvertF.fromPassword),
-    * and the whole kernel stays inside whole-stage codegen. This is the
-    * engine's hot path on every load and every unbounded CDC drain; the
-    * typed kernel above runs the capped cycles on the driver
-    * (MergeKernelEquivalenceSpec proves them pointwise equal).
-    *
-    * Input: the camelCase matched columns (srcCn, srcUid, pwPlain,
-    * newAttrs, isNew, oldDn, oldAttrs, cnMatched, uidAmbiguous).
-    * Output: the exact MergeRow schema.
-    */
-  def mergeRowsPlan(matched: DataFrame, conf: EtlConf): DataFrame = {
-    import graft.functions.ConvertF
-    val srcCn = col("srcCn"); val srcUid = col("srcUid")
-    val pw = col("pwPlain"); val newA = col("newAttrs")
-    val isNewC = col("isNew"); val oldDn = col("oldDn")
-    val oldA = col("oldAttrs")
-    val key = lit(conf.aesKey)
-
-    val oldUid = element_at(oldA("phonlineUniqueId"), 1)
-    val oldPw = element_at(oldA("idnDistributionPassword"), 1)
-    val oldIv = when(length(oldPw) > 32, substring(oldPw, 1, 32))
-
-    // compare-under-old-IV value vs fresh (configured-IV) value — the
-    // reference's etl.py:989–992 asymmetry: equality is tested under the
-    // entry's stored IV, but a differing password is re-encrypted under
-    // the configured IV (random when none is configured)
-    val cmpEnc = conf.cryptoIvHex match {
-      case Some(h) => ConvertF.fromPassword(pw, key, coalesce(oldIv, lit(h)))
-      case None => when(oldIv.isNotNull, ConvertF.fromPassword(pw, key, oldIv))
-        .otherwise(ConvertF.fromPassword(pw, key))
-    }
-    val freshEnc = conf.cryptoIvHex match {
-      case Some(h) => ConvertF.fromPassword(pw, key, lit(h))
-      case None => ConvertF.fromPassword(pw, key)
-    }
-
-    // The kernel is STAGED through explicit intermediate columns. This
-    // is load-bearing, not style: every lambda body below re-evaluates
-    // its captured expressions per collection ELEMENT (map_filter over
-    // ~30 attrs would re-run the AES-bearing updates map 30x per row),
-    // and multi-referenced expressions re-evaluate per CONSUMER because
-    // higher-order functions defeat codegen subexpression elimination.
-    // Staging computes each expensive value once per row; Catalyst's
-    // CollapseProject keeps the stages separate exactly because the
-    // producers are non-cheap and multi-referenced.
-    val fieldStructs = userFields
-      .filterNot(k => conf.isPh15 && notSyncedPh15.contains(k))
-      .map { k =>
-        val lk = odbcToLdap(k)
-        val lv = oldA(lk)
-        val v: Column =
-          if (k == "passwort") col("_cmp_pw") else newA(lk)
-        val fresh: Column =
-          if (k == "passwort") col("_fresh_pw") else v
-        struct(lit(lk).as("k"), fresh.as("v"), lit(k).as("src"),
-          (!(v <=> lv) && v.isNotNull).as("u"),
-          (!(v <=> lv) && v.isNull && lv.isNotNull).as("d"))
-      }
-    val resurrect = map_contains_key(oldA, "idnDeleted") // etl.py resurrection
-    val staged = matched
-      .withColumn("_cmp_pw", when(pw.isNotNull, array(cmpEnc)))
-      .withColumn("_fresh_pw", when(pw.isNotNull, array(freshEnc)))
-      .withColumn("_entries", array(fieldStructs: _*))
-      .withColumn("_upd", filter(col("_entries"), e => e.getField("u")))
-      .withColumn("_del0", transform(
-        filter(col("_entries"), e => e.getField("d")), e => e.getField("k")))
-      .withColumn("_del", when(resurrect,
-        concat(col("_del0"), array(lit("idnDeleted")))).otherwise(col("_del0")))
-      .withColumn("_updates0", map_from_entries(transform(col("_upd"),
-        e => struct(e.getField("k"), e.getField("v")))))
-      .withColumn("_pw_ch",
-        map_contains_key(col("_updates0"), "idnDistributionPassword"))
-      .withColumn("_updates1", map_concat(col("_updates0"),
-        map(lit("etlTimestamp"), array(lit(conf.etlTimestamp)))))
-      .withColumn("_updates", when(col("_pw_ch"), map_concat(col("_updates1"),
-        map(lit("userPassword"), array(lit("{CRYPT}")))))
-        .otherwise(col("_updates1")))
-      .withColumn("_merged", map_concat(
-        map_filter(oldA, (k, _) =>
-          !map_contains_key(col("_updates"), k) &&
-            !array_contains(col("_del"), k)),
-        col("_updates")))
-      .withColumn("_new_cn", element_at(col("_updates0")("cn"), 1))
-    val updEntries = col("_upd")
-    val delKeys = col("_del")
-    val changedSrcKeys = transform(updEntries, e => e.getField("src"))
-    val anyChange = size(updEntries) > 0 || size(delKeys) > 0
-    val pwCh = col("_pw_ch")
-    val merged = col("_merged")
-    val newCn = col("_new_cn")
-    val mDn = when(newCn.isNotNull,
-      concat(lit("cn="), newCn, lit(","), Directory.parentDnCol(oldDn)))
-      .otherwise(oldDn)
-    val renameOldCn = when(newCn.isNotNull, element_at(oldA("cn"), 1))
-
-    // add path
-    val addW = when(!isNewC, concat(lit("pk_uniqueid \""), srcUid,
-      lit("\" not found, sync says it exists")))
-    // typed `Map ++` overwrites on key collision; map_concat throws — so
-    // pre-filter colliding keys (none occur via toNewRows, but the
-    // kernel must be total like its typed twin)
-    val addAttrs0 = when(pw.isNotNull, map_concat(
-        map_filter(newA, (k, _) =>
-          k =!= "idnDistributionPassword" && k =!= "userPassword"),
-        map_from_arrays(
-          array(lit("idnDistributionPassword"), lit("userPassword")),
-          array(col("_fresh_pw"), array(lit("{CRYPT}"))))))
-      .otherwise(newA)
-    val addAttrs = map_concat(
-      map_filter(addAttrs0, (k, _) =>
-        k =!= "objectClass" && k =!= "etlTimestamp"),
-      map(lit("objectClass"), array(lit("inetOrgPerson"),
-          lit("phonlinePerson"), lit("idnSyncstat")),
-        lit("etlTimestamp"), array(lit(conf.etlTimestamp))))
-    val addDn = concat(lit("cn="), srcCn, lit("," + conf.baseDn))
-
-    // matched-path warnings: uid-mismatch overwrites should-be-new
-    val matchedW =
-      when(!(oldUid <=> srcUid), concat(lit("Found dn: "), oldDn,
-        lit(" with different phonlineUniqueId: Got "),
-        coalesce(oldUid, lit("null")), lit(", expected "), srcUid))
-      .when(isNewC, concat(lit("Found dn \""), oldDn,
-        lit("\" when sync says it should be new")))
-
-    // guard cascade — same short-circuit order as the typed kernel
-    val skipCnC = srcCn.isNull || srcCn === ""
-    val skipUidC = !skipCnC && (srcUid.isNull || srcUid === "")
-    val errAmbC = !skipCnC && !skipUidC && col("uidAmbiguous")
-    val errDelC = !skipCnC && !skipUidC && !errAmbC && col("cnMatched") &&
-      map_contains_key(oldA, "idnDeleted") && !(oldUid <=> srcUid)
-    val bad = skipCnC || skipUidC || errAmbC || errDelC
-    val matchedP = !bad && oldA.isNotNull
-    val changedP = matchedP && anyChange
-    val addP = !bad && oldA.isNull
-
-    staged.select(
-      srcCn.as("srcCn"),
-      srcUid.as("srcUid"),
-      isNewC.as("isNew"),
-      when(matchedP, oldDn).as("consumedDn"),
-      when(changedP, mDn).when(addP, addDn).as("resultDn"),
-      when(changedP, merged).when(addP, addAttrs).as("resultAttrs"),
-      (changedP || addP).as("changed"),
-      when(errAmbC, concat(lit("Non-matching cn: "), srcCn,
-          lit(" and more than one record with same pk_uniqueid: "), srcUid,
-          lit(", giving up")))
-        .when(errDelC, concat(lit("Found deleted record with same CN "),
-          srcCn, lit(" but different pk_uniqueid: "), srcUid))
-        .as("error"),
-      when(matchedP, matchedW).when(addP, addW).as("warning"),
-      when(skipCnC, concat(lit("Got User without benutzername, pk_uniqueid="),
-          coalesce(srcUid, lit("null"))))
-        .when(skipUidC, concat(lit("Got User without pk_uniqueid, benutzername="),
-          srcCn))
-        .as("skipped"),
-      when(changedP, renameOldCn).as("renameOldCn"),
-      coalesce(when(changedP, pwCh).when(addP, pw.isNotNull), lit(false))
-        .as("pwChanged"),
-      coalesce(when(changedP, changedSrcKeys), typedLit(Seq.empty[String]))
-        .as("changedSrcKeys"))
-  }
-
-  // ------------------------------------------------------------------
   // Set-based matching + apply
   // ------------------------------------------------------------------
 
@@ -469,12 +300,9 @@ object SyncEngine {
       "old_dn", "old_attrs", "cn_matched", "uid_ambiguous")
     val matched = cnHit.selectExpr(cols: _*)
       .unionByName(m2.selectExpr(cols: _*))
-      .select(
-        col("src_cn").as("srcCn"), col("src_uid").as("srcUid"),
-        col("pw_plain").as("pwPlain"), col("new_attrs").as("newAttrs"),
-        col("is_new").as("isNew"), col("old_dn").as("oldDn"),
-        col("old_attrs").as("oldAttrs"), col("cn_matched").as("cnMatched"),
-        col("uid_ambiguous").as("uidAmbiguous"))
+      .toDF("srcCn", "srcUid", "pwPlain", "newAttrs", "isNew", "oldDn",
+        "oldAttrs", "cnMatched", "uidAmbiguous")
+      .as[MatchIn]
 
     // materialize once: the rows feed the snapshot apply, the status
     // matrix, the rename queue and the write-through — without this the
@@ -483,17 +311,8 @@ object SyncEngine {
     // every shuffle and broadcast stage of the plan (7 jobs in a CDC
     // cycle) before any consumer does; later jobs reuse the stored
     // partitions.
-    val mergeRows = mergeRowsPlan(matched, conf).as[MergeRow]
-      .localCheckpoint(false)
+    val mergeRows = matched.map(mergeOne(_, conf)).localCheckpoint(false)
     (applyMerge(snapshot, mergeRows), mergeRows)
-  }
-
-  /** Typed-kernel twin of the merge matching — used by the equivalence
-    * spec to prove `mergeRowsPlan` pointwise equal to `mergeOne`.
-    */
-  def mergeRowsTyped(matched: DataFrame, conf: EtlConf): Dataset[MergeRow] = {
-    import matched.sparkSession.implicits._
-    matched.as[MatchIn].map(mergeOne(_, conf))
   }
 
   /** Apply MergeRows to the snapshot: replace consumed entries (updates /

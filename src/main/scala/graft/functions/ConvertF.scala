@@ -3,7 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Scalar conversion functions — SURVEY.md §2.7 (F1–F12).
+/** Scalar conversion functions — SURVEY.md §2.7 (F1–F12; F6, the
+  * password cipher, is `graft.etl.Aes`).
   *
   * Each mirrors a per-column converter of the reference engine
   * (reference: etl.py:156–320, ldaptest.py:142–195,
@@ -48,27 +49,6 @@ object ConvertF {
     */
   def multivalFixup(c: Column): Column =
     array_join(array_sort(split(c, ";")), ";")
-
-  /** F6 — deterministic AES-128-CBC password encryption, PKCS7 padding,
-    * output hex(iv ‖ ciphertext) (reference aes_pkcs7.py:36–69). Spark's
-    * built-in `aes_encrypt` with mode CBC emits exactly iv‖ct; the
-    * 5-arg overload takes an explicit IV for the reference's fixed-IV
-    * regression mode (etl.py:989–992).
-    */
-  def fromPassword(pw: Column, key: Column, ivHex: Column): Column =
-    lower(hex(call_function("aes_encrypt",
-      pw, key, lit("CBC"), lit("PKCS"), unhex(ivHex))))
-
-  /** F6 (random IV production path). */
-  def fromPassword(pw: Column, key: Column): Column =
-    lower(hex(call_function("aes_encrypt", pw, key, lit("CBC"), lit("PKCS"))))
-
-  /** F6 inverse — decrypt hex(iv‖ct) back to the plaintext (used for
-    * compare-under-old-IV, reference etl.py:989–992).
-    */
-  def toPassword(hexCt: Column, key: Column): Column =
-    call_function("aes_decrypt", unhex(hexCt), key, lit("CBC"), lit("PKCS"))
-      .cast("string")
 
   /** F7 — LDAP GeneralizedTime `yyyyMMddHHmmssZ` in UTC (reference
     * ldaptimestamp.py:29–33).

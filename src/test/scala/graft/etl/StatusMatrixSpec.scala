@@ -71,4 +71,45 @@ class StatusMatrixSpec extends AnyFunSuite {
     assert(r.snapshot.filter(_.dn.contains("ghost")).collect()
       .forall(!_.attrs.contains("etlTimestamp")))
   }
+
+  test("C8 — the verdict function's table, the retry ceiling at its edge") {
+    val ev = Cdc.EventFacts(record_id = Some(1.0), uid = 7L,
+      event_type = Some(6.0), attempt_now = 0, first_rid = Some(1.0),
+      row_n = 1L, pre_matched = true, matched_dn = Some("cn=bob,ou=x"),
+      kernel_error = None, kernel_warning = None)
+    val found = "Found dn \"cn=bob,ou=x\" when sync says it should be new"
+    val table: Seq[(String, Cdc.EventFacts, (String, Option[String], Option[Double]))] = Seq(
+      ("clean update", ev, ("S", None, None)),
+      ("error below the ceiling", ev.copy(kernel_error = Some("boom"),
+        attempt_now = 10), ("E", Some("boom"), Some(11.0))),
+      ("error past the ceiling", ev.copy(kernel_error = Some("boom"),
+        attempt_now = 11), ("F", Some("boom"), Some(12.0))),
+      ("an error needs a row", ev.copy(kernel_error = Some("boom"), row_n = 0),
+        ("W", Some("Record 7 not existing in DB"), None)),
+      ("delete of a uid with rows", ev.copy(event_type = Some(4.0)),
+        ("W", Some("Record 7 existing in DB postgres"), None)),
+      ("delete of a uid without rows", ev.copy(event_type = Some(4.0), row_n = 0),
+        ("S", None, None)),
+      ("duplicate rows, then the kernel warning",
+        ev.copy(row_n = 2, kernel_warning = Some("kw")),
+        ("W", Some("Duplicate pk_uniqueid: 7 in postgres\nkw"), None)),
+      ("delete overwrites duplicate rows", ev.copy(row_n = 2, event_type = Some(4.0)),
+        ("W", Some("Record 7 existing in DB postgres"), None)),
+      ("kernel warning only on the uid's first event",
+        ev.copy(record_id = Some(2.0), kernel_warning = Some("kw")), ("S", None, None)),
+      ("no record_id is not first", ev.copy(record_id = None, kernel_warning = Some("kw")),
+        ("S", None, None)),
+      ("insert of a matched uid", ev.copy(event_type = Some(5.0)),
+        ("W", Some(found), None)),
+      ("insert: the kernel warning wins on the first event",
+        ev.copy(event_type = Some(5.0), kernel_warning = Some("kw")),
+        ("W", Some("kw"), None)),
+      ("insert that adds", ev.copy(event_type = Some(5.0), pre_matched = false),
+        ("S", None, None)),
+      ("later insert finds the added entry", ev.copy(event_type = Some(5.0),
+        pre_matched = false, record_id = Some(2.0)), ("W", Some(found), None)))
+    table.foreach { case (label, facts, expect) =>
+      assert(Cdc.verdict(facts, "postgres") == expect, s"row: $label")
+    }
+  }
 }
