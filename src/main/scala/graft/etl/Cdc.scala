@@ -3,7 +3,6 @@ package graft.etl
 import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import Directory.{Entry, parentDn, rdnValue}
 import SyncEngine.{MatchIn, MergeRow}
 
@@ -22,92 +21,65 @@ import SyncEngine.{MatchIn, MergeRow}
   * still produces a verdict per event (sequencing within a uid is
   * reconstructed from record_id order — SURVEY.md §4.3).
   *
-  * Two paths compute the same cycle; the batch the cycle selected, not
-  * the cap, chooses between them:
-  *  - on the driver (`CappedCycle`), whenever the selected batch holds at
-  *    most `driverEventBound` events on at most `driverBatchBound`
-  *    distinct valid uids, capped or not (the poll loop's 100, an
-  *    outage drain, a streaming micro-batch): it collects the batch, its
-  *    user rows and the snapshot entries they touch, computes the cycle
-  *    with the typed kernel (`SyncEngine.mergeOne`), and applies it with
-  *    one pass over the snapshot and one over the eventlog. Its cost
-  *    follows the batch, and its handful of plans keep one shape from
-  *    cycle to cycle, so the generated code is reused.
-  *  - set-based (`cycleSetBased`), for a batch over either bound and for
-  *    the states the driver path does not model: matching, merge,
-  *    deletes and the per-uid aggregates of the status matrix as joins
-  *    and aggregations over the whole batch, with the typed kernel mapped
-  *    over the matched rows (`SyncEngine.merge`). Reaching it from an
-  *    over-bound batch costs one wasted collect of at most
-  *    `driverEventBound + 1` events.
-  *
-  * Both share the batch selection and validation, the source-row
-  * conversion, the GC filter, the merge kernel, the per-event C8 verdict
-  * (`verdict`) and the eventlog writeback. Each path computes its own
-  * matching, cn-dedup order, apply and the per-uid aggregates that feed
-  * the verdict.
+  * The cycle runs on the driver (`CappedCycle`): the batch it selects,
+  * its user rows and the snapshot entries they touch are batch-sized, so
+  * they are collected and the cycle is computed with the typed kernel
+  * (`SyncEngine.mergeOne`) and one C8 verdict per event (`verdict`), then
+  * applied with one pass over the snapshot and one over the eventlog. A
+  * selection over `driverEventBound` events or `driverBatchBound`
+  * distinct uids (an unbounded outage drain) runs as consecutive chunks
+  * in record_id order, each within both bounds and each on the snapshot
+  * the one before it left: the reference's own drain, capped batches run
+  * back to back without a sleep (etl.py:604–606, 419–423).
   */
 object Cdc {
-  /** Largest batch cap that may FORCE a uid-set broadcast in the batch
-    * lookup join: 1M distinct long uids build to low tens of MB on the
-    * driver — safely inside a 64m autoBroadcastJoinThreshold. Larger
-    * caps leave the join to the planner/AQE.
-    */
-  val broadcastUidBound: Int = 1 << 20
-
-  /** Most distinct valid uids a batch may hold and run on the driver
-    * (`CappedCycle`). The driver-held inputs that grow with a batch, its
-    * user rows and the snapshot entries it touches, grow with its
-    * distinct uids, not with its events. Measured near this bound: a poll
-    * cycle of 10,000 events on 8,888–8,971 distinct uids at 37,678 users
-    * took 5.2–5.5 s on the driver against 11.4–12.6 s set-based
-    * (syncbench's poll workload at a 10,000-event cap, seeds 101–103,
-    * 4 cores), and also passed in a 2 GB heap. A batch over the bound
-    * runs set-based.
+  /** Most distinct valid uids one chunk of a cycle holds (`CappedCycle`).
+    * The driver-held inputs that grow with a chunk, its user rows and the
+    * snapshot entries it touches, grow with its distinct uids, not with
+    * its events. Measured near this bound: a poll cycle of 10,000 events
+    * on 8,888–8,971 distinct uids at 37,678 users took 5.2–5.5 s on the
+    * driver (syncbench's poll workload at a 10,000-event cap, seeds
+    * 101–103, 4 cores), and also passed in a 2 GB heap.
     */
   val driverBatchBound: Int = 10000
 
-  /** Most events a batch may hold and run on the driver; the driver holds
-    * five scalars per event (`CappedCycle.Ev`) and one verdict row.
+  /** Most events one chunk of a cycle holds. Over the whole selection,
+    * the driver holds five scalars (`CappedCycle.Ev`) and one verdict row
+    * per event; the user rows and entries it holds are one chunk's.
     * Measured at 37,678 users with syncbench's bulk drain (`Sizes(users =
-    * 37678, bulkEvents = n)`, Zipf-skewed, 4 cores, one run each), the
-    * driver path against the set-based one: 20,000 events on 7,741 uids
-    * took 6.6 s against 15.6 s, 50,000 on 16,002 uids 10.9 s against
-    * 25.2 s, and 100,000 on 26,663 uids 17.7 s against 28.8 s (seed 101;
-    * the two larger runs with both bounds lifted, so they load the driver
-    * with more uids than the bounds admit). In a 2 GB heap, 20,000 events
-    * on 7,752 uids took 8.8 s at these bounds, and 100,000 on 26,436 uids
+    * 37678, bulkEvents = n)`, Zipf-skewed, 4 cores, one run each): one
+    * chunk of 20,000 events on 7,741 uids took 6.6 s, 50,000 on 16,002
+    * uids 10.9 s, and 100,000 on 26,663 uids 17.7 s (seed 101; the two
+    * larger runs with both bounds lifted, so they load the driver with
+    * more uids than the bounds admit). In a 2 GB heap, 20,000 events on
+    * 7,752 uids took 8.8 s at these bounds, and 100,000 on 26,436 uids
     * 21.0 s with both lifted, with at most 1,521 and 1,984 MB of heap in
-    * use over the whole run (seed 102). A batch over the bound runs
-    * set-based, after one wasted collect of `driverEventBound + 1` events.
+    * use over the whole run (seed 102).
     */
   val driverEventBound: Int = 100000
 
-  /** `selected` (events the cycle selected) and `renameQueued` (whether
-    * `renames` is non-empty) are driver values on the capped path; on the
-    * set-based path each costs one job, run on first use.
-    */
   case class CycleResult(
       snapshot: Dataset[Entry],
       eventlog: DataFrame,        // full table with statuses written back
       eventUpdates: DataFrame,    // record_id, status, error_message, attempt
-      renames: DataFrame)         // old_cn, new_cn queue for ph15 (C3)
-      (selectedOf: () => Long, renameQueuedOf: () => Boolean) {
-    lazy val selected: Long = selectedOf()
-    lazy val renameQueued: Boolean = renameQueuedOf()
-  }
+      renames: DataFrame,         // old_cn, new_cn queue for ph15 (C3)
+      selected: Long,             // events the cycle selected
+      renameQueued: Boolean)      // whether `renames` is non-empty
 
   /** C8's inputs for one valid event: the event's own fields plus its
-    * uid's merge aggregates. `row_n` counts the uid's user rows (0 when
-    * the merge produced no outcome for it), `pre_matched` is whether any
-    * of its rows consumed an entry, `matched_dn` the entry its rows
-    * consumed or added, `kernel_error` its kernel errors sorted and
-    * '\n'-joined, and `kernel_warning` the greatest kernel warning.
+    * uid's merge aggregates. `row_n` counts the uid's user rows (also
+    * when every one of them lost the cn-dedup to another uid's row),
+    * `pre_matched` is whether any of its rows consumed an entry,
+    * `matched_dn` the entry its rows consumed or added, `result_dn` the
+    * dn that entry holds after the merge, `kernel_error` its kernel
+    * errors sorted and '\n'-joined, and `kernel_warning` the greatest
+    * kernel warning.
     */
   private[etl] case class EventFacts(record_id: Option[Double], uid: Long,
       event_type: Option[Double], attempt_now: Int, first_rid: Option[Double],
       row_n: Long, pre_matched: Boolean, matched_dn: Option[String],
-      kernel_error: Option[String], kernel_warning: Option[String])
+      result_dn: Option[String], kernel_error: Option[String],
+      kernel_warning: Option[String])
 
   /** One eventlog update, the input of `writeback`. */
   private[etl] case class Update(record_id: Option[Double], new_status: String,
@@ -117,9 +89,10 @@ object Cdc {
   /** C8 — one valid event's verdict (etl.py:689–718): its status (S, W,
     * E or F), error_message and new attempt counter. Sequencing within a
     * uid is reconstructed from record_id order: the uid's first event
-    * carries the kernel warning, a later insert of a uid that has rows
-    * finds the entry the first one wrote. A missing record_id compares
-    * false, as in SQL.
+    * carries the kernel warning and finds the entry as it was before the
+    * merge; a later insert of a uid that has rows finds the entry the
+    * first one wrote, under the dn the merge gave it. A missing record_id
+    * compares false, as in SQL.
     */
   private[etl] def verdict(e: EventFacts, db: String): (String, Option[String], Option[Double]) = {
     val first = e.record_id.isDefined && e.record_id == e.first_rid
@@ -139,8 +112,9 @@ object Cdc {
     // the uid's first event and the reconstruction is the fallback.
     val syncW =
       if (e.row_n >= 1 && isInsert && existsAt)
-        e.kernel_warning.filter(_ => first).orElse(e.matched_dn.map(dn =>
-          s"""Found dn "$dn" when sync says it should be new"""))
+        e.kernel_warning.filter(_ => first).orElse(
+          (if (later) e.result_dn else e.matched_dn).map(dn =>
+            s"""Found dn "$dn" when sync says it should be new"""))
       else if (e.row_n >= 1 && !isInsert && first) e.kernel_warning
       else if (e.row_n == 0 && !isDelete) Some(s"Record ${e.uid} not existing in DB")
       else None
@@ -165,18 +139,14 @@ object Cdc {
     boundedCycle(snapshot0, users, eventlog, conf, maxRecords, readTime,
       driverEventBound, driverBatchBound)
 
-  /** `cycle` with the driver path's bounds as parameters, so that a test
-    * can lower them.
+  /** `cycle` with the chunk bounds as parameters, so that a test can
+    * lower them.
     */
   private[etl] def boundedCycle(snapshot0: Dataset[Entry], users: DataFrame,
       eventlog: DataFrame, conf: EtlConf, maxRecords: Int,
       readTime: java.sql.Timestamp, eventBound: Int, uidBound: Int): CycleResult =
-    try CappedCycle.run(snapshot0, users, eventlog, conf, maxRecords, readTime,
+    CappedCycle.run(snapshot0, users, eventlog, conf, maxRecords, readTime,
       eventBound, uidBound)
-    catch {
-      case _: CappedCycle.Unmodelled =>
-        cycleSetBased(snapshot0, users, eventlog, conf, maxRecords, readTime)
-    }
 
   /** C6 — collect already-ETD-synced deleted entries at cycle start; the
     * reference never garbage-collects the ph15 instance itself
@@ -240,134 +210,15 @@ object Cdc {
           coalesce(col("u.new_read"), col("e.read_time")).as("read_time"))): _*)
       .select(EtlSchema.eventFields.map(col): _*)
 
-  /** The set-based cycle: every step a join or aggregation over the whole
-    * batch. `cycle` runs it for a batch over the driver path's bounds and
-    * for the states the driver path does not model.
-    */
-  private[etl] def cycleSetBased(snapshot0: Dataset[Entry], users: DataFrame,
-      eventlog: DataFrame, conf: EtlConf, maxRecords: Int,
-      readTime: java.sql.Timestamp): CycleResult = {
-    val spark = snapshot0.sparkSession
-    import spark.implicits._
-
-    val snap1 = collectGarbage(snapshot0, conf)
-    val validated = validate(selectBatch(eventlog, maxRecords), conf)
-    val valid = validated.filter(col("v_error").isNull)
-      .select(col("record_id"), col("uid"), col("event_type"),
-        col("attempt"))
-
-    // J1 — current user rows for the batch's uids (set-based lookup).
-    // A batch within the driver path's bounds runs on the driver, so this
-    // path sees a batch over them or one the driver path does not model.
-    // When the cap bounds the uid set within `broadcastUidBound` it
-    // BROADCASTS: the users table — the 100 TB side — is probed in place,
-    // never shuffled. The hint is gated on a broadcast-SAFE bound, not
-    // merely on the cap being finite: a finite-but-large cap (say 10M)
-    // would otherwise force a driver-side build of up to maxRecords uids
-    // past autoBroadcastJoinThreshold and risk driver OOM. Above the
-    // bound — and for an unbounded drain — the shuffle join stands, and
-    // AQE still downgrades to broadcast when the RUNTIME size allows.
-    val batchUids0 = valid.select(col("uid")).distinct()
-    val batchUids =
-      if (maxRecords <= Cdc.broadcastUidBound) broadcast(batchUids0)
-      else batchUids0
-    val batchUsers = users
-      .join(batchUids, users("pk_uniqueid").cast("long") === batchUids("uid"),
-        "left_semi")
-
-    // MERGE the uids that still have rows (is_new=false: event_type only
-    // influences warnings, which the status matrix reconstructs).
-    // Materialized once: the merge, the row counts and the ph15
-    // write-through all consume it — without this the users join + the
-    // 30-column conversion projection re-execute per consumer. The
-    // checkpoint is lazy in name only: under AQE the call itself runs
-    // the plan's shuffle and broadcast stages (one job here) before any
-    // consumer does; the consumers then read the stored partitions.
-    val newRows0 = SyncEngine.toNewRows(batchUsers).localCheckpoint(false)
-    val newRows = newRows0.withColumn("is_new", lit(false))
-    val (snapMerged, outcomes) = SyncEngine.merge(snap1, newRows, conf)
-
-    // raw DB-row count per uid — counted BEFORE the merge's cn-dedup so
-    // the duplicate-uid warning fires exactly when the reference's
-    // len(usr) > 1 does (etl.py:658–664)
-    val rowCounts = newRows0.groupBy(col("src_uid"))
-      .agg(count(lit(1)).as("row_n"))
-
-    // delete-mark uids with no user row left (etl.py:684–688).
-    // Deliberately the UNhinted frame: a broadcast hint on the LEFT
-    // (stream) side of a left_anti is unsupported — Spark would log
-    // "Hint ... not supported" and ignore it. The hint belongs only to
-    // the semi-join above, where batchUids is the build side.
-    val uidsWithRows = rowCounts.select(col("src_uid"))
-    val goneUids = batchUids0
-      .join(uidsWithRows, col("uid").cast("string") === col("src_uid"),
-        "left_anti")
-      .select(col("uid").cast("string")).as[String]
-    val snapFinal = SyncEngine.deleteInLdap(snapMerged, goneUids, conf)
-
-    // C8 — the per-uid aggregates of the status matrix (etl.py:689–718),
-    // then `verdict` per event. Multiple DB rows for one uid can each
-    // raise a kernel error; the reference appends one message per row
-    // ('\n'-joined, etl.py msg list) — mirrored here with a sorted join
-    // so no row's diagnostic is lost.
-    val uidAgg = outcomes.toDF.groupBy(col("srcUid"))
-      .agg(
-        max(col("consumedDn").isNotNull).as("pre_matched"),
-        max(col("consumedDn")).as("pre_dn"),
-        max(when(col("consumedDn").isNull && col("changed"),
-          col("resultDn"))).as("add_dn"),
-        collect_list(col("error")).as("kernel_errors"),
-        max(col("warning")).as("kernel_warning"))
-      .withColumn("kernel_error",
-        when(size(col("kernel_errors")) > 0,
-          array_join(array_sort(col("kernel_errors")), "\n")))
-      .join(rowCounts, col("srcUid") === col("src_uid"), "left_outer")
-
-    val db = conf.db
-    val evUpdates = valid
-      .join(uidAgg, col("uid").cast("string") === col("srcUid"), "left_outer")
-      .select(col("record_id"), col("uid"), col("event_type"),
-        coalesce(col("attempt"), lit(0.0)).cast("int").as("attempt_now"),
-        min(col("record_id")).over(Window.partitionBy(col("uid"))).as("first_rid"),
-        coalesce(col("row_n"), lit(0L)).as("row_n"),
-        coalesce(col("pre_matched"), lit(false)).as("pre_matched"),
-        coalesce(col("pre_dn"), col("add_dn")).as("matched_dn"),
-        col("kernel_error"), col("kernel_warning"))
-      .as[EventFacts]
-      .map { e =>
-        val (status, msg, attempt) = verdict(e, db)
-        Update(e.record_id, status, msg, attempt, Some(readTime))
-      }.toDF
-    // validation failures `continue` before the reference's read_time
-    // stamp (etl.py:615–652 vs 718): no read_time for them
-    val fUpdates = validated.filter(col("v_error").isNotNull)
-      .select(col("record_id"), lit("F").as("new_status"),
-        col("v_error").as("new_error"),
-        lit(null).cast("double").as("new_attempt"),
-        lit(null).cast("timestamp").as("new_read"))
-    val allUpdates = evUpdates.unionByName(fUpdates)
-
-    // C3 — rename queue for the end-of-cycle ph15 pass
-    val renames = outcomes.toDF
-      .filter(col("renameOldCn").isNotNull)
-      .select(col("renameOldCn").as("old_cn"), col("srcCn").as("new_cn"))
-
-    // C9 — immediate write-through of name/password changes into ph15
-    // (etl.py:1043–1054, 1112–1165): applies only when syncing a
-    // non-ph15 instance that has a ph15 partner configured
-    val snapWithPh15 =
-      if (conf.ph15Dn.isEmpty || conf.isPh15) snapFinal
-      else ph15Writethrough(snapFinal, newRows0, outcomes.toDF, conf)
-
-    CycleResult(snapWithPh15, writeback(eventlog, allUpdates), allUpdates,
-      renames)(() => allUpdates.count(), () => !renames.isEmpty)
-  }
-
   /** The write-through columns: the ph15 twin receives these source
-    * columns when they change (etl.py:338), the password as its own path.
+    * columns when they change (etl.py:338 ph15_writethrough), the
+    * password as its own path. Note the asymmetry: emailadresse_st is
+    * excluded from the NORMAL ph15 sync (notSyncedPh15) but IS written
+    * through on change — the write-through is the only road it travels
+    * into ph15.
     */
   private[etl] val writethroughKeys: Seq[String] =
-    EtlSchema.ph15Writethrough :+ "passwort"
+    Seq("vorname", "nachname", "emailadresse_st", "passwort")
 
   /** C9 — the attributes one changed row writes through into its ph15
     * twin: the changed write-through columns present in the new row,
@@ -391,51 +242,6 @@ object Cdc {
         }
     }
     attrs.toMap
-  }
-
-  /** C9 — patch the ph15 twin entry (matched by cn under the ph15 base)
-    * for rows whose changed columns include the write-through set;
-    * absent twins are skipped, attributes are never deleted there, and
-    * no etlTimestamp is stamped (etl.py:1112–1165).
-    */
-  private def ph15Writethrough(snapshot: Dataset[Entry], newRows0: DataFrame,
-      outcomes: DataFrame, conf: EtlConf): Dataset[Entry] = {
-    import snapshot.sparkSession.implicits._
-    val hits = outcomes
-      .filter(col("changed") && arrays_overlap(col("changedSrcKeys"),
-        typedLit(writethroughKeys)))
-      .select(col("srcCn").as("wt_cn"), col("changedSrcKeys"))
-    if (hits.isEmpty) return snapshot
-    // one row per cn (case-insensitively, like the merge's cn-dedup,
-    // same tiebreak) — duplicate DB rows must not fan the single ph15
-    // twin entry out into duplicate dns
-    val cnW = Window.partitionBy(lower(col("src_cn")))
-      .orderBy(SyncEngine.cnDedupOrder: _*)
-    val rows = newRows0
-      .withColumn("cn_rn", row_number().over(cnW))
-      .filter(col("cn_rn") === 1)
-      .drop("cn_rn")
-      .join(hits, lower(col("src_cn")) === lower(col("wt_cn")))
-    val changesDs = rows.select(col("src_cn"), col("new_attrs"),
-      col("pw_plain"), col("changedSrcKeys"))
-      .as[(String, Map[String, Seq[String]], Option[String], Seq[String])]
-    val patch = changesDs.map { case (cn, newAttrs, pw, changedKeys) =>
-      (s"cn=$cn,${conf.dn15}", ph15Patch(newAttrs, pw, changedKeys, conf))
-    }.toDF("p_dn", "p_attrs")
-    // the twin is matched case-insensitively (LDAP caseIgnoreMatch,
-    // same rule as the merge's cn match): a case-divergent twin — e.g.
-    // a case-only rename still sitting in the rename queue — must
-    // still receive the write-through
-    snapshot.toDF
-      .join(patch, lower(col("dn")) === lower(col("p_dn")), "left_outer")
-      .select(col("dn"),
-        when(col("p_attrs").isNotNull,
-          map_concat(
-            map_filter(col("attrs"),
-              (k, _) => !map_contains_key(col("p_attrs"), k)),
-            col("p_attrs")))
-          .otherwise(col("attrs")).as("attrs"))
-      .as[Entry]
   }
 
   /** Read-only mode (etl.py:579–592, 719–721): the source eventlog is
@@ -521,46 +327,45 @@ object Cdc {
   }
 }
 
-/** The CDC cycle on the driver (`Cdc.cycle` for a batch within
-  * `Cdc.driverEventBound` events and `Cdc.driverBatchBound` distinct
-  * uids, whatever its cap): the cycle's inputs are batch-sized, so they
-  * are collected and the cycle is computed on the driver, with the
-  * semantics of `Cdc.cycleSetBased` step for step. Spark runs:
+/** The CDC cycle (`Cdc.cycle`), computed on the driver. The selection
+  * is collected whole; one within `Cdc.driverEventBound` events and
+  * `Cdc.driverBatchBound` distinct valid uids is one chunk, and a larger
+  * one is cut in record_id order into consecutive chunks within both
+  * bounds. GC (C6) runs once, before the first chunk; each chunk then
+  * runs on the snapshot the one before it left. For each chunk, Spark
+  * runs:
   *
-  *  1. the batch selection and validation (shared with the set-based
-  *     path), collected; past a cap above the event bound, only to one
-  *     event over it, and a batch over either bound throws `Unmodelled`;
-  *  2. the batch's user rows (`SyncEngine.toNewRows`, with the cn-dedup
+  *  1. the chunk's user rows (`SyncEngine.toNewRows`, with the cn-dedup
   *     content hash), collected;
-  *  3. the entries of the GC'd snapshot the batch touches: lower(rdn) is
-  *     one of the batch's cns or the uid one of its uids, under any base
-  *     (cn match, uid fallback and ambiguity, ph15 twins), collected;
-  *  4. only when the batch deletes: the entries whose cn is a victim's
+  *  2. the entries of the snapshot the chunk touches: lower(rdn) is one
+  *     of its cns or the uid one of its uids, under any base (cn match,
+  *     uid fallback and ambiguity, ph15 twins), collected;
+  *  3. only when the chunk deletes: the entries whose cn is a victim's
   *     cn, for the ph15 sweep, collected;
-  *  5. the snapshot: the GC'd snapshot minus the changed and removed dns,
-  *     plus the local upserts;
-  *  6. the eventlog: the shared writeback over the local verdicts.
+  *  4. the snapshot: the one before minus the changed and removed dns,
+  *     plus the local upserts; checkpointed when another chunk follows.
   *
   * Everything in between — cn-dedup, J2 matching, the merge kernel
   * (`SyncEngine.mergeOne`), one change per dn, deletes, the ph15 sweep
-  * and write-through, the C8 per-uid aggregates with the shared
-  * `Cdc.verdict` per event, and the rename queue — is driver code over
-  * batch-sized collections. Where the set-based path
-  * takes a max, max_by or array_sort over strings, the driver compares by
-  * UTF-8 bytes as Spark does.
+  * and write-through, the C8 per-uid aggregates with `Cdc.verdict` per
+  * event, and the rename queue — is driver code over one chunk's
+  * collections, so the driver never holds more than one chunk's user
+  * rows and entries. Ties are broken by comparing strings as UTF-8 bytes,
+  * as Spark does. The eventlog takes the shared writeback over every
+  * chunk's verdicts, once.
   *
-  * The snapshot's `dn` is unique (the Directory invariant). A state the
-  * set-based path would turn into duplicate rows — a duplicate dn, a
-  * change landing on an existing dn, two write-through patches for one
-  * twin — or a batch with a null record_id is not modelled here, and
-  * neither is a batch over the bounds: `run` throws `Unmodelled` and
-  * `Cdc.cycle` runs the set-based path instead.
+  * The snapshot's `dn` is unique (the Directory invariant), and matching
+  * and cn-dedup are case-insensitive, so the engine never writes two dns
+  * under one parent that equal case-insensitively. A snapshot that holds
+  * a dn twice, or such a pair that a chunk's changes make collide, is
+  * reported: `run` throws an `IllegalStateException` naming the dn,
+  * before any output.
   */
 private[etl] object CappedCycle {
 
-  final class Unmodelled(why: String) extends RuntimeException(why)
-
-  /** One selected event; `attempt_now` is C8's attempt as Spark casts it. */
+  /** One selected event; `attempt_now` is C8's attempt as Spark casts it,
+    * and `uid` is defined for a valid event only.
+    */
   case class Ev(record_id: Option[Double], v_error: Option[String],
       uid: Option[Long], event_type: Option[Double], attempt_now: Option[Int])
 
@@ -593,35 +398,93 @@ private[etl] object CappedCycle {
   private def maxUtf8(xs: Iterable[String]): Option[String] =
     xs.reduceOption((a, b) => if (utf8Order.gteq(a, b)) a else b)
 
+  private def partitionsOf(ds: Dataset[Entry]): Option[Int] =
+    ds.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => Some(r.rdd.getNumPartitions)
+      case _ => None
+    }
+
   def run(snapshot0: Dataset[Entry], users: DataFrame, eventlog: DataFrame,
       conf: EtlConf, maxRecords: Int, readTime: java.sql.Timestamp,
       eventBound: Int = Cdc.driverEventBound, uidBound: Int = Cdc.driverBatchBound)
       : Cdc.CycleResult = {
     val spark = snapshot0.sparkSession
     import spark.implicits._
-    val snap1 = Cdc.collectGarbage(snapshot0, conf)
-
-    // 1 — the batch; past a cap above the event bound, read to one event
-    // over it
-    val batch = Cdc.validate(Cdc.selectBatch(eventlog, maxRecords), conf)
+    val evs = Cdc.validate(Cdc.selectBatch(eventlog, maxRecords), conf)
       .select(col("record_id"), col("v_error"), col("uid"),
         col("event_type"),
         when(col("v_error").isNull,
           coalesce(col("attempt"), lit(0.0)).cast("int")).as("attempt_now"))
-      .as[Ev]
-    val evs = (if (maxRecords > eventBound) batch.limit(eventBound + 1) else batch)
-      .collect().toSeq
-    if (evs.size > eventBound)
-      throw new Unmodelled(s"the batch holds more than $eventBound events")
-    if (evs.exists(_.record_id.isEmpty))
-      throw new Unmodelled("a selected event has no record_id")
+      .as[Ev].collect().toSeq
+    val chunks = chunked(evs, eventBound, uidBound)
+
+    var snap = Cdc.collectGarbage(snapshot0, conf)
+    var parts = partitionsOf(snapshot0)
+    val updates = mutable.ArrayBuffer.empty[Cdc.Update]
+    val renames = mutable.ArrayBuffer.empty[(String, String)]
+    for ((chunk, i) <- chunks.zipWithIndex) {
+      val (next, u, r) = runChunk(snap, parts, users, chunk, conf, readTime)
+      updates ++= u
+      renames ++= r
+      if (i == chunks.size - 1) snap = next
+      else {
+        // the next chunk reads this one's snapshot: stored, so that the
+        // lineage does not grow with the chunks; the one before it is
+        // read by nothing once this one is stored
+        val kept = next.localCheckpoint(true)
+        if (i > 0) snap.queryExecution.logical.foreach {
+          case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+          case _ => ()
+        }
+        snap = kept
+        parts = partitionsOf(kept)
+      }
+    }
+    val updatesDf = updates.toSeq.toDF
+    Cdc.CycleResult(snap, Cdc.writeback(eventlog, broadcast(updatesDf)), updatesDf,
+      renames.toSeq.toDF("old_cn", "new_cn"), evs.size.toLong, renames.nonEmpty)
+  }
+
+  /** The selection as chunks: whole when it is within both bounds (in
+    * selection order), else cut in record_id order (nulls first, as
+    * Spark sorts) into consecutive chunks of at most `eventBound` events
+    * on at most `uidBound` distinct valid uids.
+    */
+  private[etl] def chunked(evs: Seq[Ev], eventBound: Int, uidBound: Int): Seq[Seq[Ev]] =
+    if (evs.size <= eventBound && evs.flatMap(_.uid).distinct.size <= uidBound) Seq(evs)
+    else {
+      val out = mutable.ArrayBuffer.empty[Seq[Ev]]
+      val cur = mutable.ArrayBuffer.empty[Ev]
+      val uids = mutable.Set.empty[Long]
+      evs.sortBy(_.record_id).foreach { e =>
+        val full = cur.size == eventBound ||
+          (uids.size == uidBound && e.uid.exists(u => !uids(u)))
+        if (full && cur.nonEmpty) {
+          out += cur.toSeq
+          cur.clear()
+          uids.clear()
+        }
+        cur += e
+        uids ++= e.uid
+      }
+      out += cur.toSeq
+      out.toSeq
+    }
+
+  /** One chunk on `snap`: the snapshot after it, its eventlog updates and
+    * its rename queue. `parts` is the partition count to keep the
+    * snapshot at, when it is known without a job.
+    */
+  private def runChunk(snap: Dataset[Entry], parts: Option[Int], users: DataFrame,
+      evs: Seq[Ev], conf: EtlConf, readTime: java.sql.Timestamp)
+      : (Dataset[Entry], Seq[Cdc.Update], Seq[(String, String)]) = {
+    val spark = snap.sparkSession
+    import spark.implicits._
     val valid = evs.filter(_.v_error.isEmpty)
     val batchUids = valid.map(_.uid.get.toString).distinct
-    if (batchUids.size > uidBound)
-      throw new Unmodelled(s"the batch holds more than $uidBound distinct uids")
 
-    // 2 — the batch's user rows (the set-based J1 semi-join on
-    // pk_uniqueid cast to long, in its string form `src_uid`)
+    // 1 — the chunk's user rows (J1 on pk_uniqueid cast to long, in its
+    // string form `src_uid`)
     val rows: Seq[UserRow] =
       if (batchUids.isEmpty) Nil
       else SyncEngine.toNewRows(users)
@@ -630,7 +493,7 @@ private[etl] object CappedCycle {
           col("new_attrs"), SyncEngine.cnDedupHash.as("h"))
         .as[UserRow].collect().toSeq
 
-    // 3 — the touched entries of the GC'd snapshot
+    // 2 — the touched entries of the snapshot
     val writethrough = conf.ph15Dn.nonEmpty && !conf.isPh15
     val srcCns = rows.flatMap(r => Option(r.src_cn)).distinct
     val cnKeys = srcCns.map(_.toLowerCase).distinct
@@ -643,7 +506,7 @@ private[etl] object CappedCycle {
       Option.when(writethrough && srcCns.nonEmpty)(
         lower(col("dn")).isInCollection(twinKeys))).flatten
     val touched = touchedBy.reduceOption(_ || _)
-      .map(c => snap1.filter(c).collect().toSeq).getOrElse(Nil)
+      .map(c => snap.filter(c).collect().toSeq).getOrElse(Nil)
 
     val dir = new Overlay(touched)
 
@@ -693,9 +556,9 @@ private[etl] object CappedCycle {
     else victims.foreach(dn =>
       dir.put(dn, SyncEngine.softDeleteAttrs(dir.entries(dn), conf)))
     if (!hard && conf.baseDn.contains("ou=ph") && victims.nonEmpty) {
-      // 4 — the ph15 sweep's candidates (SyncEngine.deleteInPh15)
+      // 3 — the ph15 sweep's candidates (SyncEngine.deleteInPh15)
       val victimCns = victims.map(rdnValue).distinct
-      dir.fetch(snap1.filter(Directory.rdnValueCol(col("dn"))
+      dir.fetch(snap.filter(Directory.rdnValueCol(col("dn"))
         .isInCollection(victimCns)).collect().toSeq)
       val cnSet = victimCns.toSet
       dir.entries.toSeq
@@ -708,7 +571,10 @@ private[etl] object CappedCycle {
         }
     }
 
-    // C9 — ph15 write-through of the changed write-through columns
+    // C9 — ph15 write-through of the changed write-through columns: the
+    // twin is matched case-insensitively (LDAP caseIgnoreMatch, like the
+    // cn match), attributes are never deleted there, and no etlTimestamp
+    // is stamped (etl.py:1112–1165)
     if (writethrough) {
       val patches = outcomes
         .filter(o => o.changed && o.changedSrcKeys.exists(Cdc.writethroughKeys.contains))
@@ -716,8 +582,8 @@ private[etl] object CappedCycle {
           s"cn=${r.src_cn},${conf.dn15}".toLowerCase ->
             Cdc.ph15Patch(r.new_attrs, r.pw_plain, o.changedSrcKeys, conf)
         })
-      if (patches.map(_._1).distinct.size != patches.size)
-        throw new Unmodelled("two write-through patches for one ph15 twin")
+      patches.groupBy(_._1).collectFirst { case (dn, ps) if ps.size > 1 => dn }
+        .foreach(dn => invariant(s"two write-through patches for the ph15 twin $dn"))
       val byDn = patches.toMap
       dir.entries.toSeq.foreach { case (dn, a) =>
         byDn.get(dn.toLowerCase).foreach(p => dir.put(dn, a -- p.keys ++ p))
@@ -728,47 +594,47 @@ private[etl] object CappedCycle {
     val byUidOut = outcomes.groupBy(_.srcUid)
     val rowN = rows.groupBy(_.src_uid).map { case (u, rs) => u -> rs.size.toLong }
     val firstRid = valid.groupBy(_.uid.get).map { case (u, es) =>
-      u -> es.map(_.record_id.get).min
+      u -> es.flatMap(_.record_id).minOption
     }
     val evRows = valid.map { e =>
       val uid = e.uid.get
       val os = byUidOut.getOrElse(uid.toString, Nil)
       val errors = os.flatMap(_.error).sorted(utf8Order)
       val (status, msg, attempt) = Cdc.verdict(Cdc.EventFacts(e.record_id, uid,
-        e.event_type, e.attempt_now.get, firstRid.get(uid),
-        row_n = if (os.isEmpty) 0L else rowN.getOrElse(uid.toString, 0L),
+        e.event_type, e.attempt_now.get, firstRid(uid),
+        row_n = rowN.getOrElse(uid.toString, 0L),
         pre_matched = os.exists(_.consumedDn.isDefined),
         matched_dn = maxUtf8(os.flatMap(_.consumedDn)).orElse(maxUtf8(
           os.filter(o => o.consumedDn.isEmpty && o.changed).flatMap(_.resultDn))),
+        result_dn = maxUtf8(os.flatMap(o => if (o.changed) o.resultDn else o.consumedDn)),
         kernel_error = Option.when(errors.nonEmpty)(errors.mkString("\n")),
         kernel_warning = maxUtf8(os.flatMap(_.warning))), conf.db)
       Cdc.Update(e.record_id, status, msg, attempt, Some(readTime))
     }
     val fRows = evs.filter(_.v_error.isDefined).map(e =>
       Cdc.Update(e.record_id, "F", e.v_error, None, None))
-    val updates = (evRows ++ fRows).toDF
     val renames = outcomes.filter(_.renameOldCn.isDefined)
-      .map(o => (o.renameOldCn.get, o.srcCn)).toDF("old_cn", "new_cn")
+      .map(o => (o.renameOldCn.get, o.srcCn))
 
-    // 5 — the snapshot: one anti-filter pass plus the local upserts, in
+    // 4 — the snapshot: one anti-filter pass plus the local upserts, in
     // one partition, so that a saved snapshot gains at most one file per
     // cycle. A checkpointed snapshot (the poll loop's) is coalesced back
     // to its partition count, or that one partition piles up over the
-    // loop's cycles; the count is known without a job only there
-    // (`Dataset.rdd` would run the plan of any other snapshot).
+    // loop's cycles.
     val (dropped, upserts) = dir.diff
-    val merged = snap1
+    val merged = snap
       .filter(!coalesce(col("dn").isInCollection(dropped), lit(false)))
       .union(spark.createDataset(upserts).coalesce(1))
-    val snapshot = snapshot0.queryExecution.logical match {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        merged.coalesce(r.rdd.getNumPartitions)
-      case _ => merged
-    }
-
-    Cdc.CycleResult(snapshot, Cdc.writeback(eventlog, broadcast(updates)),
-      updates, renames)(() => evs.size.toLong, () => outcomes.exists(_.renameOldCn.isDefined))
+    (parts.fold(merged)(merged.coalesce), evRows ++ fRows, renames)
   }
+
+  /** A state that only a snapshot breaking the Directory invariant
+    * reaches, reported as a failure of the cycle.
+    */
+  private def invariant(what: String): Nothing =
+    throw new IllegalStateException(
+      s"$what: the snapshot breaks the Directory invariant (one entry per dn, " +
+        "no two dns under one parent that equal case-insensitively)")
 
   /** The snapshot entries the cycle has read, with its changes applied
     * in place. `diff` gives the fetched dns that changed or went, and the
@@ -779,25 +645,22 @@ private[etl] object CappedCycle {
     val entries = mutable.LinkedHashMap.empty[String, Map[String, Seq[String]]]
     fetch(fetched0)
 
-    /** Entries read from the GC'd snapshot; one already read keeps its
-      * current state.
+    /** Entries read from the snapshot; one already read keeps its current
+      * state.
       */
     def fetch(es: Seq[Entry]): Unit = {
-      if (es.map(_.dn).distinct.size != es.size)
-        throw new Unmodelled("a dn occurs twice in the snapshot")
+      es.groupBy(_.dn).collectFirst { case (dn, g) if g.size > 1 => dn }
+        .foreach(dn => invariant(s"the dn $dn occurs twice in the snapshot"))
       es.filterNot(e => fetched.contains(e.dn)).foreach { e =>
-        if (entries.contains(e.dn))
-          throw new Unmodelled(s"a change lands on the existing dn ${e.dn}")
         fetched(e.dn) = e.attrs
-        entries(e.dn) = e.attrs
+        add(e.dn, e.attrs)
       }
     }
     def remove(dn: String): Unit = entries.remove(dn)
     def put(dn: String, attrs: Map[String, Seq[String]]): Unit = entries(dn) = attrs
-    /** A new dn; one that exists would be a second row set-based. */
+    /** A new dn: one that exists would be a second entry for it. */
     def add(dn: String, attrs: Map[String, Seq[String]]): Unit = {
-      if (entries.contains(dn))
-        throw new Unmodelled(s"a change lands on the existing dn $dn")
+      if (entries.contains(dn)) invariant(s"a change lands on the existing dn $dn")
       entries(dn) = attrs
     }
     def diff: (Seq[String], Seq[Entry]) = (

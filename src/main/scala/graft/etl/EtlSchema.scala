@@ -93,14 +93,6 @@ object EtlSchema {
     */
   val notSyncedPh15 = Set("emailadresse_st")
 
-  /** Columns written through to ph15 immediately on change
-    * (etl.py:338 ph15_writethrough; the password path is separate).
-    * Note the asymmetry: emailadresse_st is excluded from the NORMAL
-    * ph15 sync (notSyncedPh15) but IS written through on change — the
-    * write-through is the only road it travels into ph15.
-    */
-  val ph15Writethrough = Seq("vorname", "nachname", "emailadresse_st")
-
   private def doubleT(n: String) = StructField(n, DoubleType)
   private def stringT(n: String) = StructField(n, StringType)
   private def tsT(n: String) = StructField(n, TimestampType)

@@ -33,8 +33,7 @@ case class EtlConf(
   * attribute deletes on NULL, resurrection, rename-on-cn-change). The
   * kernel is one typed function, `mergeOne`: the driver path of a CDC
   * cycle (`CappedCycle`) calls it on collected rows, and `merge` maps it
-  * over the matched rows of a load, a set-based cycle or the rename
-  * cascade. Row-local ⇒ embarrassingly parallel ⇒ scales with
+  * over the matched rows of a load or the rename cascade. Row-local ⇒ embarrassingly parallel ⇒ scales with
   * executors; the joins are the only shuffles.
   */
 object SyncEngine {
@@ -304,12 +303,11 @@ object SyncEngine {
         "oldAttrs", "cnMatched", "uidAmbiguous")
       .as[MatchIn]
 
-    // materialize once: the rows feed the snapshot apply, the status
-    // matrix, the rename queue and the write-through — without this the
-    // two match joins + kernel re-execute per consumer (~5×). The
-    // checkpoint is lazy in name only: under AQE the call itself runs
-    // every shuffle and broadcast stage of the plan (7 jobs in a CDC
-    // cycle) before any consumer does; later jobs reuse the stored
+    // materialize once: the rows feed the snapshot apply and the
+    // caller's outcomes — without this the two match joins + kernel
+    // re-execute per consumer. The checkpoint is lazy in name only:
+    // under AQE the call itself runs every shuffle and broadcast stage
+    // of the plan before any consumer does; later jobs reuse the stored
     // partitions.
     val mergeRows = matched.map(mergeOne(_, conf)).localCheckpoint(false)
     (applyMerge(snapshot, mergeRows), mergeRows)
@@ -368,49 +366,6 @@ object SyncEngine {
     }
     if (changes.nonEmpty) changes += "etlTimestamp" -> Seq(conf.etlTimestamp)
     attrs ++ changes
-  }
-
-  /** Delete all entries under the base whose uid is in `uids`: hard
-    * delete for ph15 / no-etd instances, soft delete-mark otherwise;
-    * then the cross-tree ph15 account check (etl.py:525–574).
-    */
-  def deleteInLdap(snapshot: Dataset[Entry], uids: Dataset[String],
-      conf: EtlConf): Dataset[Entry] = {
-    val spark = snapshot.sparkSession
-    import spark.implicits._
-    val uidDf = broadcast(uids.toDF("del_uid"))
-    val underBase = Directory.parentDnCol(col("dn")) === conf.baseDn
-    val victimCond = underBase &&
-      element_at(col("attrs")("phonlineUniqueId"), 1).isNotNull
-
-    val victims = snapshot.toDF.filter(victimCond)
-      .join(uidDf,
-        element_at(col("attrs")("phonlineUniqueId"), 1) === col("del_uid"),
-        "left_semi")
-      .as[Entry]
-
-    val hard = conf.isPh15 || conf.noEtd.contains(conf.db)
-    val afterBase: Dataset[Entry] =
-      if (hard) {
-        snapshot.toDF
-          .join(victims.toDF.select(col("dn").as("vdn")),
-            col("dn") === col("vdn"), "left_anti")
-          .as[Entry]
-      } else {
-        val marked = victims.map(e => Entry(e.dn, softDeleteAttrs(e.attrs, conf)))
-        val markedDf = marked.toDF
-          .select(col("dn").as("vdn"), col("attrs").as("vattrs"))
-        snapshot.toDF
-          .join(markedDf, col("dn") === col("vdn"), "left_outer")
-          .select(col("dn"), coalesce(col("vattrs"), col("attrs")).as("attrs"))
-          .as[Entry]
-      }
-
-    // the cross-tree sweep only exists in ph-deployments; a base dn
-    // without an ou=phXX component has no ph15 sibling (and dn15 would
-    // be undefined — the reference derives it lazily for the same reason)
-    if (hard || !conf.baseDn.contains("ou=ph")) afterBase
-    else deleteInPh15(afterBase, victims.map(e => Directory.rdnValue(e.dn)), conf)
   }
 
   /** Cross-tree sweep: a soft-deleted user whose cn exists exactly once

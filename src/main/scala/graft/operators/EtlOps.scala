@@ -75,15 +75,10 @@ object EtlOps {
     */
   def etlCdcBatch(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // Planning note (round 18): the etlInitialLoad static-width
-    // treatment was tried here and is a measured NEGATIVE — isolated
-    // sf0.1 A/B at HEAD: AQE 2.80 s median / 2.37 s min, static
-    // width-1 6.52 s, static width-4 2.70 s median / 2.61 s min (no
-    // better than AQE, worse at the floor). The CDC tree is deeper
-    // than the load's merge tree and AQE's exchange collapsing/reuse
-    // pays for its job launches, exactly as the q_etl_scale_cdc note
-    // records at data scale — so the fixture cycle keeps AQE too, and
-    // its ~2.5-3 s is a stage-orchestration constant, not data cost.
+    // Planning note: the cycle runs on the driver (Cdc header), so its
+    // Spark work is a few small collects over the fixture and two output
+    // passes; round 18's AQE-vs-static-width A/B here measured the
+    // set-based cycle that ran then, and does not carry over.
     val users0 = Fixture.users(s)
       .filter(!col("pk_uniqueid").isin(Fixture.deletedUids: _*))
     // the fixture is read-only: one version per JVM
@@ -652,14 +647,11 @@ object EtlOps {
     // oracle asserts a verdict per event — a finite cap would silently
     // under-report at a large enough sf
     //
-    // Path note: the cycle takes the path its selected batch fits
-    // (Cdc header). At sf0.001-0.1 the batch (1,000-100,000 events on
-    // 15-1,500 uids) runs on the driver; GenScale sf1's 1M events run
-    // set-based. For that set-based plan, AQE's per-stage replanning
-    // pays for itself by collapsing and reusing exchanges: a static
-    // width REGRESSED it when it was the sf0.1 plan (3.1 s -> 4.5-5.0 s
-    // at widths 1-8; 11 stages / 32 tasks under AQE vs 22 / 163 static),
-    // so the adaptive plan stands.
+    // Chunk note: the cycle runs on the driver, in chunks of at most
+    // `Cdc.driverEventBound` events on `Cdc.driverBatchBound` uids (Cdc
+    // header). At sf0.001-0.1 the batch (1,000-100,000 events on
+    // 15-1,500 uids) is one chunk; GenScale sf1's 1M events on 15,000
+    // uids run as consecutive chunks, cut at the uid bound.
     val r = Cdc.cycle(snap, users, ev,
       scaleConf.copy(etlTimestamp = "20170101000300Z"),
       maxRecords = Int.MaxValue)

@@ -55,8 +55,8 @@ object CdcStream {
     * with the stream checkpoint carrying only source offsets). The
     * trigger's file is the unit of work, so each micro-batch runs
     * unbounded: every pending event in it gets a verdict. As any cycle,
-    * a micro-batch runs on the driver when it fits `Cdc.driverEventBound`
-    * and `Cdc.driverBatchBound`, and set-based otherwise.
+    * a micro-batch over `Cdc.driverEventBound` events or
+    * `Cdc.driverBatchBound` uids runs as consecutive chunks.
     */
   def startStreaming(
       spark: org.apache.spark.sql.SparkSession,

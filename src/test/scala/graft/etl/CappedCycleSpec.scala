@@ -7,12 +7,13 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import Directory.Entry
 
-/** The driver cycle (`CappedCycle`) against the set-based cycle
-  * (`Cdc.cycleSetBased`) on the same inputs: identical per-event
-  * verdicts (status, error_message, attempt), eventlog writeback, rename
-  * queue and `Directory.dump`, for capped batches (`CappedCycle.run` at a
-  * cap of 5,000) and unbounded ones (`Cdc.cycle` at `Int.MaxValue`, which
-  * must take the driver path: its job count is pinned below).
+/** `Cdc.cycle` against the set-based reference (`SetBasedReference`) on
+  * the same inputs: identical per-event verdicts (status, error_message,
+  * attempt), eventlog writeback, rename queue and `Directory.dump`, for
+  * capped batches (`CappedCycle.run` at a cap of 5,000), unbounded ones
+  * (`Cdc.cycle` at `Int.MaxValue`, one chunk: its job count is pinned
+  * below) and unbounded ones over lowered bounds, which run as chunks
+  * and are held to the reference run chunk by chunk.
   *
   * The batches are built from the fixture's user rows. Each random batch
   * lives in a "world" of its own uid range and cn prefix, so the 67
@@ -34,20 +35,38 @@ class CappedCycleSpec extends AnyFunSuite {
   import CappedCycleSpec._
 
   test("capped and set-based cycles agree on 201 seeded random batches") {
-    differential(count = 67, seed = 20261018L, maxRecords = 5000)(
-      CappedCycle.run(_, _, _, _, 5000, _))
+    differential(count = 67, seed = 20261018L)(CappedCycle.run(_, _, _, _, 5000, _),
+      SetBasedReference.cycle(_, _, _, _, 5000, _))
   }
 
   test("unbounded cycles agree with the set-based path on 201 seeded random batches") {
-    differential(count = 67, seed = 20261019L, maxRecords = Int.MaxValue)(
-      Cdc.cycle(_, _, _, _, Int.MaxValue, _))
+    differential(count = 67, seed = 20261019L)(Cdc.cycle(_, _, _, _, Int.MaxValue, _),
+      SetBasedReference.cycle(_, _, _, _, Int.MaxValue, _))
   }
 
-  /** `count` worlds × 3 rounds: `cycle` against `Cdc.cycleSetBased` at
-    * `maxRecords`.
-    */
-  private def differential(count: Int, seed: Long, maxRecords: Int)(cycle: (Dataset[Entry],
-      DataFrame, DataFrame, EtlConf, java.sql.Timestamp) => Cdc.CycleResult): Unit = {
+  test("chunked drains agree with the set-based path run chunk by chunk") {
+    val sc = TestSpark.spark.sparkContext
+    val (evB, uidB) = (40, 24)
+    val chunkCounts = mutable.ArrayBuffer.empty[Int]
+    val kept = mutable.ArrayBuffer.empty[Int]
+    differential(count = 67, seed = 20261019L)({ (snap, users, eventlog, conf, readTime) =>
+      val before = sc.getRDDStorageInfo.map(_.id).toSet
+      val r = Cdc.boundedCycle(snap, users, eventlog, conf, Int.MaxValue, readTime, evB, uidB)
+      kept += (sc.getRDDStorageInfo.map(_.id).toSet -- before).size
+      r
+    }, { (snap, users, eventlog, conf, readTime) =>
+      val ranges = chunkRanges(eventlog, conf, evB, uidB)
+      chunkCounts += ranges.size
+      chunkwise(snap, users, eventlog, conf, readTime, ranges)
+    })
+    info(s"chunks per round: $chunkCounts; RDDs left stored per drain: $kept")
+    assert(chunkCounts.forall(_ >= 5), chunkCounts)
+    // every chunk's snapshot but the one the result reads is released
+    assert(kept.forall(_ <= 1), kept)
+  }
+
+  /** `count` worlds × 3 rounds: `cycle` against `reference`. */
+  private def differential(count: Int, seed: Long)(cycle: CycleFn, reference: CycleFn): Unit = {
     val spark = TestSpark.spark
     val w = new Worlds(spark, count, seed)
     var snap = w.snapshot0
@@ -60,33 +79,37 @@ class CappedCycleSpec extends AnyFunSuite {
         etlTimestamp = f"diff$round%04dZ")
       val eventlog = elog.unionByName(events).localCheckpoint(true)
       val readTime = java.sql.Timestamp.valueOf(s"2026-01-0$round 00:00:00")
+      val pending = eventlog.filter(rtrim(col("status")).isin("N", "E"))
+        .select("record_id").collect().map(_.getDouble(0)).sorted.toSeq
       val got = cycle(snap, users, eventlog, conf, readTime)
-      val setBased = Cdc.cycleSetBased(snap, users, eventlog, conf, maxRecords, readTime)
-      val (sbSnap, sbElog) =
-        (setBased.snapshot.localCheckpoint(true), setBased.eventlog.localCheckpoint(true))
+      val ref = reference(snap, users, eventlog, conf, readTime)
+      val (refSnap, refElog) =
+        (ref.snapshot.localCheckpoint(true), ref.eventlog.localCheckpoint(true))
 
-      val (vc, vs) = (verdicts(got.eventUpdates), verdicts(setBased.eventUpdates))
-      assert(vc.size == vs.size && vc.size == got.selected, s"round $round counts")
+      val (vc, vs) = (verdicts(got.eventUpdates), verdicts(ref.eventUpdates))
+      // every selected event gets exactly one verdict
+      assert(vc.map(_._1) == pending && got.selected == pending.size, s"round $round counts")
+      assert(vs.map(_._1) == pending, s"round $round reference counts")
       vc.zip(vs).foreach { case (c, s) => assert(c == s, s"round $round verdict") }
-      assert(renames(got) == renames(setBased), s"round $round renames")
-      assert(got.renameQueued == renames(setBased).nonEmpty)
-      val dump = Directory.dump(sbSnap)
+      assert(renames(got) == renames(ref), s"round $round renames")
+      assert(got.renameQueued == renames(ref).nonEmpty)
+      val dump = Directory.dump(refSnap)
       assert(Directory.dump(got.snapshot) == dump, s"round $round dump")
       assert(verdicts(got.eventlog.select(col("record_id"),
         col("status").as("new_status"), col("error_message").as("new_error"),
-        col("attempt").as("new_attempt"))) == verdicts(sbElog.select(
+        col("attempt").as("new_attempt"))) == verdicts(refElog.select(
         col("record_id"), col("status").as("new_status"),
         col("error_message").as("new_error"), col("attempt").as("new_attempt"))),
         s"round $round writeback")
 
       vs.foreach { v => seen(v._2) += 1 }
       events.select("event_type").collect().foreach(r => seen(s"type ${r.get(0)}") += 1)
-      seen("renames") += renames(setBased).size
+      seen("renames") += renames(ref).size
       seen("ambiguous") += vs.count(_._3.exists(_.contains("more than one record")))
       seen("deleted-cn") += vs.count(_._3.exists(_.startsWith("Found deleted record")))
       seen("retry-ceiling") += vs.count(v => v._2 == "F" && v._4.contains(12.0))
-      snap = sbSnap
-      elog = sbElog
+      snap = refSnap
+      elog = refElog
       if (round == 2) snap = SyncEngine.setEtdDone(snap, None).localCheckpoint(true)
     }
     info(s"covered: ${seen.toSeq.sorted.mkString(", ")}")
@@ -96,7 +119,7 @@ class CappedCycleSpec extends AnyFunSuite {
       assert(seen(k) > 0, s"no $k in ${seen.toMap}")
   }
 
-  test("a state the capped path does not model falls back to the set-based path") {
+  test("the former fallback states fail or equal the set-based path") {
     val spark = TestSpark.spark
     import spark.implicits._
     val users0 = Fixture.users(spark).collect().toSeq
@@ -123,42 +146,54 @@ class CappedCycleSpec extends AnyFunSuite {
     val events = (rid: Any) => spark.createDataFrame(java.util.List.of(
       eventRow(rid, s"pk_uniqueid=${uidOf(ua)}", 6.0),
       eventRow(11.0, s"pk_uniqueid=${uidOf(ub)}", 6.0)), EtlSchema.eventSchema)
-    // (reason, snapshot, eventlog, cap, event bound, uid bound)
-    val (cap, evB, uidB) = (100, Cdc.driverEventBound, Cdc.driverBatchBound)
-    val cases = Seq(
-      ("a selected event has no record_id", loaded, events(null), cap, evB, uidB),
-      ("a dn occurs twice", withEntries(Entry(uaDn, uaAttrs + ("sn" -> Seq("Twice")))),
-        events(10.0), cap, evB, uidB),
-      // the entry under ua's cn in upper case is renamed onto ua's dn
-      ("a change lands on the existing dn", withEntries(Entry(s"cn=UA,${Fixture.ph08}",
-        uaAttrs + ("cn" -> Seq("UA")))), events(10.0), cap, evB, uidB),
-      // both ua entries change a write-through column of one ph15 twin
-      ("two write-through patches for one ph15 twin",
-        withEntries(Entry(s"cn=UA,${Fixture.ph08}", uaAttrs)), events(10.0), cap, evB, uidB),
-      // an unbounded batch of two events on two uids, over lowered bounds
-      ("the batch holds more than 1 events", loaded, events(10.0), Int.MaxValue, 1, uidB),
-      ("the batch holds more than 1 distinct uids", loaded, events(10.0), Int.MaxValue,
-        evB, 1))
     val readTime = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
+    val (evB, uidB) = (Cdc.driverEventBound, Cdc.driverBatchBound)
     def rows(df: DataFrame): Seq[String] = df.collect().toSeq.map(_.toString).sorted
     def lines(snap: Dataset[Entry]): Seq[String] =
       Directory.dump(snap).split("\n").toSeq.sorted
-    for ((why, snap, elog, max, eventBound, uidBound) <- cases) {
-      val e = intercept[CappedCycle.Unmodelled](
-        CappedCycle.run(snap, changed, elog, conf, max, readTime, eventBound, uidBound))
-      assert(e.getMessage.startsWith(why), e.getMessage)
-      val viaCycle = Cdc.boundedCycle(snap, changed, elog, conf, max, readTime,
-        eventBound, uidBound)
-      val setBased = Cdc.cycleSetBased(snap, changed, elog, conf, max, readTime)
-      assert(rows(viaCycle.eventUpdates) == rows(setBased.eventUpdates), why)
-      assert(rows(viaCycle.eventlog) == rows(setBased.eventlog), why)
-      assert(lines(viaCycle.snapshot) == lines(setBased.snapshot), why)
+
+    // a snapshot that breaks the Directory invariant fails the cycle,
+    // naming the dn: (why, snapshot, the dn)
+    val broken = Seq(
+      ("the dn", withEntries(Entry(uaDn, uaAttrs + ("sn" -> Seq("Twice")))), uaDn),
+      // the entry under ua's cn in upper case is renamed onto ua's dn
+      ("a change lands on the existing dn", withEntries(Entry(s"cn=UA,${Fixture.ph08}",
+        uaAttrs + ("cn" -> Seq("UA")))), uaDn),
+      // both ua entries change a write-through column of one ph15 twin
+      ("two write-through patches for the ph15 twin",
+        withEntries(Entry(s"cn=UA,${Fixture.ph08}", uaAttrs)),
+        s"cn=ua,${Fixture.ph15}".toLowerCase))
+    for ((why, snap, dn) <- broken) {
+      val e = intercept[IllegalStateException](
+        Cdc.cycle(snap, changed, events(10.0), conf, 100, readTime))
+      assert(e.getMessage.startsWith(s"$why") && e.getMessage.contains(dn), e.getMessage)
     }
-    // within the bounds, the same unbounded batch runs on the driver
-    val inBound = CappedCycle.run(loaded, changed, events(10.0), conf, Int.MaxValue,
-      readTime, 2, 2)
-    assert(rows(inBound.eventUpdates) == rows(Cdc.cycleSetBased(loaded, changed,
-      events(10.0), conf, Int.MaxValue, readTime).eventUpdates))
+
+    // the rest equal the reference, chunk by chunk where the cycle chunks:
+    // (why, eventlog, cap, event bound, uid bound, chunks)
+    val ok = Seq(
+      // its verdict cannot be written back: the eventlog row stays N
+      ("a selected event has no record_id", events(null), 100, evB, uidB, 1),
+      ("an unbounded batch over the event bound", events(10.0), Int.MaxValue, 1, uidB, 2),
+      ("an unbounded batch over the uid bound", events(10.0), Int.MaxValue, evB, 1, 2),
+      ("an unbounded batch within the bounds", events(10.0), Int.MaxValue, 2, 2, 1))
+    for ((why, elog, max, eventBound, uidBound, n) <- ok) {
+      val got = Cdc.boundedCycle(loaded, changed, elog, conf, max, readTime,
+        eventBound, uidBound)
+      val ranges = chunkRanges(elog, conf, eventBound, uidBound)
+      assert(ranges.size == n, why)
+      val ref =
+        if (n == 1) SetBasedReference.cycle(loaded, changed, elog, conf, max, readTime)
+        else chunkwise(loaded, changed, elog, conf, readTime, ranges)
+      assert(got.selected == 2, why)
+      assert(rows(got.eventUpdates) == rows(ref.eventUpdates), why)
+      assert(rows(got.eventlog) == rows(ref.eventlog), why)
+      assert(lines(got.snapshot) == lines(ref.snapshot), why)
+    }
+    val noRid = Cdc.cycle(loaded, changed, events(null), conf, 100, readTime)
+    assert(noRid.eventUpdates.filter(col("record_id").isNull).count() == 1)
+    assert(noRid.eventlog.filter(col("record_id").isNull)
+      .select(rtrim(col("status"))).as[String].collect().toSeq == Seq("N"))
   }
 
   test("an unbounded batch within the bounds runs on the driver: few jobs, nothing stored") {
@@ -190,7 +225,7 @@ class CappedCycleSpec extends AnyFunSuite {
     val (driverJobs, driverKept) =
       measure(Cdc.cycle(w.snapshot0, users, events, conf, Int.MaxValue, readTime))
     val (setJobs, setKept) =
-      measure(Cdc.cycleSetBased(w.snapshot0, users, events, conf, Int.MaxValue, readTime))
+      measure(SetBasedReference.cycle(w.snapshot0, users, events, conf, Int.MaxValue, readTime))
     info(s"jobs: driver path $driverJobs, set-based $setJobs")
     assert(driverJobs <= 10, s"driver path ran $driverJobs jobs (set-based $setJobs)")
     assert(driverKept.isEmpty, s"driver path left RDDs $driverKept stored")
@@ -228,6 +263,51 @@ class CappedCycleSpec extends AnyFunSuite {
 
 object CappedCycleSpec {
   type Verdict = (Double, String, Option[String], Option[Double])
+  type CycleFn = (Dataset[Entry], DataFrame, DataFrame, EtlConf,
+    java.sql.Timestamp) => Cdc.CycleResult
+
+  /** The record_id ranges of a drain's chunks, cut as `Cdc.cycle` cuts an
+    * unbounded selection over its bounds: in record_id order, at most
+    * `eventBound` events on at most `uidBound` distinct valid uids each.
+    */
+  def chunkRanges(eventlog: DataFrame, conf: EtlConf, eventBound: Int,
+      uidBound: Int): Seq[(Option[Double], Option[Double])] = {
+    val sel = Cdc.validate(Cdc.selectBatch(eventlog, Int.MaxValue), conf)
+      .select(col("record_id"), col("uid")).collect().toSeq
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Double]),
+        Option(r.get(1)).map(_.asInstanceOf[Long])))
+      .sortBy(_._1)
+    val chunks = mutable.ArrayBuffer(mutable.ArrayBuffer.empty[(Option[Double], Option[Long])])
+    for (e <- sel) {
+      val uids = chunks.last.flatMap(_._2).toSet
+      if (chunks.last.size == eventBound || (uids.size == uidBound && e._2.exists(!uids(_))))
+        chunks += mutable.ArrayBuffer.empty
+      chunks.last += e
+    }
+    chunks.toSeq.map(c => (c.head._1, c.last._1))
+  }
+
+  /** The set-based reference run once per chunk range, each run on the
+    * snapshot the one before left and on the eventlog restricted to its
+    * range; the verdicts are written back to the whole eventlog at once.
+    * The ranges hold no null record_id.
+    */
+  def chunkwise(snap0: Dataset[Entry], users: DataFrame, eventlog: DataFrame,
+      conf: EtlConf, readTime: java.sql.Timestamp,
+      ranges: Seq[(Option[Double], Option[Double])]): Cdc.CycleResult = {
+    var snap = snap0
+    val rs = ranges.map { case (lo, hi) =>
+      val r = SetBasedReference.cycle(snap, users,
+        eventlog.filter(col("record_id").between(lo.get, hi.get)), conf, Int.MaxValue,
+        readTime)
+      snap = r.snapshot.localCheckpoint(true)
+      (r.eventUpdates.localCheckpoint(true), r.renames.localCheckpoint(true))
+    }
+    val updates = rs.map(_._1).reduce(_ unionByName _)
+    val renames = rs.map(_._2).reduce(_ unionByName _)
+    Cdc.CycleResult(snap, Cdc.writeback(eventlog, updates), updates, renames,
+      updates.count(), !renames.isEmpty)
+  }
 
   def verdicts(updates: DataFrame): Seq[Verdict] =
     updates.select(col("record_id"), rtrim(col("new_status")), col("new_error"),
@@ -238,18 +318,18 @@ object CappedCycleSpec {
   def renames(r: Cdc.CycleResult): Seq[(String, String)] =
     r.renames.collect().toSeq.map(x => (x.getString(0), x.getString(1))).sorted
 
-  private val idx = EtlSchema.userFields.zipWithIndex.toMap
+  private[etl] val idx = EtlSchema.userFields.zipWithIndex.toMap
 
-  private def set(r: Row, kv: (String, Any)*): Row = {
+  private[etl] def set(r: Row, kv: (String, Any)*): Row = {
     val a = r.toSeq.toArray
     kv.foreach { case (k, v) => a(idx(k)) = v }
     Row.fromSeq(a.toSeq)
   }
 
-  private def uidOf(r: Row): Long = r.getDouble(idx("pk_uniqueid")).toLong
+  private[etl] def uidOf(r: Row): Long = r.getDouble(idx("pk_uniqueid")).toLong
 
   /** One N event; `rid` may be null. */
-  private def eventRow(rid: Any, key: String, typ: Double,
+  private[etl] def eventRow(rid: Any, key: String, typ: Double,
       table: String = "benutzer_alle_dirxml_v", attempt: Any = null): Row =
     Row(rid, key, "N  ", typ, java.sql.Timestamp.valueOf("2017-07-11 10:00:00"),
       "TEST", table, null, null, null, null, "N  ", "N  ", null, null, attempt, "N  ")

@@ -94,8 +94,8 @@ class CdcScenarioSpec extends AnyFunSuite {
 
       val conf = conf0.copy(etlTimestamp = f"201701010001${i + 1}%02dZ")
       val r = Cdc.cycle(snap, db, elog, conf)
-      // the set-based path gives the same verdicts and directory
-      val sb = Cdc.cycleSetBased(snap, db, elog, conf, 100, new java.sql.Timestamp(0))
+      // the set-based reference gives the same verdicts and directory
+      val sb = SetBasedReference.cycle(snap, db, elog, conf, 100, new java.sql.Timestamp(0))
       val verdicts = (u: DataFrame) => u.select("record_id", "new_status",
         "new_error", "new_attempt").collect().toSeq.map(_.toString).sorted
       assert(verdicts(sb.eventUpdates) == verdicts(r.eventUpdates),

@@ -8,13 +8,13 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import Directory.Entry
 
-/** Plan-hygiene gate: the CDC cycle must emit ZERO HintErrorLogger
-  * warnings. A broadcast hint that lands on an unusable side (e.g. the
-  * left/stream side of a left_anti) is silently dropped by Spark with a
-  * "Hint ... is not supported" warning — harmless for results but a
-  * signal that a hint is decorating the wrong join site. The hinted
-  * uid-set must only feed the left_semi lookup (build side), never the
-  * anti-join sweep (round-10 finding 3).
+/** Plan-hygiene gate: the CDC cycle, one chunk or several, and the
+  * ph15 rename pass must emit ZERO HintErrorLogger warnings. A broadcast
+  * hint that lands on an unusable side (e.g. the left/stream side of a
+  * left_anti) is silently dropped by Spark with a "Hint ... is not
+  * supported" warning — harmless for results but a signal that a hint is
+  * decorating the wrong join site. The cycle's hinted eventlog updates
+  * must only be the build side of the writeback's left outer join.
   */
 class HintHygieneSpec extends AnyFunSuite {
 
@@ -60,15 +60,19 @@ class HintHygieneSpec extends AnyFunSuite {
         mkEvent(2.0, "424242")))  // absent → anti-join delete-mark path
         .toDF(EtlSchema.eventFields: _*)
 
-      // both paths: `Cdc.cycle` at its default cap runs the capped one;
-      // the set-based one carries the hinted semi-join
+      // one chunk at the default cap, and an unbounded drain over
+      // lowered bounds, which runs as one chunk per event
       val readTime = java.sql.Timestamp.valueOf("2017-07-11 10:00:00")
       for (r <- Seq(Cdc.cycle(pre.snapshot, users, elog, conf),
-          Cdc.cycleSetBased(pre.snapshot, users, elog, conf, 100, readTime))) {
+          Cdc.boundedCycle(pre.snapshot, users, elog, conf, Int.MaxValue, readTime, 1, 1))) {
         r.snapshot.count()
         r.eventUpdates.count()
         r.eventlog.count()
       }
+      // the ph15 rename pass (C3) over a queued rename of uid 1's cn
+      val cn = users.select(trim(col("benutzername"))).as[String].head()
+      Cdc.updatePh15Cn(pre.snapshot, users, Seq(("old" + cn, cn)).toDF("old_cn", "new_cn"),
+        conf.copy(baseDn = "ou=user,ou=ph15,o=BMUKK")).count()
 
       val hits = cap.messages.toArray(Array.empty[String])
         .filter(m => m.contains("not supported") || m.contains("Hint"))

@@ -71,15 +71,16 @@ class DrainPoolSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     val q = graft.operators.StreamToolOps.queries("q_stream_static")
     q(spark, dir).count()
-    val listeners = org.apache.spark.ListenerCount.of(sc)
+    val before = org.apache.spark.Listeners.of(sc)
     val frames = Seq.fill(3)(q(spark, dir))
     frames.foreach(_.count())
     // each drain's child session, and the clone its stream runs in,
     // registers a streaming listener bus on the shared SparkContext; a
     // drain that left them there would grow the context's bus with
-    // every execution
-    assert(org.apache.spark.ListenerCount.of(sc) == listeners,
-      "drains left listeners on the SparkContext")
+    // every execution. Compared as instances: a listener of an earlier
+    // suite that goes meanwhile must not hide one the drains added
+    val added = org.apache.spark.Listeners.of(sc) -- before
+    assert(added.isEmpty, s"drains left listeners on the SparkContext: $added")
     // each drain's sink table lives in its own child session, so the
     // caller's catalog never accumulates one per execution
     val callerTables = spark.catalog.listTables()
