@@ -30,10 +30,13 @@ import SyncEngine.{MatchIn, MergeRow}
   * distinct uids (an unbounded outage drain) runs as consecutive chunks
   * in record_id order, each within both bounds and each on the snapshot
   * the one before it left: the reference's own drain, capped batches run
-  * back to back without a sleep (etl.py:604–606, 419–423).
+  * back to back without a sleep (etl.py:604–606, 419–423). The ph15
+  * rename pass (`updatePh15Cn`) is the same driver merge over the user
+  * rows its queue names.
   */
 object Cdc {
-  /** Most distinct valid uids one chunk of a cycle holds (`CappedCycle`).
+  /** Most distinct valid uids one chunk of a cycle holds, and most keys
+    * one chunk of the ph15 rename pass holds (`CappedCycle`).
     * The driver-held inputs that grow with a chunk, its user rows and the
     * snapshot entries it touches, grow with its distinct uids, not with
     * its events. Measured near this bound: a poll cycle of 10,000 events
@@ -62,9 +65,8 @@ object Cdc {
       snapshot: Dataset[Entry],
       eventlog: DataFrame,        // full table with statuses written back
       eventUpdates: DataFrame,    // record_id, status, error_message, attempt
-      renames: DataFrame,         // old_cn, new_cn queue for ph15 (C3)
-      selected: Long,             // events the cycle selected
-      renameQueued: Boolean)      // whether `renames` is non-empty
+      renames: Seq[(String, String)], // (old_cn, new_cn) queue for ph15 (C3)
+      selected: Long)             // events the cycle selected
 
   /** C8's inputs for one valid event: the event's own fields plus its
     * uid's merge aggregates. `row_n` counts the uid's user rows (also
@@ -136,17 +138,7 @@ object Cdc {
       conf: EtlConf, maxRecords: Int = 100,
       readTime: java.sql.Timestamp = new java.sql.Timestamp(System.currentTimeMillis / 1000 * 1000))
       : CycleResult =
-    boundedCycle(snapshot0, users, eventlog, conf, maxRecords, readTime,
-      driverEventBound, driverBatchBound)
-
-  /** `cycle` with the chunk bounds as parameters, so that a test can
-    * lower them.
-    */
-  private[etl] def boundedCycle(snapshot0: Dataset[Entry], users: DataFrame,
-      eventlog: DataFrame, conf: EtlConf, maxRecords: Int,
-      readTime: java.sql.Timestamp, eventBound: Int, uidBound: Int): CycleResult =
-    CappedCycle.run(snapshot0, users, eventlog, conf, maxRecords, readTime,
-      eventBound, uidBound)
+    CappedCycle.run(snapshot0, users, eventlog, conf, maxRecords, readTime)
 
   /** C6 — collect already-ETD-synced deleted entries at cycle start; the
     * reference never garbage-collects the ph15 instance itself
@@ -299,67 +291,62 @@ object Cdc {
   }
 
   /** C3 — end-of-cycle rename propagation into ph15 (etl.py:762–781):
-    * re-sync user rows whose benutzername matches either side of a
-    * queued rename, against the ph15 base.
+    * re-sync the user rows whose trimmed benutzername is either side of a
+    * queued rename against the ph15 base, with the cycle's driver merge
+    * (`CappedCycle.renamePass`). Every row is an update (`isNew = false`);
+    * there is no GC, delete, write-through or verdict.
     *
-    * Scale bound: `renames` holds one row per renaming merge outcome of
-    * the batches it was collected from, so it grows with those batches,
-    * not with the snapshot or the user table: ≤ `maxRecords` for one
-    * capped cycle (100 in the reference's poll loop), but as large as an
-    * unbounded drain or a streaming micro-batch, and `CdcStream.run`
-    * unions the queues of all its sources. The key set is ≤ 2× that. We
-    * deliberately do NOT hint `broadcast(keys)`: Catalyst's
-    * size-estimated auto-broadcast makes the choice when the frame is
-    * small, and a large queue degrades to a shuffle semi join instead of
-    * a driver OOM. RenameCascadeSpec pins the absence of an
-    * unconditional hint.
+    * Scale: the queue holds one rename per renaming merge outcome of the
+    * cycles it was collected from, so it grows with their batches, not
+    * with the snapshot or the user table. Its keys are cut into chunks of
+    * at most `driverBatchBound` keys, a rename's two cns in one chunk,
+    * each run on the snapshot the one before it left, so the driver holds
+    * one chunk's user rows and entries.
     */
   def updatePh15Cn(snapshot: Dataset[Entry], users: DataFrame,
-      renames: DataFrame, ph15Conf: EtlConf): Dataset[Entry] = {
-    if (renames.isEmpty) return snapshot
-    val keys = renames.select(col("old_cn").as("k"))
-      .unionByName(renames.select(col("new_cn").as("k")))
-      .distinct()
-    val hit = users.join(keys, trim(col("benutzername")) === col("k"),
-      "left_semi")
-    val rows = SyncEngine.toNewRows(hit).withColumn("is_new", lit(false))
-    SyncEngine.merge(snapshot, rows, ph15Conf)._1
-  }
+      renames: Seq[(String, String)], ph15Conf: EtlConf): Dataset[Entry] =
+    CappedCycle.renamePass(snapshot, users, renames, ph15Conf)
 }
 
-/** The CDC cycle (`Cdc.cycle`), computed on the driver. The selection
+/** The CDC cycle (`Cdc.cycle`) and the ph15 rename pass
+  * (`Cdc.updatePh15Cn`), computed on the driver. The cycle's selection
   * is collected whole; one within `Cdc.driverEventBound` events and
   * `Cdc.driverBatchBound` distinct valid uids is one chunk, and a larger
   * one is cut in record_id order into consecutive chunks within both
   * bounds. GC (C6) runs once, before the first chunk; each chunk then
-  * runs on the snapshot the one before it left. For each chunk, Spark
-  * runs:
+  * runs on the snapshot the one before it left (`chained`). For each
+  * chunk, Spark runs:
   *
   *  1. the chunk's user rows (`SyncEngine.toNewRows`, with the cn-dedup
-  *     content hash), collected;
+  *     content hash), collected (`userRows`);
   *  2. the entries of the snapshot the chunk touches: lower(rdn) is one
   *     of its cns or the uid one of its uids, under any base (cn match,
-  *     uid fallback and ambiguity, ph15 twins), collected;
+  *     uid fallback and ambiguity, ph15 twins), collected
+  *     (`touchedEntries`);
   *  3. only when the chunk deletes: the entries whose cn is a victim's
   *     cn, for the ph15 sweep, collected;
   *  4. the snapshot: the one before minus the changed and removed dns,
-  *     plus the local upserts; checkpointed when another chunk follows.
+  *     plus the local upserts (`commit`); checkpointed when another chunk
+  *     follows.
   *
   * Everything in between — cn-dedup, J2 matching, the merge kernel
-  * (`SyncEngine.mergeOne`), one change per dn, deletes, the ph15 sweep
-  * and write-through, the C8 per-uid aggregates with `Cdc.verdict` per
-  * event, and the rename queue — is driver code over one chunk's
-  * collections, so the driver never holds more than one chunk's user
-  * rows and entries. Ties are broken by comparing strings as UTF-8 bytes,
-  * as Spark does. The eventlog takes the shared writeback over every
-  * chunk's verdicts, once.
+  * (`SyncEngine.mergeOne`) and one change per dn (`mergeInto`), deletes,
+  * the ph15 sweep (`SyncEngine.ph15Sweep`) and write-through, the C8
+  * per-uid aggregates with `Cdc.verdict` per event, and the rename queue
+  * — is driver code over one chunk's collections, so the driver never
+  * holds more than one chunk's user rows and entries. Ties are broken by
+  * comparing strings as UTF-8 bytes, as Spark does. The eventlog takes
+  * the shared writeback over every chunk's verdicts, once.
+  *
+  * The rename pass runs steps 1, 2 and 4 with `mergeInto` between them,
+  * over chunks of the rename queue's keys (`renameChunks`).
   *
   * The snapshot's `dn` is unique (the Directory invariant), and matching
   * and cn-dedup are case-insensitive, so the engine never writes two dns
   * under one parent that equal case-insensitively. A snapshot that holds
   * a dn twice, or such a pair that a chunk's changes make collide, is
-  * reported: `run` throws an `IllegalStateException` naming the dn,
-  * before any output.
+  * reported: `run` and `renamePass` throw an `IllegalStateException`
+  * naming the dn, before any output.
   */
 private[etl] object CappedCycle {
 
@@ -369,9 +356,7 @@ private[etl] object CappedCycle {
   case class Ev(record_id: Option[Double], v_error: Option[String],
       uid: Option[Long], event_type: Option[Double], attempt_now: Option[Int])
 
-  /** One converted user row with its cn-dedup content hash; `src_uid`
-    * is one of the batch's uids.
-    */
+  /** One converted user row with its cn-dedup content hash. */
   case class UserRow(src_cn: String, src_uid: String, pw_plain: Option[String],
       new_attrs: Map[String, Seq[String]], h: Long)
 
@@ -392,8 +377,9 @@ private[etl] object CappedCycle {
     * hash, then password (nulls last).
     */
   private val dedupOrder: Ordering[UserRow] =
-    Ordering.by((r: UserRow) => (r.src_uid.toLong, r.h, r.pw_plain))(Ordering.Tuple3(
-      Ordering.Long.reverse, Ordering.Long.reverse, Ordering.Option(utf8Order).reverse))
+    Ordering.by((r: UserRow) => (Option(r.src_uid).map(_.toLong), r.h, r.pw_plain))(
+      Ordering.Tuple3(Ordering.Option(Ordering.Long).reverse, Ordering.Long.reverse,
+        Ordering.Option(utf8Order).reverse))
 
   private def maxUtf8(xs: Iterable[String]): Option[String] =
     xs.reduceOption((a, b) => if (utf8Order.gteq(a, b)) a else b)
@@ -416,16 +402,39 @@ private[etl] object CappedCycle {
         when(col("v_error").isNull,
           coalesce(col("attempt"), lit(0.0)).cast("int")).as("attempt_now"))
       .as[Ev].collect().toSeq
-    val chunks = chunked(evs, eventBound, uidBound)
+    val (snap, outs) = chained(Cdc.collectGarbage(snapshot0, conf), partitionsOf(snapshot0),
+      chunked(evs, eventBound, uidBound))(runChunk(_, _, users, _, conf, readTime))
+    val updatesDf = outs.flatMap(_._1).toDF
+    Cdc.CycleResult(snap, Cdc.writeback(eventlog, broadcast(updatesDf)), updatesDf,
+      outs.flatMap(_._2), evs.size.toLong)
+  }
 
-    var snap = Cdc.collectGarbage(snapshot0, conf)
-    var parts = partitionsOf(snapshot0)
-    val updates = mutable.ArrayBuffer.empty[Cdc.Update]
-    val renames = mutable.ArrayBuffer.empty[(String, String)]
-    for ((chunk, i) <- chunks.zipWithIndex) {
-      val (next, u, r) = runChunk(snap, parts, users, chunk, conf, readTime)
-      updates ++= u
-      renames ++= r
+  /** C3 — `Cdc.updatePh15Cn` over key chunks of at most `keyBound` keys. */
+  def renamePass(snapshot: Dataset[Entry], users: DataFrame,
+      renames: Seq[(String, String)], conf: EtlConf,
+      keyBound: Int = Cdc.driverBatchBound): Dataset[Entry] =
+    chained(snapshot, partitionsOf(snapshot), renameChunks(renames, keyBound)) {
+      (snap, parts, keys) =>
+        val rows = userRows(SyncEngine.toNewRows(
+          users.filter(trim(col("benutzername")).isInCollection(keys))))
+        val dir = new Overlay(touchedEntries(snap, rows,
+          rows.flatMap(r => Option(r.src_uid)).distinct, None))
+        mergeInto(dir, rows, conf)
+        (commit(snap, parts, dir), ())
+    }._1
+
+  /** `step` over `chunks` in order, each on the snapshot the one before it
+    * left: the last snapshot and every chunk's output. `parts0` is the
+    * partition count to keep the snapshot at, when it is known without a
+    * job.
+    */
+  private def chained[C, A](snap0: Dataset[Entry], parts0: Option[Int], chunks: Seq[C])(
+      step: (Dataset[Entry], Option[Int], C) => (Dataset[Entry], A))
+      : (Dataset[Entry], Seq[A]) = {
+    var snap = snap0
+    var parts = parts0
+    val outs = chunks.zipWithIndex.map { case (chunk, i) =>
+      val (next, out) = step(snap, parts, chunk)
       if (i == chunks.size - 1) snap = next
       else {
         // the next chunk reads this one's snapshot: stored, so that the
@@ -439,10 +448,9 @@ private[etl] object CappedCycle {
         snap = kept
         parts = partitionsOf(kept)
       }
+      out
     }
-    val updatesDf = updates.toSeq.toDF
-    Cdc.CycleResult(snap, Cdc.writeback(eventlog, broadcast(updatesDf)), updatesDf,
-      renames.toSeq.toDF("old_cn", "new_cn"), evs.size.toLong, renames.nonEmpty)
+    (snap, outs)
   }
 
   /** The selection as chunks: whole when it is within both bounds (in
@@ -452,71 +460,81 @@ private[etl] object CappedCycle {
     */
   private[etl] def chunked(evs: Seq[Ev], eventBound: Int, uidBound: Int): Seq[Seq[Ev]] =
     if (evs.size <= eventBound && evs.flatMap(_.uid).distinct.size <= uidBound) Seq(evs)
-    else {
-      val out = mutable.ArrayBuffer.empty[Seq[Ev]]
-      val cur = mutable.ArrayBuffer.empty[Ev]
-      val uids = mutable.Set.empty[Long]
-      evs.sortBy(_.record_id).foreach { e =>
-        val full = cur.size == eventBound ||
-          (uids.size == uidBound && e.uid.exists(u => !uids(u)))
-        if (full && cur.nonEmpty) {
-          out += cur.toSeq
-          cur.clear()
-          uids.clear()
-        }
-        cur += e
-        uids ++= e.uid
-      }
-      out += cur.toSeq
-      out.toSeq
-    }
+    else cut(evs.sortBy(_.record_id), eventBound, uidBound)(_.uid.toSeq)
 
-  /** One chunk on `snap`: the snapshot after it, its eventlog updates and
-    * its rename queue. `parts` is the partition count to keep the
-    * snapshot at, when it is known without a job.
+  /** The rename queue as chunks of its keys: the distinct renames in
+    * UTF-8 order, cut where a rename would take a chunk past `keyBound`
+    * distinct cns. A rename is never split.
     */
-  private def runChunk(snap: Dataset[Entry], parts: Option[Int], users: DataFrame,
-      evs: Seq[Ev], conf: EtlConf, readTime: java.sql.Timestamp)
-      : (Dataset[Entry], Seq[Cdc.Update], Seq[(String, String)]) = {
-    val spark = snap.sparkSession
-    import spark.implicits._
-    val valid = evs.filter(_.v_error.isEmpty)
-    val batchUids = valid.map(_.uid.get.toString).distinct
+  private[etl] def renameChunks(renames: Seq[(String, String)], keyBound: Int)
+      : Seq[Seq[String]] =
+    cut(renames.distinct.sorted(Ordering.Tuple2(utf8Order, utf8Order)), Int.MaxValue,
+      keyBound)(r => Seq(r._1, r._2)).map(_.flatMap(r => Seq(r._1, r._2)).distinct)
 
-    // 1 — the chunk's user rows (J1 on pk_uniqueid cast to long, in its
-    // string form `src_uid`)
-    val rows: Seq[UserRow] =
-      if (batchUids.isEmpty) Nil
-      else SyncEngine.toNewRows(users)
-        .filter(col("src_uid").isInCollection(batchUids))
-        .select(col("src_cn"), col("src_uid"), col("pw_plain"),
-          col("new_attrs"), SyncEngine.cnDedupHash.as("h"))
-        .as[UserRow].collect().toSeq
+  /** `xs` in order as consecutive chunks of at most `sizeBound` items on
+    * at most `keyBound` distinct keys; an empty chunk takes any item.
+    */
+  private def cut[T, K](xs: Seq[T], sizeBound: Int, keyBound: Int)(keysOf: T => Seq[K])
+      : Seq[Seq[T]] = {
+    val out = mutable.ArrayBuffer.empty[Seq[T]]
+    val cur = mutable.ArrayBuffer.empty[T]
+    val keys = mutable.Set.empty[K]
+    xs.foreach { x =>
+      val ks = keysOf(x)
+      if (cur.nonEmpty &&
+          (cur.size == sizeBound || keys.size + ks.distinct.count(!keys(_)) > keyBound)) {
+        out += cur.toSeq
+        cur.clear()
+        keys.clear()
+      }
+      cur += x
+      keys ++= ks
+    }
+    if (cur.nonEmpty) out += cur.toSeq
+    out.toSeq
+  }
 
-    // 2 — the touched entries of the snapshot
-    val writethrough = conf.ph15Dn.nonEmpty && !conf.isPh15
+  /** Step 1: `newRows` (columns of `SyncEngine.toNewRows`) with the
+    * cn-dedup content hash, collected.
+    */
+  private def userRows(newRows: DataFrame): Seq[UserRow] = {
+    import newRows.sparkSession.implicits._
+    newRows.select(col("src_cn"), col("src_uid"), col("pw_plain"), col("new_attrs"),
+      SyncEngine.cnDedupHash.as("h")).as[UserRow].collect().toSeq
+  }
+
+  /** Step 2: the entries of `snap` that a merge of `rows` reads, and the
+    * ones that carry one of `uids`, under any base; with `twinBase`, also
+    * the twins of the rows' cns under it. Collected.
+    */
+  private def touchedEntries(snap: Dataset[Entry], rows: Seq[UserRow], uids: Seq[String],
+      twinBase: Option[String]): Seq[Entry] = {
     val srcCns = rows.flatMap(r => Option(r.src_cn)).distinct
     val cnKeys = srcCns.map(_.toLowerCase).distinct
-    lazy val twinKeys = srcCns.map(c => s"cn=$c,${conf.dn15}".toLowerCase)
     val touchedBy = Seq(
       Option.when(cnKeys.nonEmpty)(
         lower(Directory.rdnValueCol(col("dn"))).isInCollection(cnKeys)),
-      Option.when(batchUids.nonEmpty)(
-        element_at(col("attrs")("phonlineUniqueId"), 1).isInCollection(batchUids)),
-      Option.when(writethrough && srcCns.nonEmpty)(
-        lower(col("dn")).isInCollection(twinKeys))).flatten
-    val touched = touchedBy.reduceOption(_ || _)
-      .map(c => snap.filter(c).collect().toSeq).getOrElse(Nil)
+      Option.when(uids.nonEmpty)(
+        element_at(col("attrs")("phonlineUniqueId"), 1).isInCollection(uids)),
+      twinBase.filter(_ => srcCns.nonEmpty).map(b =>
+        lower(col("dn")).isInCollection(srcCns.map(c => s"cn=$c,$b".toLowerCase)))).flatten
+    touchedBy.reduceOption(_ || _).map(c => snap.filter(c).collect().toSeq).getOrElse(Nil)
+  }
 
-    val dir = new Overlay(touched)
-
-    // J2 match + typed kernel over the cn-deduped rows
+  /** cn-dedup, J2 match and the kernel (`isNew = false`) of `rows`
+    * against the entries of `dir` under the base, with one change per
+    * consumed dn (highest uid, then cn) and the adds applied to `dir`.
+    * Returns the kernel's outcomes and the cn-dedup winners by lower(cn).
+    */
+  private def mergeInto(dir: Overlay, rows: Seq[UserRow], conf: EtlConf)
+      : (Seq[MergeRow], Map[String, UserRow]) = {
     val (nullCn, withCn) = rows.partition(_.src_cn == null)
     val winners = withCn.groupBy(_.src_cn.toLowerCase).map { case (k, rs) =>
       k -> rs.min(dedupOrder)
     }
     val deduped = nullCn ++ winners.values
-    val under = touched.filter(e => parentDn(e.dn) == conf.baseDn)
+    val under = dir.entries.toSeq
+      .collect { case (dn, a) if parentDn(dn) == conf.baseDn => Entry(dn, a) }
     val byCn = under.groupBy(e => rdnValue(e.dn).toLowerCase)
     val byUid = under.groupBy(e => uidOf(e.attrs))
     val outcomes: Seq[MergeRow] = deduped.flatMap { r =>
@@ -545,6 +563,44 @@ private[etl] object CappedCycle {
     changes.foreach { case (_, o) => dir.add(o.resultDn.get, o.resultAttrs.get) }
     outcomes.filter(o => o.changed && o.consumedDn.isEmpty)
       .foreach(o => dir.add(o.resultDn.get, o.resultAttrs.get))
+    (outcomes, winners)
+  }
+
+  /** Step 4: `snap` with `dir`'s changes, in one anti-filter pass plus the
+    * local upserts in one partition, so that a saved snapshot gains at
+    * most one file per cycle. A checkpointed snapshot (the poll loop's)
+    * is coalesced back to its partition count `parts`, or that one
+    * partition piles up over the loop's cycles.
+    */
+  private def commit(snap: Dataset[Entry], parts: Option[Int], dir: Overlay): Dataset[Entry] = {
+    val (dropped, upserts) = dir.diff
+    val merged = snap
+      .filter(!coalesce(col("dn").isInCollection(dropped), lit(false)))
+      .union(snap.sparkSession.createDataset(upserts)(Encoders.product[Entry]).coalesce(1))
+    parts.fold(merged)(merged.coalesce)
+  }
+
+  /** One chunk of the cycle on `snap`: the snapshot after it, its
+    * eventlog updates and its rename queue.
+    */
+  private def runChunk(snap: Dataset[Entry], parts: Option[Int], users: DataFrame,
+      evs: Seq[Ev], conf: EtlConf, readTime: java.sql.Timestamp)
+      : (Dataset[Entry], (Seq[Cdc.Update], Seq[(String, String)])) = {
+    val valid = evs.filter(_.v_error.isEmpty)
+    val batchUids = valid.map(_.uid.get.toString).distinct
+
+    // 1 — the chunk's user rows (J1 on pk_uniqueid cast to long, in its
+    // string form `src_uid`)
+    val rows: Seq[UserRow] =
+      if (batchUids.isEmpty) Nil
+      else userRows(SyncEngine.toNewRows(users)
+        .filter(col("src_uid").isInCollection(batchUids)))
+
+    // 2 — the touched entries of the snapshot, then J2 and the kernel
+    val writethrough = conf.ph15Dn.nonEmpty && !conf.isPh15
+    val dir = new Overlay(touchedEntries(snap, rows, batchUids,
+      Option.when(writethrough)(conf.dn15)))
+    val (outcomes, winners) = mergeInto(dir, rows, conf)
 
     // C4 — delete the uids with no user row left
     val gone = batchUids.toSet -- rows.map(_.src_uid)
@@ -556,19 +612,11 @@ private[etl] object CappedCycle {
     else victims.foreach(dn =>
       dir.put(dn, SyncEngine.softDeleteAttrs(dir.entries(dn), conf)))
     if (!hard && conf.baseDn.contains("ou=ph") && victims.nonEmpty) {
-      // 3 — the ph15 sweep's candidates (SyncEngine.deleteInPh15)
+      // 3 — the ph15 sweep over the entries under the victims' cns
       val victimCns = victims.map(rdnValue).distinct
       dir.fetch(snap.filter(Directory.rdnValueCol(col("dn"))
         .isInCollection(victimCns)).collect().toSeq)
-      val cnSet = victimCns.toSet
-      dir.entries.toSeq
-        .filter { case (dn, a) => !a.contains("idnDeleted") && cnSet(rdnValue(dn)) }
-        .groupBy { case (dn, _) => rdnValue(dn) }
-        .foreach { case (cn, es) =>
-          val (dn, a) = es.head
-          if (es.size == 1 && !EtlSchema.accStatus.exists(a.contains) &&
-              dn == s"cn=$cn,${conf.dn15}") dir.remove(dn)
-        }
+      SyncEngine.ph15Sweep(dir.entries, victimCns, conf).foreach(dir.remove)
     }
 
     // C9 — ph15 write-through of the changed write-through columns: the
@@ -615,17 +663,7 @@ private[etl] object CappedCycle {
       Cdc.Update(e.record_id, "F", e.v_error, None, None))
     val renames = outcomes.filter(_.renameOldCn.isDefined)
       .map(o => (o.renameOldCn.get, o.srcCn))
-
-    // 4 — the snapshot: one anti-filter pass plus the local upserts, in
-    // one partition, so that a saved snapshot gains at most one file per
-    // cycle. A checkpointed snapshot (the poll loop's) is coalesced back
-    // to its partition count, or that one partition piles up over the
-    // loop's cycles.
-    val (dropped, upserts) = dir.diff
-    val merged = snap
-      .filter(!coalesce(col("dn").isInCollection(dropped), lit(false)))
-      .union(spark.createDataset(upserts).coalesce(1))
-    (parts.fold(merged)(merged.coalesce), evRows ++ fRows, renames)
+    (commit(snap, parts, dir), (evRows ++ fRows, renames))
   }
 
   /** A state that only a snapshot breaking the Directory invariant

@@ -32,8 +32,9 @@ case class EtlConf(
   * field-level diff semantics exactly (compare-under-old-IV passwords,
   * attribute deletes on NULL, resurrection, rename-on-cn-change). The
   * kernel is one typed function, `mergeOne`: the driver path of a CDC
-  * cycle (`CappedCycle`) calls it on collected rows, and `merge` maps it
-  * over the matched rows of a load or the rename cascade. Row-local ⇒ embarrassingly parallel ⇒ scales with
+  * cycle and of the ph15 rename pass (`CappedCycle`) calls it on
+  * collected rows, and `merge` maps it over the matched rows of the
+  * initial load. Row-local ⇒ embarrassingly parallel ⇒ scales with
   * executors; the joins are the only shuffles.
   */
 object SyncEngine {
@@ -368,35 +369,25 @@ object SyncEngine {
     attrs ++ changes
   }
 
-  /** Cross-tree sweep: a soft-deleted user whose cn exists exactly once
-    * elsewhere (non-deleted), in ph15, with no account-status attrs, is
-    * hard-deleted there (etl.py:525–574).
+  /** J7 — the cross-tree sweep (etl.py:525–574): of the live (not
+    * delete-marked) `entries` whose cn is one of `victimCns`, a cn's only
+    * one is deleted when it is that cn's ph15 twin and carries no
+    * account-status attribute. Returns the dns to delete. The
+    * reference's two-match branch is server-order-dependent (it takes
+    * matches[0] and usually hits the non-ph15 entry → error-log, no
+    * delete); requiring exactly one live match is the deterministic
+    * reading of the same intent.
     */
-  def deleteInPh15(snapshot: Dataset[Entry], victimCns: Dataset[String],
-      conf: EtlConf): Dataset[Entry] = {
-    val spark = snapshot.sparkSession
-    import spark.implicits._
-    val cns = broadcast(victimCns.toDF("vcn"))
-    val live = snapshot.toDF
-      .filter(!map_contains_key(col("attrs"), "idnDeleted"))
-      .select(col("dn"), Directory.rdnValueCol(col("dn")).as("cn"),
-        accStatus.map(a => map_contains_key(col("attrs"), a))
-          .reduce(_ || _).as("has_acc"))
-      .join(cns, col("cn") === col("vcn"), "left_semi")
-    // the reference's nm==2 branch is server-order-dependent (it takes
-    // matches[0] and usually hits the non-ph15 entry → error-log, no
-    // delete); requiring exactly one live match is the deterministic
-    // reading of the same intent
-    val candidates = live.groupBy("cn")
-      .agg(count(lit(1)).as("n"), min(col("dn")).as("only_dn"),
-        max(col("has_acc").cast("int")).as("acc"))
-      .filter(col("n") === 1 && col("acc") === 0)
-      .filter(col("only_dn") === concat(lit("cn="), col("cn"),
-        lit("," + conf.dn15)))
-      .select(col("only_dn").as("vdn"))
-    snapshot.toDF
-      .join(broadcast(candidates), col("dn") === col("vdn"), "left_anti")
-      .as[Entry]
+  def ph15Sweep(entries: Iterable[(String, Map[String, Seq[String]])],
+      victimCns: Seq[String], conf: EtlConf): Seq[String] = {
+    val cns = victimCns.toSet
+    entries.toSeq
+      .filter { case (dn, a) => !a.contains("idnDeleted") && cns(Directory.rdnValue(dn)) }
+      .groupBy { case (dn, _) => Directory.rdnValue(dn) }
+      .toSeq.collect { case (cn, es) if es.size == 1 &&
+          !accStatus.exists(es.head._2.contains) && es.head._1 == s"cn=$cn,${conf.dn15}" =>
+        es.head._1
+      }
   }
 
   // ------------------------------------------------------------------

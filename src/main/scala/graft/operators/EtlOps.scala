@@ -681,7 +681,9 @@ object EtlOps {
         else e
       }
     val victims = Seq("caesar1", "caesar2", "zzz.missing")
-    val after = SyncEngine.deleteInPh15(prepared, victims.toDS(), conf)
+    val gone = SyncEngine.ph15Sweep(prepared.collect().map(e => e.dn -> e.attrs),
+      victims, conf)
+    val after = prepared.filter(!col("dn").isInCollection(gone))
     def twinCount(snap: org.apache.spark.sql.Dataset[Directory.Entry]) =
       snap.toDF
         .filter(col("dn").endsWith("," + conf.dn15) &&

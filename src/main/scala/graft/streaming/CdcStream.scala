@@ -89,7 +89,7 @@ object CdcStream {
         // streaming parity with the poll loop: queued cn renames
         // propagate into the ph15 twin tree at the end of each batch
         val withRenames =
-          if (conf.ph15Dn.isDefined && r.renameQueued)
+          if (conf.ph15Dn.isDefined && r.renames.nonEmpty)
             Cdc.updatePh15Cn(r.snapshot, users(), r.renames,
               conf.copy(baseDn = conf.ph15Dn.get))
           else r.snapshot
@@ -116,7 +116,7 @@ object CdcStream {
       heartbeat: Option[java.nio.file.Path] = None): LoopState = {
     import org.apache.spark.sql.functions._
     // the ph15 rename pass drains the queue; without a ph15 source
-    // nothing is queued
+    // there is no pass
     val ph15Source = sources.find(_.conf.isPh15)
     var st = state0
     var done = false
@@ -125,7 +125,7 @@ object CdcStream {
         java.nio.file.Files.writeString(p, System.nanoTime().toString)
       }
       var anyFull = false
-      var renameQueue: Option[DataFrame] = None
+      var renameQueue = Seq.empty[(String, String)]
       var stamp = 0
       // per-source post-cycle backlog, reused by the done check below —
       // a failed source counts as backlogged so `done` cannot falsely
@@ -142,10 +142,7 @@ object CdcStream {
           val r = Cdc.cycle(st.snapshot, src.users(), elog, conf, maxRecords)
           // accumulate across sources (the reference's ph15_change_dn
           // dict grows over the whole cycle and is drained once)
-          if (ph15Source.isDefined && r.renameQueued)
-            renameQueue = Some(renameQueue
-              .map(_.unionByName(r.renames).distinct())
-              .getOrElse(r.renames))
+          renameQueue = (renameQueue ++ r.renames).distinct
           // the post-cycle backlog is observed on the checkpoint's own
           // pass over the eventlog, not counted by a job of its own. A
           // caller that appends each arriving batch by a union adds its
@@ -177,12 +174,10 @@ object CdcStream {
         }
       }
       // C3 — end-of-cycle ph15 rename pass (etl.py:411–418)
-      renameQueue.foreach { rq =>
-        ph15Source.foreach { p15 =>
-          st = st.copy(snapshot = Cdc
-            .updatePh15Cn(st.snapshot, p15.users(), rq, p15.conf)
-            .localCheckpoint(true))
-        }
+      if (renameQueue.nonEmpty) ph15Source.foreach { p15 =>
+        st = st.copy(snapshot = Cdc
+          .updatePh15Cn(st.snapshot, p15.users(), renameQueue, p15.conf)
+          .localCheckpoint(true))
       }
       st = st.copy(cyclesRun = st.cyclesRun + 1, backlog = st.backlog ++ backlog)
       // reuse the per-source backlog counts gathered above (one scan per

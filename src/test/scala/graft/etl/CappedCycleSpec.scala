@@ -13,7 +13,9 @@ import Directory.Entry
   * capped batches (`CappedCycle.run` at a cap of 5,000), unbounded ones
   * (`Cdc.cycle` at `Int.MaxValue`, one chunk: its job count is pinned
   * below) and unbounded ones over lowered bounds, which run as chunks
-  * and are held to the reference run chunk by chunk.
+  * and are held to the reference run chunk by chunk. The ph15 rename
+  * pass (`Cdc.updatePh15Cn`) is held to the set-based one on the rename
+  * queues of the same kind of batches.
   *
   * The batches are built from the fixture's user rows. Each random batch
   * lives in a "world" of its own uid range and cn prefix, so the 67
@@ -51,7 +53,7 @@ class CappedCycleSpec extends AnyFunSuite {
     val kept = mutable.ArrayBuffer.empty[Int]
     differential(count = 67, seed = 20261019L)({ (snap, users, eventlog, conf, readTime) =>
       val before = sc.getRDDStorageInfo.map(_.id).toSet
-      val r = Cdc.boundedCycle(snap, users, eventlog, conf, Int.MaxValue, readTime, evB, uidB)
+      val r = CappedCycle.run(snap, users, eventlog, conf, Int.MaxValue, readTime, evB, uidB)
       kept += (sc.getRDDStorageInfo.map(_.id).toSet -- before).size
       r
     }, { (snap, users, eventlog, conf, readTime) =>
@@ -63,6 +65,45 @@ class CappedCycleSpec extends AnyFunSuite {
     assert(chunkCounts.forall(_ >= 5), chunkCounts)
     // every chunk's snapshot but the one the result reads is released
     assert(kept.forall(_ <= 1), kept)
+  }
+
+  test("the rename pass agrees with the set-based pass, in one chunk and in key chunks") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val w = new Worlds(spark, count = 67, seed = 20261022L)
+    val keyBound = 8
+    val ph15Conf = Fixture.conf.copy(baseDn = Fixture.ph15, ph15Dn = Some(Fixture.ph15))
+    var snap = w.snapshot0
+    var elog = spark.createDataFrame(java.util.List.of[Row](), EtlSchema.eventSchema)
+    // per round: (renames, case-only ones, key chunks)
+    val seen = mutable.ArrayBuffer.empty[(Int, Int, Int)]
+    for (round <- 1 to 3) {
+      val (users, events) = w.round(round)
+      val base = if (round == 2) Fixture.ph15 else Fixture.ph08
+      val r = Cdc.cycle(snap, users, elog.unionByName(events),
+        Fixture.conf.copy(baseDn = base, ph15Dn = Some(Fixture.ph15),
+          etlTimestamp = f"ren$round%04dZ"), Int.MaxValue)
+      val after = r.snapshot.localCheckpoint(true)
+      val q = r.renames
+      def reference(s: Dataset[Entry], rs: Seq[(String, String)]) =
+        SetBasedReference.updatePh15Cn(s, users, rs.toDF("old_cn", "new_cn"), ph15Conf)
+          .localCheckpoint(true)
+      val got = Cdc.updatePh15Cn(after, users, q, ph15Conf).localCheckpoint(true)
+      assert(Directory.dump(got) == Directory.dump(reference(after, q)), s"round $round")
+      val cuts = renameCuts(q, keyBound)
+      assert(CappedCycle.renameChunks(q, keyBound).map(_.toSet) ==
+        cuts.map(_.flatMap { case (a, b) => Seq(a, b) }.toSet), s"round $round cuts")
+      val chunked = CappedCycle.renamePass(after, users, q, ph15Conf, keyBound)
+      assert(Directory.dump(chunked) == Directory.dump(cuts.foldLeft(after)(reference)),
+        s"round $round chunked")
+      seen += ((q.size, q.count { case (o, n) => o != n && o.equalsIgnoreCase(n) }, cuts.size))
+      snap = got
+      elog = r.eventlog.localCheckpoint(true)
+      if (round == 2) snap = SyncEngine.setEtdDone(snap, None).localCheckpoint(true)
+    }
+    info(s"(renames, case-only, key chunks) per round: $seen")
+    assert(seen.forall { case (n, _, chunks) => n > 0 && chunks >= 3 }, seen)
+    assert(seen.map(_._2).sum > 0, seen)
   }
 
   /** `count` worlds × 3 rounds: `cycle` against `reference`. */
@@ -92,7 +133,6 @@ class CappedCycleSpec extends AnyFunSuite {
       assert(vs.map(_._1) == pending, s"round $round reference counts")
       vc.zip(vs).foreach { case (c, s) => assert(c == s, s"round $round verdict") }
       assert(renames(got) == renames(ref), s"round $round renames")
-      assert(got.renameQueued == renames(ref).nonEmpty)
       val dump = Directory.dump(refSnap)
       assert(Directory.dump(got.snapshot) == dump, s"round $round dump")
       assert(verdicts(got.eventlog.select(col("record_id"),
@@ -178,7 +218,7 @@ class CappedCycleSpec extends AnyFunSuite {
       ("an unbounded batch over the uid bound", events(10.0), Int.MaxValue, evB, 1, 2),
       ("an unbounded batch within the bounds", events(10.0), Int.MaxValue, 2, 2, 1))
     for ((why, elog, max, eventBound, uidBound, n) <- ok) {
-      val got = Cdc.boundedCycle(loaded, changed, elog, conf, max, readTime,
+      val got = CappedCycle.run(loaded, changed, elog, conf, max, readTime,
         eventBound, uidBound)
       val ranges = chunkRanges(elog, conf, eventBound, uidBound)
       assert(ranges.size == n, why)
@@ -301,12 +341,26 @@ object CappedCycleSpec {
         eventlog.filter(col("record_id").between(lo.get, hi.get)), conf, Int.MaxValue,
         readTime)
       snap = r.snapshot.localCheckpoint(true)
-      (r.eventUpdates.localCheckpoint(true), r.renames.localCheckpoint(true))
+      (r.eventUpdates.localCheckpoint(true), r.renames)
     }
     val updates = rs.map(_._1).reduce(_ unionByName _)
-    val renames = rs.map(_._2).reduce(_ unionByName _)
-    Cdc.CycleResult(snap, Cdc.writeback(eventlog, updates), updates, renames,
-      updates.count(), !renames.isEmpty)
+    Cdc.CycleResult(snap, Cdc.writeback(eventlog, updates), updates, rs.flatMap(_._2),
+      updates.count())
+  }
+
+  /** A rename queue cut as `Cdc.updatePh15Cn` cuts it: the distinct
+    * renames in UTF-8 order, a new chunk begun where a rename would take
+    * the chunk's distinct cns past `keyBound`.
+    */
+  def renameCuts(q: Seq[(String, String)], keyBound: Int): Seq[Seq[(String, String)]] = {
+    val o = CappedCycle.utf8Order
+    val chunks = mutable.ArrayBuffer(Seq.empty[(String, String)])
+    for (r <- q.distinct.sorted(Ordering.Tuple2(o, o))) {
+      val keys = (chunks.last :+ r).flatMap { case (a, b) => Seq(a, b) }.distinct
+      if (chunks.last.nonEmpty && keys.size > keyBound) chunks += Seq(r)
+      else chunks(chunks.size - 1) = chunks.last :+ r
+    }
+    chunks.toSeq.filter(_.nonEmpty)
   }
 
   def verdicts(updates: DataFrame): Seq[Verdict] =
@@ -315,8 +369,7 @@ object CappedCycleSpec {
       r.getString(1), Option(r.getString(2)),
       Option(r.get(3)).map(_.asInstanceOf[Double]))).sortBy(_._1)
 
-  def renames(r: Cdc.CycleResult): Seq[(String, String)] =
-    r.renames.collect().toSeq.map(x => (x.getString(0), x.getString(1))).sorted
+  def renames(r: Cdc.CycleResult): Seq[(String, String)] = r.renames.sorted
 
   private[etl] val idx = EtlSchema.userFields.zipWithIndex.toMap
 

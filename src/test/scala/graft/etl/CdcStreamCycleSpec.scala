@@ -48,6 +48,47 @@ class CdcStreamCycleSpec extends AnyFunSuite {
     assert(perCycle(2)._2 <= 20, s"(jobs, compiles) per cycle: $perCycle")
   }
 
+  test("the poll loop's rename pass renames the ph15 twin, within 13 jobs a cycle") {
+    val spark = TestSpark.spark
+    val sc = spark.sparkContext
+    val users0 = Fixture.users(spark).collect().toSeq
+    val (users, events) = version(users0, 1)
+    val ph15Conf = conf.copy(baseDn = Fixture.ph15)
+    val st0 = CdcStream.LoopState(Fixture.twoTree(spark),
+      Map("postgres" -> events.localCheckpoint(true), "ph15" -> noEvents), 0, 0)
+    val jobs = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.BusDrain(sc)
+    sc.addSparkListener(listener)
+    val st = try {
+      val s = CdcStream.run(st0, Seq(CdcStream.Source(conf, () => users),
+        CdcStream.Source(ph15Conf, () => users, key = "ph15")),
+        maxRecords = 100, maxCycles = 1, sleeper = () => ())
+      org.apache.spark.BusDrain(sc)
+      s
+    } finally sc.removeSparkListener(listener)
+    assert(st.sourceErrors.isEmpty, st.lastErrors)
+    // 9 jobs for the ph08 source's cycle (as in the capped poll cycle
+    // above), 1 for the idle ph15 source's snapshot checkpoint, and 3 for
+    // the rename pass: its two collects and the loop's checkpoint of it
+    info(s"jobs in the cycle: ${jobs.get}")
+    assert(jobs.get <= 13, s"jobs in the cycle: ${jobs.get}")
+
+    // version 1 renames the second uid over 1 to ren1.<uid>
+    val uid = users0.map(r => r.getDouble(idx("pk_uniqueid")).toLong)
+      .filter(_ > 1).distinct.sorted.apply(1)
+    val oldCn = users0.find(_.getDouble(idx("pk_uniqueid")).toLong == uid).get
+      .getString(idx("benutzername")).trim
+    val entries = st.snapshot.collect().map(e => e.dn -> e.attrs).toMap
+    for (base <- Seq(Fixture.ph08, Fixture.ph15)) {
+      assert(entries.contains(s"cn=ren1.$uid,$base"), base)
+      assert(!entries.contains(s"cn=$oldCn,$base"), base)
+    }
+    assert(entries(s"cn=ren1.$uid,${Fixture.ph15}")("phonlineUniqueId") == Seq(uid.toString))
+  }
+
   test("the observed backlog equals a direct count of N/E events") {
     val spark = TestSpark.spark
     val users0 = Fixture.users(spark).collect().toSeq

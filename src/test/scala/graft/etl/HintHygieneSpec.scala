@@ -64,14 +64,14 @@ class HintHygieneSpec extends AnyFunSuite {
       // lowered bounds, which runs as one chunk per event
       val readTime = java.sql.Timestamp.valueOf("2017-07-11 10:00:00")
       for (r <- Seq(Cdc.cycle(pre.snapshot, users, elog, conf),
-          Cdc.boundedCycle(pre.snapshot, users, elog, conf, Int.MaxValue, readTime, 1, 1))) {
+          CappedCycle.run(pre.snapshot, users, elog, conf, Int.MaxValue, readTime, 1, 1))) {
         r.snapshot.count()
         r.eventUpdates.count()
         r.eventlog.count()
       }
       // the ph15 rename pass (C3) over a queued rename of uid 1's cn
       val cn = users.select(trim(col("benutzername"))).as[String].head()
-      Cdc.updatePh15Cn(pre.snapshot, users, Seq(("old" + cn, cn)).toDF("old_cn", "new_cn"),
+      Cdc.updatePh15Cn(pre.snapshot, users, Seq(("old" + cn, cn)),
         conf.copy(baseDn = "ou=user,ou=ph15,o=BMUKK")).count()
 
       val hits = cap.messages.toArray(Array.empty[String])

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import Directory.Entry
 import Cdc.EventFacts
+import EtlSchema.accStatus
 
 /** The set-based CDC cycle: matching, merge, deletes, write-through and
   * the per-uid aggregates of the status matrix as joins and aggregations
@@ -14,7 +15,9 @@ import Cdc.EventFacts
   * batch selection and validation, the source-row conversion, the GC
   * filter, the merge kernel, the per-event C8 verdict and the eventlog
   * writeback, and serves as the reference that `CappedCycleSpec` and
-  * `CdcScenarioSpec` compare `Cdc.cycle` with.
+  * `CdcScenarioSpec` compare `Cdc.cycle` with. The set-based ph15 sweep
+  * (`deleteInPh15`) and rename pass (`updatePh15Cn`) are the references
+  * for `SyncEngine.ph15Sweep` and `Cdc.updatePh15Cn`.
   */
 object SetBasedReference {
   /** Largest batch cap that may FORCE a uid-set broadcast in the batch
@@ -144,7 +147,7 @@ object SetBasedReference {
       else ph15Writethrough(snapFinal, newRows0, outcomes.toDF, conf)
 
     Cdc.CycleResult(snapWithPh15, Cdc.writeback(eventlog, allUpdates), allUpdates,
-      renames, allUpdates.count(), !renames.isEmpty)
+      renames.as[(String, String)].collect().toSeq, allUpdates.count())
   }
 
   /** C9 — patch the ph15 twin entry (matched by cn under the ph15 base)
@@ -232,6 +235,53 @@ object SetBasedReference {
     // without an ou=phXX component has no ph15 sibling (and dn15 would
     // be undefined — the reference derives it lazily for the same reason)
     if (hard || !conf.baseDn.contains("ou=ph")) afterBase
-    else SyncEngine.deleteInPh15(afterBase, victims.map(e => Directory.rdnValue(e.dn)), conf)
+    else deleteInPh15(afterBase, victims.map(e => Directory.rdnValue(e.dn)), conf)
+  }
+
+  /** Cross-tree sweep: a soft-deleted user whose cn exists exactly once
+    * elsewhere (non-deleted), in ph15, with no account-status attrs, is
+    * hard-deleted there (etl.py:525–574).
+    */
+  def deleteInPh15(snapshot: Dataset[Entry], victimCns: Dataset[String],
+      conf: EtlConf): Dataset[Entry] = {
+    val spark = snapshot.sparkSession
+    import spark.implicits._
+    val cns = broadcast(victimCns.toDF("vcn"))
+    val live = snapshot.toDF
+      .filter(!map_contains_key(col("attrs"), "idnDeleted"))
+      .select(col("dn"), Directory.rdnValueCol(col("dn")).as("cn"),
+        accStatus.map(a => map_contains_key(col("attrs"), a))
+          .reduce(_ || _).as("has_acc"))
+      .join(cns, col("cn") === col("vcn"), "left_semi")
+    // the reference's nm==2 branch is server-order-dependent (it takes
+    // matches[0] and usually hits the non-ph15 entry → error-log, no
+    // delete); requiring exactly one live match is the deterministic
+    // reading of the same intent
+    val candidates = live.groupBy("cn")
+      .agg(count(lit(1)).as("n"), min(col("dn")).as("only_dn"),
+        max(col("has_acc").cast("int")).as("acc"))
+      .filter(col("n") === 1 && col("acc") === 0)
+      .filter(col("only_dn") === concat(lit("cn="), col("cn"),
+        lit("," + conf.dn15)))
+      .select(col("only_dn").as("vdn"))
+    snapshot.toDF
+      .join(broadcast(candidates), col("dn") === col("vdn"), "left_anti")
+      .as[Entry]
+  }
+
+  /** C3 — end-of-cycle rename propagation into ph15 (etl.py:762–781):
+    * re-sync user rows whose benutzername matches either side of a
+    * queued rename, against the ph15 base, with the set-based merge.
+    */
+  def updatePh15Cn(snapshot: Dataset[Entry], users: DataFrame,
+      renames: DataFrame, ph15Conf: EtlConf): Dataset[Entry] = {
+    if (renames.isEmpty) return snapshot
+    val keys = renames.select(col("old_cn").as("k"))
+      .unionByName(renames.select(col("new_cn").as("k")))
+      .distinct()
+    val hit = users.join(keys, trim(col("benutzername")) === col("k"),
+      "left_semi")
+    val rows = SyncEngine.toNewRows(hit).withColumn("is_new", lit(false))
+    SyncEngine.merge(snapshot, rows, ph15Conf)._1
   }
 }

@@ -17,3 +17,10 @@ object Listeners {
 object BusDrain {
   def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
+
+/** Whether a stage writes shuffle output: its shuffle id is
+  * package-private.
+  */
+object ShuffleStage {
+  def apply(s: org.apache.spark.scheduler.StageInfo): Boolean = s.shuffleDepId.isDefined
+}
