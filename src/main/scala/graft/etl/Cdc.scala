@@ -21,22 +21,55 @@ import SyncEngine.{MatchIn, MergeRow}
   * still produces a verdict per event (sequencing within a uid is
   * reconstructed from record_id order — SURVEY.md §4.3).
   *
-  * The cycle runs on the driver (`CappedCycle`): the batch it selects,
-  * its user rows and the snapshot entries they touch are batch-sized, so
-  * they are collected and the cycle is computed with the typed kernel
+  * The cycle (`cycle`) runs on the driver: the batch it selects, its user
+  * rows and the snapshot entries they touch are batch-sized, so they are
+  * collected and the cycle is computed with the typed kernel
   * (`SyncEngine.mergeOne`) and one C8 verdict per event (`verdict`), then
-  * applied with one pass over the snapshot and one over the eventlog. A
-  * selection over `driverEventBound` events or `driverBatchBound`
-  * distinct uids (an unbounded outage drain) runs as consecutive chunks
-  * in record_id order, each within both bounds and each on the snapshot
-  * the one before it left: the reference's own drain, capped batches run
-  * back to back without a sleep (etl.py:604–606, 419–423). The ph15
-  * rename pass (`updatePh15Cn`) is the same driver merge over the user
-  * rows its queue names.
+  * applied with one pass over the snapshot and one over the eventlog.
+  * The selection is collected whole; one within `driverEventBound`
+  * events and `driverBatchBound` distinct valid uids is one chunk, and a
+  * larger one (an unbounded outage drain) is cut in record_id order into
+  * consecutive chunks within both bounds: the reference's own drain,
+  * capped batches run back to back without a sleep (etl.py:604–606,
+  * 419–423). GC (C6) runs once, before the first chunk; each chunk then
+  * runs on the snapshot the one before it left (`chained`). For each
+  * chunk, Spark runs:
+  *
+  *  1. the chunk's user rows (`SyncEngine.toNewRows`, with the cn-dedup
+  *     content hash), collected (`userRows`);
+  *  2. the entries of the snapshot the chunk touches: lower(rdn) is one
+  *     of its cns or the uid one of its uids, under any base (cn match,
+  *     uid fallback and ambiguity, ph15 twins), collected
+  *     (`touchedEntries`);
+  *  3. only when the chunk deletes: the entries whose cn is a victim's
+  *     cn, for the ph15 sweep, collected;
+  *  4. the snapshot: the one before minus the changed and removed dns,
+  *     plus the local upserts (`commit`); checkpointed when another chunk
+  *     follows.
+  *
+  * Everything in between — cn-dedup, J2 matching, the merge kernel and
+  * one change per dn (`mergeInto`), deletes, the ph15 sweep
+  * (`SyncEngine.ph15Sweep`) and write-through, the C8 per-uid aggregates
+  * with `verdict` per event, and the rename queue — is driver code over
+  * one chunk's collections, so the driver never holds more than one
+  * chunk's user rows and entries. Ties are broken by comparing strings
+  * as UTF-8 bytes, as Spark does. The eventlog takes the shared writeback
+  * over every chunk's verdicts, once.
+  *
+  * The ph15 rename pass (`updatePh15Cn`) runs steps 1, 2 and 4 with
+  * `mergeInto` between them, over chunks of the rename queue's keys
+  * (`renameChunks`).
+  *
+  * The snapshot's `dn` is unique (the Directory invariant), and matching
+  * and cn-dedup are case-insensitive, so the engine never writes two dns
+  * under one parent that equal case-insensitively. A snapshot that holds
+  * a dn twice, or such a pair that a chunk's changes make collide, is
+  * reported: `cycle` and `updatePh15Cn` throw an `IllegalStateException`
+  * naming the dn, before any output.
   */
 object Cdc {
   /** Most distinct valid uids one chunk of a cycle holds, and most keys
-    * one chunk of the ph15 rename pass holds (`CappedCycle`).
+    * one chunk of the ph15 rename pass holds.
     * The driver-held inputs that grow with a chunk, its user rows and the
     * snapshot entries it touches, grow with its distinct uids, not with
     * its events. Measured near this bound: a poll cycle of 10,000 events
@@ -47,7 +80,7 @@ object Cdc {
   val driverBatchBound: Int = 10000
 
   /** Most events one chunk of a cycle holds. Over the whole selection,
-    * the driver holds five scalars (`CappedCycle.Ev`) and one verdict row
+    * the driver holds five scalars (`Ev`) and one verdict row
     * per event; the user rows and entries it holds are one chunk's.
     * Measured at 37,678 users with syncbench's bulk drain (`Sizes(users =
     * 37678, bulkEvents = n)`, Zipf-skewed, 4 cores, one run each): one
@@ -132,13 +165,28 @@ object Cdc {
 
   /** One poll cycle. `users` is the current user table state; `eventlog`
     * the current event table; returns the post-cycle snapshot and
-    * eventlog.
+    * eventlog. `eventBound` and `uidBound` bound a chunk (a test lowers
+    * them to force chunks on small data).
     */
   def cycle(snapshot0: Dataset[Entry], users: DataFrame, eventlog: DataFrame,
       conf: EtlConf, maxRecords: Int = 100,
-      readTime: java.sql.Timestamp = new java.sql.Timestamp(System.currentTimeMillis / 1000 * 1000))
-      : CycleResult =
-    CappedCycle.run(snapshot0, users, eventlog, conf, maxRecords, readTime)
+      readTime: java.sql.Timestamp = new java.sql.Timestamp(System.currentTimeMillis / 1000 * 1000),
+      eventBound: Int = driverEventBound, uidBound: Int = driverBatchBound)
+      : CycleResult = {
+    val spark = snapshot0.sparkSession
+    import spark.implicits._
+    val evs = validate(selectBatch(eventlog, maxRecords), conf)
+      .select(col("record_id"), col("v_error"), col("uid"),
+        col("event_type"),
+        when(col("v_error").isNull,
+          coalesce(col("attempt"), lit(0.0)).cast("int")).as("attempt_now"))
+      .as[Ev].collect().toSeq
+    val (snap, outs) = chained(collectGarbage(snapshot0, conf), partitionsOf(snapshot0),
+      chunked(evs, eventBound, uidBound))(runChunk(_, _, users, _, conf, readTime))
+    val updatesDf = outs.flatMap(_._1).toDF
+    CycleResult(snap, writeback(eventlog, broadcast(updatesDf)), updatesDf,
+      outs.flatMap(_._2), evs.size.toLong)
+  }
 
   /** C6 — collect already-ETD-synced deleted entries at cycle start; the
     * reference never garbage-collects the ph15 instance itself
@@ -293,78 +341,44 @@ object Cdc {
   /** C3 — end-of-cycle rename propagation into ph15 (etl.py:762–781):
     * re-sync the user rows whose trimmed benutzername is either side of a
     * queued rename against the ph15 base, with the cycle's driver merge
-    * (`CappedCycle.renamePass`). Every row is an update (`isNew = false`);
-    * there is no GC, delete, write-through or verdict.
+    * (`mergeInto`). Every row is an update (`isNew = false`); there is no
+    * GC, delete, write-through or verdict.
     *
     * Scale: the queue holds one rename per renaming merge outcome of the
     * cycles it was collected from, so it grows with their batches, not
     * with the snapshot or the user table. Its keys are cut into chunks of
-    * at most `driverBatchBound` keys, a rename's two cns in one chunk,
-    * each run on the snapshot the one before it left, so the driver holds
-    * one chunk's user rows and entries.
+    * at most `keyBound` keys (`renameChunks`), a rename's two cns in one
+    * chunk, each run on the snapshot the one before it left, so the
+    * driver holds one chunk's user rows and entries.
     */
   def updatePh15Cn(snapshot: Dataset[Entry], users: DataFrame,
-      renames: Seq[(String, String)], ph15Conf: EtlConf): Dataset[Entry] =
-    CappedCycle.renamePass(snapshot, users, renames, ph15Conf)
-}
-
-/** The CDC cycle (`Cdc.cycle`) and the ph15 rename pass
-  * (`Cdc.updatePh15Cn`), computed on the driver. The cycle's selection
-  * is collected whole; one within `Cdc.driverEventBound` events and
-  * `Cdc.driverBatchBound` distinct valid uids is one chunk, and a larger
-  * one is cut in record_id order into consecutive chunks within both
-  * bounds. GC (C6) runs once, before the first chunk; each chunk then
-  * runs on the snapshot the one before it left (`chained`). For each
-  * chunk, Spark runs:
-  *
-  *  1. the chunk's user rows (`SyncEngine.toNewRows`, with the cn-dedup
-  *     content hash), collected (`userRows`);
-  *  2. the entries of the snapshot the chunk touches: lower(rdn) is one
-  *     of its cns or the uid one of its uids, under any base (cn match,
-  *     uid fallback and ambiguity, ph15 twins), collected
-  *     (`touchedEntries`);
-  *  3. only when the chunk deletes: the entries whose cn is a victim's
-  *     cn, for the ph15 sweep, collected;
-  *  4. the snapshot: the one before minus the changed and removed dns,
-  *     plus the local upserts (`commit`); checkpointed when another chunk
-  *     follows.
-  *
-  * Everything in between — cn-dedup, J2 matching, the merge kernel
-  * (`SyncEngine.mergeOne`) and one change per dn (`mergeInto`), deletes,
-  * the ph15 sweep (`SyncEngine.ph15Sweep`) and write-through, the C8
-  * per-uid aggregates with `Cdc.verdict` per event, and the rename queue
-  * — is driver code over one chunk's collections, so the driver never
-  * holds more than one chunk's user rows and entries. Ties are broken by
-  * comparing strings as UTF-8 bytes, as Spark does. The eventlog takes
-  * the shared writeback over every chunk's verdicts, once.
-  *
-  * The rename pass runs steps 1, 2 and 4 with `mergeInto` between them,
-  * over chunks of the rename queue's keys (`renameChunks`).
-  *
-  * The snapshot's `dn` is unique (the Directory invariant), and matching
-  * and cn-dedup are case-insensitive, so the engine never writes two dns
-  * under one parent that equal case-insensitively. A snapshot that holds
-  * a dn twice, or such a pair that a chunk's changes make collide, is
-  * reported: `run` and `renamePass` throw an `IllegalStateException`
-  * naming the dn, before any output.
-  */
-private[etl] object CappedCycle {
+      renames: Seq[(String, String)], ph15Conf: EtlConf,
+      keyBound: Int = driverBatchBound): Dataset[Entry] =
+    chained(snapshot, partitionsOf(snapshot), renameChunks(renames, keyBound)) {
+      (snap, parts, keys) =>
+        val rows = userRows(SyncEngine.toNewRows(
+          users.filter(trim(col("benutzername")).isInCollection(keys))))
+        val dir = new Overlay(touchedEntries(snap, rows,
+          rows.flatMap(r => Option(r.src_uid)).distinct, None))
+        mergeInto(dir, rows, ph15Conf)
+        (commit(snap, parts, dir), ())
+    }._1
 
   /** One selected event; `attempt_now` is C8's attempt as Spark casts it,
     * and `uid` is defined for a valid event only.
     */
-  case class Ev(record_id: Option[Double], v_error: Option[String],
+  private[etl] case class Ev(record_id: Option[Double], v_error: Option[String],
       uid: Option[Long], event_type: Option[Double], attempt_now: Option[Int])
 
   /** One converted user row with its cn-dedup content hash. */
-  case class UserRow(src_cn: String, src_uid: String, pw_plain: Option[String],
+  private case class UserRow(src_cn: String, src_uid: String, pw_plain: Option[String],
       new_attrs: Map[String, Seq[String]], h: Long)
 
   private implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
   private implicit val rowEnc: Encoder[UserRow] = Encoders.product[UserRow]
 
   /** Spark's string order: unsigned UTF-8 bytes (= code point order). */
-  val utf8Order: Ordering[String] = new Ordering[String] {
+  private[etl] val utf8Order: Ordering[String] = new Ordering[String] {
     def compare(a: String, b: String): Int = java.util.Arrays.compareUnsigned(
       a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
       b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -384,57 +398,29 @@ private[etl] object CappedCycle {
   private def maxUtf8(xs: Iterable[String]): Option[String] =
     xs.reduceOption((a, b) => if (utf8Order.gteq(a, b)) a else b)
 
+  /** The partition count of a stored snapshot, or of one that `commit`
+    * coalesced, which a chunk or another source's cycle reads before it
+    * is stored: without a job.
+    */
   private def partitionsOf(ds: Dataset[Entry]): Option[Int] =
     ds.queryExecution.logical match {
       case r: org.apache.spark.sql.execution.LogicalRDD => Some(r.rdd.getNumPartitions)
+      case org.apache.spark.sql.catalyst.plans.logical.Repartition(n, false, _) => Some(n)
       case _ => None
     }
 
-  def run(snapshot0: Dataset[Entry], users: DataFrame, eventlog: DataFrame,
-      conf: EtlConf, maxRecords: Int, readTime: java.sql.Timestamp,
-      eventBound: Int = Cdc.driverEventBound, uidBound: Int = Cdc.driverBatchBound)
-      : Cdc.CycleResult = {
-    val spark = snapshot0.sparkSession
-    import spark.implicits._
-    val evs = Cdc.validate(Cdc.selectBatch(eventlog, maxRecords), conf)
-      .select(col("record_id"), col("v_error"), col("uid"),
-        col("event_type"),
-        when(col("v_error").isNull,
-          coalesce(col("attempt"), lit(0.0)).cast("int")).as("attempt_now"))
-      .as[Ev].collect().toSeq
-    val (snap, outs) = chained(Cdc.collectGarbage(snapshot0, conf), partitionsOf(snapshot0),
-      chunked(evs, eventBound, uidBound))(runChunk(_, _, users, _, conf, readTime))
-    val updatesDf = outs.flatMap(_._1).toDF
-    Cdc.CycleResult(snap, Cdc.writeback(eventlog, broadcast(updatesDf)), updatesDf,
-      outs.flatMap(_._2), evs.size.toLong)
-  }
-
-  /** C3 — `Cdc.updatePh15Cn` over key chunks of at most `keyBound` keys. */
-  def renamePass(snapshot: Dataset[Entry], users: DataFrame,
-      renames: Seq[(String, String)], conf: EtlConf,
-      keyBound: Int = Cdc.driverBatchBound): Dataset[Entry] =
-    chained(snapshot, partitionsOf(snapshot), renameChunks(renames, keyBound)) {
-      (snap, parts, keys) =>
-        val rows = userRows(SyncEngine.toNewRows(
-          users.filter(trim(col("benutzername")).isInCollection(keys))))
-        val dir = new Overlay(touchedEntries(snap, rows,
-          rows.flatMap(r => Option(r.src_uid)).distinct, None))
-        mergeInto(dir, rows, conf)
-        (commit(snap, parts, dir), ())
-    }._1
-
-  /** `step` over `chunks` in order, each on the snapshot the one before it
+  /** `each` over `chunks` in order, each on the snapshot the one before it
     * left: the last snapshot and every chunk's output. `parts0` is the
     * partition count to keep the snapshot at, when it is known without a
     * job.
     */
   private def chained[C, A](snap0: Dataset[Entry], parts0: Option[Int], chunks: Seq[C])(
-      step: (Dataset[Entry], Option[Int], C) => (Dataset[Entry], A))
+      each: (Dataset[Entry], Option[Int], C) => (Dataset[Entry], A))
       : (Dataset[Entry], Seq[A]) = {
     var snap = snap0
     var parts = parts0
     val outs = chunks.zipWithIndex.map { case (chunk, i) =>
-      val (next, out) = step(snap, parts, chunk)
+      val (next, out) = each(snap, parts, chunk)
       if (i == chunks.size - 1) snap = next
       else {
         // the next chunk reads this one's snapshot: stored, so that the
@@ -585,7 +571,7 @@ private[etl] object CappedCycle {
     */
   private def runChunk(snap: Dataset[Entry], parts: Option[Int], users: DataFrame,
       evs: Seq[Ev], conf: EtlConf, readTime: java.sql.Timestamp)
-      : (Dataset[Entry], (Seq[Cdc.Update], Seq[(String, String)])) = {
+      : (Dataset[Entry], (Seq[Update], Seq[(String, String)])) = {
     val valid = evs.filter(_.v_error.isEmpty)
     val batchUids = valid.map(_.uid.get.toString).distinct
 
@@ -625,10 +611,10 @@ private[etl] object CappedCycle {
     // is stamped (etl.py:1112–1165)
     if (writethrough) {
       val patches = outcomes
-        .filter(o => o.changed && o.changedSrcKeys.exists(Cdc.writethroughKeys.contains))
+        .filter(o => o.changed && o.changedSrcKeys.exists(writethroughKeys.contains))
         .flatMap(o => winners.get(o.srcCn.toLowerCase).map { r =>
           s"cn=${r.src_cn},${conf.dn15}".toLowerCase ->
-            Cdc.ph15Patch(r.new_attrs, r.pw_plain, o.changedSrcKeys, conf)
+            ph15Patch(r.new_attrs, r.pw_plain, o.changedSrcKeys, conf)
         })
       patches.groupBy(_._1).collectFirst { case (dn, ps) if ps.size > 1 => dn }
         .foreach(dn => invariant(s"two write-through patches for the ph15 twin $dn"))
@@ -638,7 +624,7 @@ private[etl] object CappedCycle {
       }
     }
 
-    // C8 — the per-uid aggregates, then `Cdc.verdict` per event
+    // C8 — the per-uid aggregates, then `verdict` per event
     val byUidOut = outcomes.groupBy(_.srcUid)
     val rowN = rows.groupBy(_.src_uid).map { case (u, rs) => u -> rs.size.toLong }
     val firstRid = valid.groupBy(_.uid.get).map { case (u, es) =>
@@ -648,7 +634,7 @@ private[etl] object CappedCycle {
       val uid = e.uid.get
       val os = byUidOut.getOrElse(uid.toString, Nil)
       val errors = os.flatMap(_.error).sorted(utf8Order)
-      val (status, msg, attempt) = Cdc.verdict(Cdc.EventFacts(e.record_id, uid,
+      val (status, msg, attempt) = verdict(EventFacts(e.record_id, uid,
         e.event_type, e.attempt_now.get, firstRid(uid),
         row_n = rowN.getOrElse(uid.toString, 0L),
         pre_matched = os.exists(_.consumedDn.isDefined),
@@ -657,10 +643,10 @@ private[etl] object CappedCycle {
         result_dn = maxUtf8(os.flatMap(o => if (o.changed) o.resultDn else o.consumedDn)),
         kernel_error = Option.when(errors.nonEmpty)(errors.mkString("\n")),
         kernel_warning = maxUtf8(os.flatMap(_.warning))), conf.db)
-      Cdc.Update(e.record_id, status, msg, attempt, Some(readTime))
+      Update(e.record_id, status, msg, attempt, Some(readTime))
     }
     val fRows = evs.filter(_.v_error.isDefined).map(e =>
-      Cdc.Update(e.record_id, "F", e.v_error, None, None))
+      Update(e.record_id, "F", e.v_error, None, None))
     val renames = outcomes.filter(_.renameOldCn.isDefined)
       .map(o => (o.renameOldCn.get, o.srcCn))
     (commit(snap, parts, dir), (evRows ++ fRows, renames))

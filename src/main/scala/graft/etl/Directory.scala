@@ -5,8 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** DirectorySnapshot — the engine's replacement for the LDAP tree
   * (SURVEY.md §1.1): one row per entry, `dn` unique, attribute bag as
-  * `Map[String, Array[String]]`, persisted as Parquet. Mutations happen
-  * via set-based MERGE (SyncEngine), never point writes.
+  * `Map[String, Array[String]]`, persisted as Parquet. Mutations are
+  * whole-snapshot rewrites, never point writes: the initial load's
+  * set-based MERGE (`SyncEngine.merge`), and a CDC cycle's one
+  * anti-filter pass plus its driver-computed upserts (`Cdc`).
   *
   * Also holds the golden dump codec: the exact text format of the
   * reference's verification dump (ldaptest.py:287–300 `iter`), which is
@@ -352,11 +354,11 @@ object Directory {
     files
   }
 
-  /** Bucketed persistence: cluster + sort the snapshot by dn so the
-    * per-cycle MERGE joins (match, apply) read pre-partitioned,
-    * pre-sorted data — the snapshot side of a sort-merge join then
-    * needs no Exchange and no Sort, cycle after cycle. At 100 TB this
-    * removes the largest recurring shuffle in the engine. (Bucketing
+  /** Bucketed persistence: cluster + sort the snapshot by dn so a
+    * dn-keyed join over it (the initial load's apply, `changesBucketed`)
+    * reads pre-partitioned, pre-sorted data — the snapshot side of a
+    * sort-merge join then needs no Exchange and no Sort. A CDC cycle
+    * has no join over the snapshot: it filters it. (Bucketing
     * needs a catalog table; with the in-memory catalog the table lives
     * for the session — a real deployment would use a persistent
     * catalog or a bucketing-aware table format.)

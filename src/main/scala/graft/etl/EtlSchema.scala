@@ -109,22 +109,24 @@ object EtlSchema {
     case n => stringT(n)
   })
 
-  /** Reference CSV fixture reader: `;`-delimited, header, UTF-8, empty ≡
-    * NULL (testdriver.py:179–193); CHAR(3) columns re-padded as the test
-    * database would store them.
+  /** The reference CSV fixture format: `;`-delimited, header, UTF-8,
+    * empty ≡ NULL (testdriver.py:179–193). The batch reader below and the
+    * streaming CDC reader (`CdcStream.startStreaming`) both read it.
     */
+  val csvOptions: Map[String, String] = Map(
+    "header" -> "true",
+    "delimiter" -> ";",
+    "nullValue" -> "",
+    "timestampFormat" -> "yyyy-MM-dd HH:mm:ss")
+
+  /** `char3` columns re-padded as the test database stores CHAR(3). */
+  def padChar3(df: DataFrame, char3: Seq[String]): DataFrame =
+    char3.foldLeft(df)((d, c) =>
+      d.withColumn(c, when(col(c).isNotNull, rpad(col(c), 3, " "))))
+
   private def readCsv(spark: SparkSession, path: String, schema: StructType,
-      char3: Seq[String]): DataFrame = {
-    val raw = spark.read
-      .option("header", "true")
-      .option("delimiter", ";")
-      .option("nullValue", "")
-      .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
-      .schema(schema)
-      .csv(path)
-    char3.foldLeft(raw)((df, c) =>
-      df.withColumn(c, when(col(c).isNotNull, rpad(col(c), 3, " "))))
-  }
+      char3: Seq[String]): DataFrame =
+    padChar3(spark.read.options(csvOptions).schema(schema).csv(path), char3)
 
   def readUsersCsv(spark: SparkSession, path: String): DataFrame =
     readCsv(spark, path, userSchema, char3UserCols)

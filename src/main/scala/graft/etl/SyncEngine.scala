@@ -32,7 +32,7 @@ case class EtlConf(
   * field-level diff semantics exactly (compare-under-old-IV passwords,
   * attribute deletes on NULL, resurrection, rename-on-cn-change). The
   * kernel is one typed function, `mergeOne`: the driver path of a CDC
-  * cycle and of the ph15 rename pass (`CappedCycle`) calls it on
+  * cycle and of the ph15 rename pass (`Cdc`) calls it on
   * collected rows, and `merge` maps it over the matched rows of the
   * initial load. Row-local ⇒ embarrassingly parallel ⇒ scales with
   * executors; the joins are the only shuffles.

@@ -10,7 +10,7 @@ import Directory.Entry
 /** `Cdc.cycle` against the set-based reference (`SetBasedReference`) on
   * the same inputs: identical per-event verdicts (status, error_message,
   * attempt), eventlog writeback, rename queue and `Directory.dump`, for
-  * capped batches (`CappedCycle.run` at a cap of 5,000), unbounded ones
+  * capped batches (`Cdc.cycle` at a cap of 5,000), unbounded ones
   * (`Cdc.cycle` at `Int.MaxValue`, one chunk: its job count is pinned
   * below) and unbounded ones over lowered bounds, which run as chunks
   * and are held to the reference run chunk by chunk. The ph15 rename
@@ -37,7 +37,7 @@ class CappedCycleSpec extends AnyFunSuite {
   import CappedCycleSpec._
 
   test("capped and set-based cycles agree on 201 seeded random batches") {
-    differential(count = 67, seed = 20261018L)(CappedCycle.run(_, _, _, _, 5000, _),
+    differential(count = 67, seed = 20261018L)(Cdc.cycle(_, _, _, _, 5000, _),
       SetBasedReference.cycle(_, _, _, _, 5000, _))
   }
 
@@ -53,7 +53,7 @@ class CappedCycleSpec extends AnyFunSuite {
     val kept = mutable.ArrayBuffer.empty[Int]
     differential(count = 67, seed = 20261019L)({ (snap, users, eventlog, conf, readTime) =>
       val before = sc.getRDDStorageInfo.map(_.id).toSet
-      val r = CappedCycle.run(snap, users, eventlog, conf, Int.MaxValue, readTime, evB, uidB)
+      val r = Cdc.cycle(snap, users, eventlog, conf, Int.MaxValue, readTime, evB, uidB)
       kept += (sc.getRDDStorageInfo.map(_.id).toSet -- before).size
       r
     }, { (snap, users, eventlog, conf, readTime) =>
@@ -91,9 +91,9 @@ class CappedCycleSpec extends AnyFunSuite {
       val got = Cdc.updatePh15Cn(after, users, q, ph15Conf).localCheckpoint(true)
       assert(Directory.dump(got) == Directory.dump(reference(after, q)), s"round $round")
       val cuts = renameCuts(q, keyBound)
-      assert(CappedCycle.renameChunks(q, keyBound).map(_.toSet) ==
+      assert(Cdc.renameChunks(q, keyBound).map(_.toSet) ==
         cuts.map(_.flatMap { case (a, b) => Seq(a, b) }.toSet), s"round $round cuts")
-      val chunked = CappedCycle.renamePass(after, users, q, ph15Conf, keyBound)
+      val chunked = Cdc.updatePh15Cn(after, users, q, ph15Conf, keyBound)
       assert(Directory.dump(chunked) == Directory.dump(cuts.foldLeft(after)(reference)),
         s"round $round chunked")
       seen += ((q.size, q.count { case (o, n) => o != n && o.equalsIgnoreCase(n) }, cuts.size))
@@ -218,7 +218,7 @@ class CappedCycleSpec extends AnyFunSuite {
       ("an unbounded batch over the uid bound", events(10.0), Int.MaxValue, evB, 1, 2),
       ("an unbounded batch within the bounds", events(10.0), Int.MaxValue, 2, 2, 1))
     for ((why, elog, max, eventBound, uidBound, n) <- ok) {
-      val got = CappedCycle.run(loaded, changed, elog, conf, max, readTime,
+      val got = Cdc.cycle(loaded, changed, elog, conf, max, readTime,
         eventBound, uidBound)
       val ranges = chunkRanges(elog, conf, eventBound, uidBound)
       assert(ranges.size == n, why)
@@ -353,7 +353,7 @@ object CappedCycleSpec {
     * the chunk's distinct cns past `keyBound`.
     */
   def renameCuts(q: Seq[(String, String)], keyBound: Int): Seq[Seq[(String, String)]] = {
-    val o = CappedCycle.utf8Order
+    val o = Cdc.utf8Order
     val chunks = mutable.ArrayBuffer(Seq.empty[(String, String)])
     for (r <- q.distinct.sorted(Ordering.Tuple2(o, o))) {
       val keys = (chunks.last :+ r).flatMap { case (a, b) => Seq(a, b) }.distinct

@@ -64,7 +64,7 @@ class HintHygieneSpec extends AnyFunSuite {
       // lowered bounds, which runs as one chunk per event
       val readTime = java.sql.Timestamp.valueOf("2017-07-11 10:00:00")
       for (r <- Seq(Cdc.cycle(pre.snapshot, users, elog, conf),
-          CappedCycle.run(pre.snapshot, users, elog, conf, Int.MaxValue, readTime, 1, 1))) {
+          Cdc.cycle(pre.snapshot, users, elog, conf, Int.MaxValue, readTime, 1, 1))) {
         r.snapshot.count()
         r.eventUpdates.count()
         r.eventlog.count()

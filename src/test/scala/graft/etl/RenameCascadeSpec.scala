@@ -68,8 +68,8 @@ class RenameCascadeSpec extends AnyFunSuite {
     // scale guard: over a key bound of 2, the two renames run as two
     // chunks, each on the snapshot the one before left, and give the
     // same tree
-    assert(CappedCycle.renameChunks(r.renames, 2).size == 2)
-    val chunked = CappedCycle.renamePass(snap, users, r.renames, ph15Conf, keyBound = 2)
+    assert(Cdc.renameChunks(r.renames, 2).size == 2)
+    val chunked = Cdc.updatePh15Cn(snap, users, r.renames, ph15Conf, keyBound = 2)
     assert(Directory.dump(chunked) == Directory.dump(snap2))
 
     // a one-rename queue: at most 2 jobs (the user rows and the entries

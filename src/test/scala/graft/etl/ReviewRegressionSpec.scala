@@ -169,6 +169,37 @@ class ReviewRegressionSpec extends AnyFunSuite {
     assert(Directory.duplicateDns(snap).isEmpty)
   }
 
+  test("forceCreate turns J2's uid fallback off for new rows only") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    // J2 (etl.py:945–970): a cn miss falls back to the uid "only if not
+    // (new and force)"; the initial load's rows are all new
+    val pre = spark.createDataset(
+      Directory.bootstrapEntries(Seq(base)) :+ Entry(s"cn=oldname,$base", Map(
+        "cn" -> Seq("oldname"), "phonlineUniqueId" -> Seq("321"),
+        "objectClass" -> Seq("inetOrgPerson", "phonlinePerson", "idnSyncstat"))))
+    // (user cn, forceCreate) → the cns under the base, each with uid 321,
+    // and whether the load renamed the entry
+    val table = Seq(
+      ("newname", false) -> (Set("newname"), true),
+      // an add beside the old entry; the sweep keeps the old one, since
+      // its uid is still in the load
+      ("newname", true) -> (Set("oldname", "newname"), false),
+      // a cn match is no fallback: the flag does not change it
+      ("oldname", false) -> (Set("oldname"), false),
+      ("oldname", true) -> (Set("oldname"), false))
+    for (((cn, force), (cns, renamed)) <- table) {
+      val u = baseUsers.limit(1)
+        .withColumn("pk_uniqueid", lit(321.0))
+        .withColumn("benutzername", lit(cn))
+      val r = InitialLoad.run(pre, u, conf.copy(forceCreate = force))
+      val under = r.snapshot.collect().filter(e => Directory.parentDn(e.dn) == base)
+      assert(under.map(e => Directory.rdnValue(e.dn)).toSet == cns, (cn, force))
+      assert(under.forall(_.attrs("phonlineUniqueId") == Seq("321")), (cn, force))
+      assert(r.outcomes.collect().exists(_.renameOldCn.isDefined) == renamed, (cn, force))
+    }
+  }
+
   test("write-through reaches a case-divergent ph15 twin") {
     val spark = TestSpark.spark
     import spark.implicits._

@@ -11,7 +11,7 @@ import EtlSchema.accStatus
   * the per-uid aggregates of the status matrix as joins and aggregations
   * over the whole batch, with the typed kernel mapped over the matched
   * rows (`SyncEngine.merge`). It is an implementation of the cycle
-  * independent of the driver one (`CappedCycle`) in everything but the
+  * independent of the driver one (`Cdc.cycle`) in everything but the
   * batch selection and validation, the source-row conversion, the GC
   * filter, the merge kernel, the per-event C8 verdict and the eventlog
   * writeback, and serves as the reference that `CappedCycleSpec` and
