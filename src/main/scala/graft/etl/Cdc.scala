@@ -1,8 +1,10 @@
 package graft.etl
 
 import scala.collection.mutable
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, GraftBridge}
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import Directory.{Entry, parentDn, rdnValue}
 import SyncEngine.{MatchIn, MergeRow}
 
@@ -32,8 +34,9 @@ import SyncEngine.{MatchIn, MergeRow}
   * consecutive chunks within both bounds: the reference's own drain,
   * capped batches run back to back without a sleep (etl.py:604–606,
   * 419–423). GC (C6) runs once, before the first chunk; each chunk then
-  * runs on the snapshot the one before it left (`chained`). For each
-  * chunk, Spark runs:
+  * runs on the snapshot the one before it left (`chained`). The
+  * selection is one job (`selectBatch`; a capped one is Spark's top-K).
+  * For each chunk, Spark runs:
   *
   *  1. the chunk's user rows (`SyncEngine.toNewRows`, with the cn-dedup
   *     content hash), collected (`userRows`);
@@ -46,6 +49,10 @@ import SyncEngine.{MatchIn, MergeRow}
   *  4. the snapshot: the one before minus the changed and removed dns,
   *     plus the local upserts (`commit`); checkpointed when another chunk
   *     follows.
+  *
+  * Each of these filters a key set with one hash-set predicate
+  * (`inKeys`), so a query costs the same to build and plan whatever the
+  * chunk's number of keys, and each collect is one job with no shuffle.
   *
   * Everything in between — cn-dedup, J2 matching, the merge kernel and
   * one change per dn (`mergeInto`), deletes, the ph15 sweep
@@ -163,6 +170,16 @@ object Cdc {
   private def trimEq(c: Column, v: String): Column =
     graft.functions.ConvertF.char3Eq(c, v)
 
+  /** `c` is one of `keys`, as one hash-set predicate (Catalyst's
+    * `InSet`): its plan holds one expression node whatever the number of
+    * keys, where a literal list (`isin`) holds one literal per key, which
+    * every analyzer and optimizer pass walks. Matching is binary string
+    * equality, and a null `c` gives null, as with the literal list.
+    */
+  private[etl] def inKeys(c: Column, keys: Iterable[String]): Column =
+    GraftBridge.column(InSet(GraftBridge.expression(c),
+      keys.iterator.map(k => UTF8String.fromString(k): Any).toSet))
+
   /** One poll cycle. `users` is the current user table state; `eventlog`
     * the current event table; returns the post-cycle snapshot and
     * eventlog. `eventBound` and `uidBound` bound a chunk (a test lowers
@@ -175,12 +192,7 @@ object Cdc {
       : CycleResult = {
     val spark = snapshot0.sparkSession
     import spark.implicits._
-    val evs = validate(selectBatch(eventlog, maxRecords), conf)
-      .select(col("record_id"), col("v_error"), col("uid"),
-        col("event_type"),
-        when(col("v_error").isNull,
-          coalesce(col("attempt"), lit(0.0)).cast("int")).as("attempt_now"))
-      .as[Ev].collect().toSeq
+    val evs = selectBatch(eventlog, maxRecords, conf).as[Ev].collect().toSeq
     val (snap, outs) = chained(collectGarbage(snapshot0, conf), partitionsOf(snapshot0),
       chunked(evs, eventBound, uidBound))(runChunk(_, _, users, _, conf, readTime))
     val updatesDf = outs.flatMap(_._1).toDF
@@ -196,14 +208,23 @@ object Cdc {
       : Dataset[Entry] =
     if (conf.isPh15) snapshot0 else SyncEngine.garbageCollect(snapshot0, conf)
 
-  /** S3 — bounded work-queue scan (status flags are the offsets). An
-    * unbounded batch (Int.MaxValue) skips the global sort entirely — the
-    * cap exists only to emulate the reference's cycle batching, and a
-    * top-2^31 sort would be pure waste on a process-everything scan.
+  /** S3 — bounded work-queue scan (status flags are the offsets) and P3
+    * validation: the first `maxRecords` pending events in record_id order
+    * as `Ev`'s columns. The events are validated and projected before
+    * they are ordered and limited, so that a capped batch is Spark's
+    * top-K (`TakeOrderedAndProject`): one job, no shuffle, no full sort
+    * (PlanQualitySpec). An unbounded batch (Int.MaxValue) is the plain
+    * filter: the cap exists only to emulate the reference's cycle
+    * batching, and a top-2^31 sort would be pure waste on a
+    * process-everything scan.
     */
-  private[etl] def selectBatch(eventlog: DataFrame, maxRecords: Int): DataFrame = {
-    val pendingEv = eventlog
-      .filter(trimEq(col("status"), "N") || trimEq(col("status"), "E"))
+  private[graft] def selectBatch(eventlog: DataFrame, maxRecords: Int, conf: EtlConf)
+      : DataFrame = {
+    val pendingEv = validate(eventlog
+      .filter(trimEq(col("status"), "N") || trimEq(col("status"), "E")), conf)
+      .select(col("record_id"), col("v_error"), col("uid"), col("event_type"),
+        when(col("v_error").isNull,
+          coalesce(col("attempt"), lit(0.0)).cast("int")).as("attempt_now"))
     if (maxRecords == Int.MaxValue) pendingEv
     else pendingEv.orderBy("record_id").limit(maxRecords)
   }
@@ -213,7 +234,7 @@ object Cdc {
     * fail validation, not slip through a null-valued when(): every
     * predicate is explicitly null-armed.
     */
-  private[etl] def validate(batch: DataFrame, conf: EtlConf): DataFrame = {
+  private def validate(batch: DataFrame, conf: EtlConf): DataFrame = {
     val uidStr = expr("split(table_key, '=', 2)[1]")
     batch.withColumn("v_error",
       when(col("event_type").isNull || !col("event_type").isin(4.0, 5.0, 6.0),
@@ -357,7 +378,7 @@ object Cdc {
     chained(snapshot, partitionsOf(snapshot), renameChunks(renames, keyBound)) {
       (snap, parts, keys) =>
         val rows = userRows(SyncEngine.toNewRows(
-          users.filter(trim(col("benutzername")).isInCollection(keys))))
+          users.filter(inKeys(trim(col("benutzername")), keys))))
         val dir = new Overlay(touchedEntries(snap, rows,
           rows.flatMap(r => Option(r.src_uid)).distinct, None))
         mergeInto(dir, rows, ph15Conf)
@@ -370,8 +391,11 @@ object Cdc {
   private[etl] case class Ev(record_id: Option[Double], v_error: Option[String],
       uid: Option[Long], event_type: Option[Double], attempt_now: Option[Int])
 
-  /** One converted user row with its cn-dedup content hash. */
-  private case class UserRow(src_cn: String, src_uid: String, pw_plain: Option[String],
+  /** One converted user row with its cn-dedup content hash. Not private:
+    * the decoder Spark generates for it must reach its members, or it
+    * fails to compile and every chunk decodes its rows interpreted.
+    */
+  private[etl] case class UserRow(src_cn: String, src_uid: String, pw_plain: Option[String],
       new_attrs: Map[String, Seq[String]], h: Long)
 
   private implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
@@ -491,20 +515,28 @@ object Cdc {
 
   /** Step 2: the entries of `snap` that a merge of `rows` reads, and the
     * ones that carry one of `uids`, under any base; with `twinBase`, also
-    * the twins of the rows' cns under it. Collected.
+    * the twins of the rows' cns under it. Collected, in one job whose
+    * filter (`touchedBy`) is three hash-set predicates at most.
     */
   private def touchedEntries(snap: Dataset[Entry], rows: Seq[UserRow], uids: Seq[String],
-      twinBase: Option[String]): Seq[Entry] = {
-    val srcCns = rows.flatMap(r => Option(r.src_cn)).distinct
+      twinBase: Option[String]): Seq[Entry] =
+    touchedBy(rows.flatMap(r => Option(r.src_cn)).distinct, uids, twinBase)
+      .map(c => snap.filter(c).collect().toSeq).getOrElse(Nil)
+
+  /** `touchedEntries`' filter over the distinct `srcCns`: one `inKeys`
+    * predicate per key set, so its plan has the same size whatever the
+    * chunk's number of keys. None when there are no keys.
+    */
+  private[etl] def touchedBy(srcCns: Seq[String], uids: Seq[String],
+      twinBase: Option[String]): Option[Column] = {
     val cnKeys = srcCns.map(_.toLowerCase).distinct
-    val touchedBy = Seq(
-      Option.when(cnKeys.nonEmpty)(
-        lower(Directory.rdnValueCol(col("dn"))).isInCollection(cnKeys)),
+    Seq(
+      Option.when(cnKeys.nonEmpty)(inKeys(lower(Directory.rdnValueCol(col("dn"))), cnKeys)),
       Option.when(uids.nonEmpty)(
-        element_at(col("attrs")("phonlineUniqueId"), 1).isInCollection(uids)),
+        inKeys(element_at(col("attrs")("phonlineUniqueId"), 1), uids)),
       twinBase.filter(_ => srcCns.nonEmpty).map(b =>
-        lower(col("dn")).isInCollection(srcCns.map(c => s"cn=$c,$b".toLowerCase)))).flatten
-    touchedBy.reduceOption(_ || _).map(c => snap.filter(c).collect().toSeq).getOrElse(Nil)
+        inKeys(lower(col("dn")), srcCns.map(c => s"cn=$c,$b".toLowerCase))))
+      .flatten.reduceOption(_ || _)
   }
 
   /** cn-dedup, J2 match and the kernel (`isNew = false`) of `rows`
@@ -552,16 +584,17 @@ object Cdc {
     (outcomes, winners)
   }
 
-  /** Step 4: `snap` with `dir`'s changes, in one anti-filter pass plus the
-    * local upserts in one partition, so that a saved snapshot gains at
-    * most one file per cycle. A checkpointed snapshot (the poll loop's)
-    * is coalesced back to its partition count `parts`, or that one
-    * partition piles up over the loop's cycles.
+  /** Step 4: `snap` with `dir`'s changes, in one anti-filter pass (one
+    * hash-set predicate over the dropped dns) plus the local upserts in
+    * one partition, so that a saved snapshot gains at most one file per
+    * cycle. A checkpointed snapshot (the poll loop's) is coalesced back to
+    * its partition count `parts`, or that one partition piles up over the
+    * loop's cycles.
     */
   private def commit(snap: Dataset[Entry], parts: Option[Int], dir: Overlay): Dataset[Entry] = {
     val (dropped, upserts) = dir.diff
     val merged = snap
-      .filter(!coalesce(col("dn").isInCollection(dropped), lit(false)))
+      .filter(!coalesce(inKeys(col("dn"), dropped), lit(false)))
       .union(snap.sparkSession.createDataset(upserts)(Encoders.product[Entry]).coalesce(1))
     parts.fold(merged)(merged.coalesce)
   }
@@ -580,7 +613,7 @@ object Cdc {
     val rows: Seq[UserRow] =
       if (batchUids.isEmpty) Nil
       else userRows(SyncEngine.toNewRows(users)
-        .filter(col("src_uid").isInCollection(batchUids)))
+        .filter(inKeys(col("src_uid"), batchUids)))
 
     // 2 — the touched entries of the snapshot, then J2 and the kernel
     val writethrough = conf.ph15Dn.nonEmpty && !conf.isPh15
@@ -600,8 +633,8 @@ object Cdc {
     if (!hard && conf.baseDn.contains("ou=ph") && victims.nonEmpty) {
       // 3 — the ph15 sweep over the entries under the victims' cns
       val victimCns = victims.map(rdnValue).distinct
-      dir.fetch(snap.filter(Directory.rdnValueCol(col("dn"))
-        .isInCollection(victimCns)).collect().toSeq)
+      dir.fetch(snap.filter(inKeys(Directory.rdnValueCol(col("dn")), victimCns))
+        .collect().toSeq)
       SyncEngine.ph15Sweep(dir.entries, victimCns, conf).foreach(dir.remove)
     }
 

@@ -312,7 +312,7 @@ object CappedCycleSpec {
     */
   def chunkRanges(eventlog: DataFrame, conf: EtlConf, eventBound: Int,
       uidBound: Int): Seq[(Option[Double], Option[Double])] = {
-    val sel = Cdc.validate(Cdc.selectBatch(eventlog, Int.MaxValue), conf)
+    val sel = Cdc.selectBatch(eventlog, Int.MaxValue, conf)
       .select(col("record_id"), col("uid")).collect().toSeq
       .map(r => (Option(r.get(0)).map(_.asInstanceOf[Double]),
         Option(r.get(1)).map(_.asInstanceOf[Long])))

@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.CdcStream
 
@@ -22,8 +22,11 @@ class CdcStreamCycleSpec extends AnyFunSuite {
     val users0 = Fixture.users(spark).collect().toSeq
     var st = CdcStream.LoopState(Fixture.twoTree(spark), Map("postgres" -> noEvents), 0, 0)
     val jobs = new AtomicLong
+    val shuffled = new AtomicLong
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten))
     }
     def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     // one cycle per version: 12 name changes (one a write-through), a
@@ -44,7 +47,12 @@ class CdcStreamCycleSpec extends AnyFunSuite {
       (jobs.get - j0, compiles - c0)
     }
     info(s"(jobs, compiles) per cycle: $perCycle")
-    perCycle.foreach { case (j, _) => assert(j <= 12, s"jobs per cycle: $perCycle") }
+    // the selection's top-k, the user rows, the touched entries and the
+    // ph15 sweep's entries (4 collects), the step's snapshot checkpoint,
+    // and the writeback's broadcast and eventlog checkpoint (3); no step
+    // shuffles
+    perCycle.foreach { case (j, _) => assert(j <= 7, s"jobs per cycle: $perCycle") }
+    assert(shuffled.get == 0, s"shuffle bytes written: ${shuffled.get}")
     assert(perCycle(2)._2 <= 20, s"(jobs, compiles) per cycle: $perCycle")
   }
 
@@ -70,12 +78,12 @@ class CdcStreamCycleSpec extends AnyFunSuite {
       s
     } finally sc.removeSparkListener(listener)
     assert(st.sourceErrors.isEmpty, st.lastErrors)
-    // 8 jobs for the ph08 source's cycle and its eventlog checkpoint (the
-    // capped poll cycle above runs them and the snapshot checkpoint), 2
-    // for the rename pass's collects, and 1 for the step's one checkpoint
-    // of the snapshot; the idle ph15 source runs none
+    // 7 jobs for the ph08 source's cycle, the step's checkpoint of the
+    // snapshot and the eventlog's writeback and checkpoint (the capped
+    // poll cycle above runs the same 7), and 2 for the rename pass's
+    // collects; the idle ph15 source runs none
     info(s"jobs in the cycle: ${jobs.get}")
-    assert(jobs.get <= 11, s"jobs in the cycle: ${jobs.get}")
+    assert(jobs.get <= 9, s"jobs in the cycle: ${jobs.get}")
 
     // version 1 renames the second uid over 1 to ren1.<uid>
     val uid = users0.map(r => r.getDouble(idx("pk_uniqueid")).toLong)

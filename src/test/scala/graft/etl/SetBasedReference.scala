@@ -37,10 +37,10 @@ object SetBasedReference {
     import spark.implicits._
 
     val snap1 = Cdc.collectGarbage(snapshot0, conf)
-    val validated = Cdc.validate(Cdc.selectBatch(eventlog, maxRecords), conf)
+    val validated = Cdc.selectBatch(eventlog, maxRecords, conf)
     val valid = validated.filter(col("v_error").isNull)
       .select(col("record_id"), col("uid"), col("event_type"),
-        col("attempt"))
+        col("attempt_now"))
 
     // J1 — current user rows for the batch's uids (set-based lookup).
     // When the cap bounds the uid set within `broadcastUidBound` it
@@ -113,7 +113,7 @@ object SetBasedReference {
       .join(uidAgg, col("uid").cast("string") === col("srcUid"), "left_outer")
       .join(rowCounts, col("uid").cast("string") === col("src_uid"), "left_outer")
       .select(col("record_id"), col("uid"), col("event_type"),
-        coalesce(col("attempt"), lit(0.0)).cast("int").as("attempt_now"),
+        col("attempt_now"),
         min(col("record_id")).over(Window.partitionBy(col("uid"))).as("first_rid"),
         coalesce(col("row_n"), lit(0L)).as("row_n"),
         coalesce(col("pre_matched"), lit(false)).as("pre_matched"),

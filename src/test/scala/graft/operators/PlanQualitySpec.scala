@@ -41,6 +41,18 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(p.contains("TakeOrderedAndProject"), p)
   }
 
+  test("the CDC cycle's capped selection is one top-k, with no exchange") {
+    // validated and projected below the sort and limit, so the planner
+    // takes the top k per partition instead of range-partitioning the
+    // pending events for a global sort
+    val spark = TestSpark.spark
+    val eventlog = graft.etl.EtlSchema.readEventsCsv(spark,
+      s"${graft.etl.Fixture.dir}/eventlog01.csv")
+    val p = graft.etl.Cdc.selectBatch(eventlog, 100, graft.etl.Fixture.conf)
+      .queryExecution.executedPlan.toString
+    assert(p.contains("TakeOrderedAndProject") && !p.contains("Exchange"), p)
+  }
+
   test("q4/q8/q22 keep semi/anti joins hash-based, no nested loops") {
     val semi = plan("q_tpch_q4")
     assert(semi.contains("LeftSemi"), semi)
