@@ -28,15 +28,16 @@ import SyncEngine.{MatchIn, MergeRow}
   * collected and the cycle is computed with the typed kernel
   * (`SyncEngine.mergeOne`) and one C8 verdict per event (`verdict`), then
   * applied with one pass over the snapshot and one over the eventlog.
-  * The selection is collected whole; one within `driverEventBound`
-  * events and `driverBatchBound` distinct valid uids is one chunk, and a
-  * larger one (an unbounded outage drain) is cut in record_id order into
-  * consecutive chunks within both bounds: the reference's own drain,
-  * capped batches run back to back without a sleep (etl.py:604–606,
-  * 419–423). GC (C6) runs once, before the first chunk; each chunk then
-  * runs on the snapshot the one before it left (`chained`). The
-  * selection is one job (`selectBatch`; a capped one is Spark's top-K).
-  * For each chunk, Spark runs:
+  * The selection is collected whole and cut in record_id order into
+  * consecutive chunks of at most `driverBatchBound` distinct valid uids;
+  * one within the bound is one chunk, and a larger one (an unbounded
+  * outage drain) runs as the reference's own drain does, capped batches
+  * back to back without a sleep (etl.py:604–606, 419–423). GC (C6) runs
+  * once, before the first chunk; each chunk then runs on the snapshot
+  * the one before it left (`chained`), stored between chunks by the one
+  * rule for a stored frame (`store`). The selection is one job
+  * (`selectBatch`; a capped one is Spark's top-K). For each chunk, Spark
+  * runs:
   *
   *  1. the chunk's user rows (`SyncEngine.toNewRows`, with the cn-dedup
   *     content hash), collected (`userRows`);
@@ -47,7 +48,7 @@ import SyncEngine.{MatchIn, MergeRow}
   *  3. only when the chunk deletes: the entries whose cn is a victim's
   *     cn, for the ph15 sweep, collected;
   *  4. the snapshot: the one before minus the changed and removed dns,
-  *     plus the local upserts (`commit`); checkpointed when another chunk
+  *     plus the local upserts (`commit`); stored when another chunk
   *     follows.
   *
   * Each of these filters a key set with one hash-set predicate
@@ -76,30 +77,21 @@ import SyncEngine.{MatchIn, MergeRow}
   */
 object Cdc {
   /** Most distinct valid uids one chunk of a cycle holds, and most keys
-    * one chunk of the ph15 rename pass holds.
+    * one chunk of the ph15 rename pass holds: the one chunk bound.
     * The driver-held inputs that grow with a chunk, its user rows and the
     * snapshot entries it touches, grow with its distinct uids, not with
-    * its events. Measured near this bound: a poll cycle of 10,000 events
-    * on 8,888–8,971 distinct uids at 37,678 users took 5.2–5.5 s on the
-    * driver (syncbench's poll workload at a 10,000-event cap, seeds
-    * 101–103, 4 cores), and also passed in a 2 GB heap.
+    * its events; over the whole selection, the driver holds five scalars
+    * (`Ev`) and one verdict row per event. Measured near this bound: a
+    * poll cycle of 10,000 events on 8,888–8,971 distinct uids at 37,678
+    * users took 5.2–5.5 s on the driver (syncbench's poll workload at a
+    * 10,000-event cap, seeds 101–103, 4 cores), and also passed in a 2 GB
+    * heap. With syncbench's bulk drain at 37,678 users (`Sizes(users =
+    * 37678, bulkEvents = n)`, Zipf-skewed, 4 cores, one run each), one
+    * chunk of 20,000 events on 7,741 uids took 6.6 s (seed 101), and in a
+    * 2 GB heap 8.8 s on 7,752 uids with at most 1,521 MB of heap in use
+    * (seed 102).
     */
   val driverBatchBound: Int = 10000
-
-  /** Most events one chunk of a cycle holds. Over the whole selection,
-    * the driver holds five scalars (`Ev`) and one verdict row
-    * per event; the user rows and entries it holds are one chunk's.
-    * Measured at 37,678 users with syncbench's bulk drain (`Sizes(users =
-    * 37678, bulkEvents = n)`, Zipf-skewed, 4 cores, one run each): one
-    * chunk of 20,000 events on 7,741 uids took 6.6 s, 50,000 on 16,002
-    * uids 10.9 s, and 100,000 on 26,663 uids 17.7 s (seed 101; the two
-    * larger runs with both bounds lifted, so they load the driver with
-    * more uids than the bounds admit). In a 2 GB heap, 20,000 events on
-    * 7,752 uids took 8.8 s at these bounds, and 100,000 on 26,436 uids
-    * 21.0 s with both lifted, with at most 1,521 and 1,984 MB of heap in
-    * use over the whole run (seed 102).
-    */
-  val driverEventBound: Int = 100000
 
   case class CycleResult(
       snapshot: Dataset[Entry],
@@ -167,8 +159,29 @@ object Cdc {
     else ("S", None, None)
   }
 
-  private def trimEq(c: Column, v: String): Column =
-    graft.functions.ConvertF.char3Eq(c, v)
+  /** An event the work queue still holds: its trimmed status is N (new)
+    * or E (errored, retried). The selection and the poll loop's backlog
+    * both read it.
+    */
+  val pending: Column = graft.functions.ConvertF.char3Eq(col("status"), "N") ||
+    graft.functions.ConvertF.char3Eq(col("status"), "E")
+
+  /** The one rule for a frame the CDC loop stores (a chunk's snapshot,
+    * the step's snapshot, a source's eventlog): coalesced to at most one
+    * partition per core, so that a frame that gains a partition every
+    * cycle stays bounded, then checkpointed, so that its lineage does not
+    * grow with the cycles. Its jobs carry the caller's file and line as
+    * their call site, so that a job is counted where the frame is stored
+    * (syncbench attributes a job to a module by its call site).
+    */
+  def store[T](ds: Dataset[T]): Dataset[T] = {
+    val sc = ds.sparkSession.sparkContext
+    val at = Thread.currentThread.getStackTrace()(2)
+    val outer = sc.getLocalProperty("callSite.short")
+    sc.setCallSite(s"store at ${at.getFileName}:${at.getLineNumber}")
+    try ds.coalesce(sc.defaultParallelism).localCheckpoint(true)
+    finally sc.setLocalProperty("callSite.short", outer)
+  }
 
   /** `c` is one of `keys`, as one hash-set predicate (Catalyst's
     * `InSet`): its plan holds one expression node whatever the number of
@@ -182,19 +195,19 @@ object Cdc {
 
   /** One poll cycle. `users` is the current user table state; `eventlog`
     * the current event table; returns the post-cycle snapshot and
-    * eventlog. `eventBound` and `uidBound` bound a chunk (a test lowers
-    * them to force chunks on small data).
+    * eventlog. `uidBound` bounds a chunk (a test lowers it to force
+    * chunks on small data).
     */
   def cycle(snapshot0: Dataset[Entry], users: DataFrame, eventlog: DataFrame,
       conf: EtlConf, maxRecords: Int = 100,
       readTime: java.sql.Timestamp = new java.sql.Timestamp(System.currentTimeMillis / 1000 * 1000),
-      eventBound: Int = driverEventBound, uidBound: Int = driverBatchBound)
+      uidBound: Int = driverBatchBound)
       : CycleResult = {
     val spark = snapshot0.sparkSession
     import spark.implicits._
     val evs = selectBatch(eventlog, maxRecords, conf).as[Ev].collect().toSeq
-    val (snap, outs) = chained(collectGarbage(snapshot0, conf), partitionsOf(snapshot0),
-      chunked(evs, eventBound, uidBound))(runChunk(_, _, users, _, conf, readTime))
+    val (snap, outs) = chained(collectGarbage(snapshot0, conf), chunked(evs, uidBound))(
+      runChunk(_, users, _, conf, readTime))
     val updatesDf = outs.flatMap(_._1).toDF
     CycleResult(snap, writeback(eventlog, broadcast(updatesDf)), updatesDf,
       outs.flatMap(_._2), evs.size.toLong)
@@ -220,8 +233,7 @@ object Cdc {
     */
   private[graft] def selectBatch(eventlog: DataFrame, maxRecords: Int, conf: EtlConf)
       : DataFrame = {
-    val pendingEv = validate(eventlog
-      .filter(trimEq(col("status"), "N") || trimEq(col("status"), "E")), conf)
+    val pendingEv = validate(eventlog.filter(pending), conf)
       .select(col("record_id"), col("v_error"), col("uid"), col("event_type"),
         when(col("v_error").isNull,
           coalesce(col("attempt"), lit(0.0)).cast("int")).as("attempt_now"))
@@ -351,11 +363,7 @@ object Cdc {
     }
     def save(dir: String, db: String, hwm: java.sql.Timestamp): Unit = {
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-      val tmp = java.nio.file.Paths.get(s"$dir/hwm_$db.tmp")
-      java.nio.file.Files.writeString(tmp, hwm.toString)
-      java.nio.file.Files.move(tmp, java.nio.file.Paths.get(s"$dir/hwm_$db"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      Directory.writeAtomically(s"$dir/hwm_$db", hwm.toString.getBytes("UTF-8"))
     }
   }
 
@@ -375,14 +383,13 @@ object Cdc {
   def updatePh15Cn(snapshot: Dataset[Entry], users: DataFrame,
       renames: Seq[(String, String)], ph15Conf: EtlConf,
       keyBound: Int = driverBatchBound): Dataset[Entry] =
-    chained(snapshot, partitionsOf(snapshot), renameChunks(renames, keyBound)) {
-      (snap, parts, keys) =>
-        val rows = userRows(SyncEngine.toNewRows(
-          users.filter(inKeys(trim(col("benutzername")), keys))))
-        val dir = new Overlay(touchedEntries(snap, rows,
-          rows.flatMap(r => Option(r.src_uid)).distinct, None))
-        mergeInto(dir, rows, ph15Conf)
-        (commit(snap, parts, dir), ())
+    chained(snapshot, renameChunks(renames, keyBound)) { (snap, keys) =>
+      val rows = userRows(SyncEngine.toNewRows(
+        users.filter(inKeys(trim(col("benutzername")), keys))))
+      val dir = new Overlay(touchedEntries(snap, rows,
+        rows.flatMap(r => Option(r.src_uid)).distinct, None))
+      mergeInto(dir, rows, ph15Conf)
+      (commit(snap, dir), ())
     }._1
 
   /** One selected event; `attempt_now` is C8's attempt as Spark casts it,
@@ -422,55 +429,39 @@ object Cdc {
   private def maxUtf8(xs: Iterable[String]): Option[String] =
     xs.reduceOption((a, b) => if (utf8Order.gteq(a, b)) a else b)
 
-  /** The partition count of a stored snapshot, or of one that `commit`
-    * coalesced, which a chunk or another source's cycle reads before it
-    * is stored: without a job.
-    */
-  private def partitionsOf(ds: Dataset[Entry]): Option[Int] =
-    ds.queryExecution.logical match {
-      case r: org.apache.spark.sql.execution.LogicalRDD => Some(r.rdd.getNumPartitions)
-      case org.apache.spark.sql.catalyst.plans.logical.Repartition(n, false, _) => Some(n)
-      case _ => None
-    }
-
   /** `each` over `chunks` in order, each on the snapshot the one before it
-    * left: the last snapshot and every chunk's output. `parts0` is the
-    * partition count to keep the snapshot at, when it is known without a
-    * job.
+    * left: the last snapshot and every chunk's output.
     */
-  private def chained[C, A](snap0: Dataset[Entry], parts0: Option[Int], chunks: Seq[C])(
-      each: (Dataset[Entry], Option[Int], C) => (Dataset[Entry], A))
+  private def chained[C, A](snap0: Dataset[Entry], chunks: Seq[C])(
+      each: (Dataset[Entry], C) => (Dataset[Entry], A))
       : (Dataset[Entry], Seq[A]) = {
     var snap = snap0
-    var parts = parts0
     val outs = chunks.zipWithIndex.map { case (chunk, i) =>
-      val (next, out) = each(snap, parts, chunk)
+      val (next, out) = each(snap, chunk)
       if (i == chunks.size - 1) snap = next
       else {
         // the next chunk reads this one's snapshot: stored, so that the
         // lineage does not grow with the chunks; the one before it is
         // read by nothing once this one is stored
-        val kept = next.localCheckpoint(true)
+        val kept = store(next)
         if (i > 0) snap.queryExecution.logical.foreach {
           case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
           case _ => ()
         }
         snap = kept
-        parts = partitionsOf(kept)
       }
       out
     }
     (snap, outs)
   }
 
-  /** The selection as chunks: whole when it is within both bounds (in
-    * selection order), else cut in record_id order (nulls first, as
-    * Spark sorts) into consecutive chunks of at most `eventBound` events
-    * on at most `uidBound` distinct valid uids.
+  /** The selection in record_id order (nulls first, as Spark sorts), cut
+    * into consecutive chunks of at most `uidBound` distinct valid uids: a
+    * chunk ends where the next event's uid would take it past the bound.
+    * A selection within the bound is one chunk; an empty one is none.
     */
-  private[etl] def chunked(evs: Seq[Ev], eventBound: Int, uidBound: Int): Seq[Seq[Ev]] =
-    if (evs.size <= eventBound && evs.flatMap(_.uid).distinct.size <= uidBound) Seq(evs)
-    else cut(evs.sortBy(_.record_id), eventBound, uidBound)(_.uid.toSeq)
+  private[etl] def chunked(evs: Seq[Ev], uidBound: Int): Seq[Seq[Ev]] =
+    cut(evs.sortBy(_.record_id), uidBound)(_.uid.toSeq)
 
   /** The rename queue as chunks of its keys: the distinct renames in
     * UTF-8 order, cut where a rename would take a chunk past `keyBound`
@@ -478,21 +469,19 @@ object Cdc {
     */
   private[etl] def renameChunks(renames: Seq[(String, String)], keyBound: Int)
       : Seq[Seq[String]] =
-    cut(renames.distinct.sorted(Ordering.Tuple2(utf8Order, utf8Order)), Int.MaxValue,
-      keyBound)(r => Seq(r._1, r._2)).map(_.flatMap(r => Seq(r._1, r._2)).distinct)
+    cut(renames.distinct.sorted(Ordering.Tuple2(utf8Order, utf8Order)), keyBound)(
+      r => Seq(r._1, r._2)).map(_.flatMap(r => Seq(r._1, r._2)).distinct)
 
-  /** `xs` in order as consecutive chunks of at most `sizeBound` items on
-    * at most `keyBound` distinct keys; an empty chunk takes any item.
+  /** `xs` in order as consecutive chunks of at most `keyBound` distinct
+    * keys; an empty chunk takes any item.
     */
-  private def cut[T, K](xs: Seq[T], sizeBound: Int, keyBound: Int)(keysOf: T => Seq[K])
-      : Seq[Seq[T]] = {
+  private def cut[T, K](xs: Seq[T], keyBound: Int)(keysOf: T => Seq[K]): Seq[Seq[T]] = {
     val out = mutable.ArrayBuffer.empty[Seq[T]]
     val cur = mutable.ArrayBuffer.empty[T]
     val keys = mutable.Set.empty[K]
     xs.foreach { x =>
       val ks = keysOf(x)
-      if (cur.nonEmpty &&
-          (cur.size == sizeBound || keys.size + ks.distinct.count(!keys(_)) > keyBound)) {
+      if (cur.nonEmpty && keys.size + ks.distinct.count(!keys(_)) > keyBound) {
         out += cur.toSeq
         cur.clear()
         keys.clear()
@@ -587,22 +576,19 @@ object Cdc {
   /** Step 4: `snap` with `dir`'s changes, in one anti-filter pass (one
     * hash-set predicate over the dropped dns) plus the local upserts in
     * one partition, so that a saved snapshot gains at most one file per
-    * cycle. A checkpointed snapshot (the poll loop's) is coalesced back to
-    * its partition count `parts`, or that one partition piles up over the
-    * loop's cycles.
+    * cycle. The loop's next `store` bounds the partitions that one
+    * partition adds per cycle.
     */
-  private def commit(snap: Dataset[Entry], parts: Option[Int], dir: Overlay): Dataset[Entry] = {
+  private def commit(snap: Dataset[Entry], dir: Overlay): Dataset[Entry] = {
     val (dropped, upserts) = dir.diff
-    val merged = snap
-      .filter(!coalesce(inKeys(col("dn"), dropped), lit(false)))
+    snap.filter(!coalesce(inKeys(col("dn"), dropped), lit(false)))
       .union(snap.sparkSession.createDataset(upserts)(Encoders.product[Entry]).coalesce(1))
-    parts.fold(merged)(merged.coalesce)
   }
 
   /** One chunk of the cycle on `snap`: the snapshot after it, its
     * eventlog updates and its rename queue.
     */
-  private def runChunk(snap: Dataset[Entry], parts: Option[Int], users: DataFrame,
+  private def runChunk(snap: Dataset[Entry], users: DataFrame,
       evs: Seq[Ev], conf: EtlConf, readTime: java.sql.Timestamp)
       : (Dataset[Entry], (Seq[Update], Seq[(String, String)])) = {
     val valid = evs.filter(_.v_error.isEmpty)
@@ -682,7 +668,7 @@ object Cdc {
       Update(e.record_id, "F", e.v_error, None, None))
     val renames = outcomes.filter(_.renameOldCn.isDefined)
       .map(o => (o.renameOldCn.get, o.srcCn))
-    (commit(snap, parts, dir), (evRows ++ fRows, renames))
+    (commit(snap, dir), (evRows ++ fRows, renames))
   }
 
   /** A state that only a snapshot breaking the Directory invariant

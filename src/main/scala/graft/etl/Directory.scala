@@ -194,11 +194,7 @@ object Directory {
     val suffix = java.util.UUID.randomUUID().toString.take(8)
     val version = s"v${prevN + 1}-$suffix"
     snapshot.write.mode("overwrite").parquet(s"$dir/$version")
-    val tmp = new java.io.File(s"$dir/CURRENT.tmp")
-    java.nio.file.Files.writeString(tmp.toPath, version)
-    java.nio.file.Files.move(tmp.toPath, ptr.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    writeAtomically(ptr.getPath, version.getBytes("UTF-8"))
     val marks = new java.io.File(s"$dir/_published")
     java.nio.file.Files.createDirectories(marks.toPath)
     try java.nio.file.Files.createFile(
@@ -224,6 +220,20 @@ object Directory {
         deleteRecursively(f)
         new java.io.File(marks, f.getName).delete()
       }
+  }
+
+  /** Writes `bytes` to `path` through a temp file of its own in the same
+    * directory, then renames it over `path`: a reader sees the old content
+    * or the new, never part of it, and concurrent writers of one path
+    * never share a temp file.
+    */
+  private[etl] def writeAtomically(path: String, bytes: Array[Byte]): Unit = {
+    import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
+    val p = Paths.get(path)
+    val tmp = p.resolveSibling(s"${p.getFileName}.${java.util.UUID.randomUUID}.tmp")
+    Files.write(tmp, bytes, StandardOpenOption.CREATE_NEW)
+    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** Published versions whose data is still on disk, newest commit

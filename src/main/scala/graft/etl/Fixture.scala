@@ -45,18 +45,8 @@ object Fixture {
     val hash = md5.digest().take(6).map(b => f"$b%02x").mkString
     val out = s"${sys.props("java.io.tmpdir")}/graft_etl_fixture_$hash"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-    bytes.foreach { case (f, b) => writeAtomically(s"$out/$f", b) }
+    bytes.foreach { case (f, b) => Directory.writeAtomically(s"$out/$f", b) }
     out
-  }
-
-  /** Temp file + rename: another JVM may be reading the same path. */
-  private def writeAtomically(path: String, bytes: Array[Byte]): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val p = Paths.get(path)
-    val tmp = Files.createTempFile(p.getParent, p.getFileName.toString, ".tmp")
-    Files.write(tmp, bytes)
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
   }
 
   def users(s: SparkSession): DataFrame =
@@ -82,7 +72,7 @@ object Fixture {
   def twoTreeDump(s: SparkSession): String =
     graft.Memo.value("etl-fixture two-tree dump", dir) {
       val text = Directory.dump(twoTree(s))
-      writeAtomically(twoTreeDumpPath, text.getBytes("UTF-8"))
+      Directory.writeAtomically(twoTreeDumpPath, text.getBytes("UTF-8"))
       text
     }
 

@@ -648,10 +648,9 @@ object EtlOps {
     // under-report at a large enough sf
     //
     // Chunk note: the cycle runs on the driver, in chunks of at most
-    // `Cdc.driverEventBound` events on `Cdc.driverBatchBound` uids (Cdc
-    // header). At sf0.001-0.1 the batch (1,000-100,000 events on
-    // 15-1,500 uids) is one chunk; GenScale sf1's 1M events on 15,000
-    // uids run as consecutive chunks, cut at the uid bound.
+    // `Cdc.driverBatchBound` distinct uids (Cdc header). At sf0.001-0.1
+    // the batch (1,000-100,000 events on 15-1,500 uids) is one chunk;
+    // GenScale sf1's 1M events on 15,000 uids run as consecutive chunks.
     val r = Cdc.cycle(snap, users, ev,
       scaleConf.copy(etlTimestamp = "20170101000300Z"),
       maxRecords = Int.MaxValue)

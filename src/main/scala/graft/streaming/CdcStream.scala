@@ -10,14 +10,14 @@ import graft.etl.Directory.Entry
   * form (`startStreaming`). Both run one loop body, `step`: each
   * source's `Cdc.cycle` on the snapshot the source before it left, the
   * end-of-cycle ph15 rename pass (C3) over the renames they queued, and
-  * one localCheckpoint of the snapshot — the batch-loop equivalent of a
-  * streaming checkpoint, keeping Catalyst planning O(1) per cycle.
+  * one store of the snapshot (`Cdc.store`) — the batch-loop equivalent of
+  * a streaming checkpoint, keeping Catalyst planning O(1) per cycle.
   *
   * Around the step, the poll loop keeps:
   *
   *  - round-robin over N (baseDn, db) sources per cycle, each with its
   *    own eventlog table (the reference zips base_dns with databases),
-  *    lineage-truncated per cycle like the snapshot,
+  *    stored per cycle by the snapshot's rule,
   *  - batch cap (`maxRecords`) per source per cycle,
   *  - **drain rule**: skip the sleep entirely while any source returned
   *    a full batch (backlog catch-up, etl.py:604–606, 419–423),
@@ -62,10 +62,10 @@ object CdcStream {
     * checkpoint carrying only source offsets). The trigger's file is the
     * unit of work, so each micro-batch runs unbounded: every pending
     * event in it gets a verdict. As any cycle, a micro-batch over
-    * `Cdc.driverEventBound` events or `Cdc.driverBatchBound` uids runs
-    * as consecutive chunks. With `conf.ph15Dn` set, the step's rename
-    * pass propagates the batch's queued renames into the ph15 twin tree,
-    * as the poll loop's does. Any failure of the step fails the
+    * `Cdc.driverBatchBound` distinct uids runs as consecutive chunks.
+    * With `conf.ph15Dn` set, the step's rename pass propagates the
+    * batch's queued renames into the ph15 twin tree, as the poll loop's
+    * does. Any failure of the step fails the
     * micro-batch, before the snapshot or `onCycle` sees it.
     */
   def startStreaming(
@@ -108,9 +108,10 @@ object CdcStream {
     * the ph15 rename pass (C3) of `renamePass` over the distinct renames
     * the cycles queued (the reference's ph15_change_dn dict grows over
     * the whole cycle and is drained once, etl.py:411–418); then one
-    * checkpoint of the snapshot. Returns that snapshot and each source's
-    * cycle result or failure: a failed source leaves the snapshot as it
-    * found it. A failure of the pass or of the checkpoint is thrown.
+    * store of the snapshot (`Cdc.store`). Returns that snapshot and each
+    * source's cycle result or failure: a failed source leaves the
+    * snapshot as it found it. A failure of the pass or of the store is
+    * thrown.
     */
   private def step(snapshot: Dataset[Entry], sources: Seq[Source],
       eventlog: Source => DataFrame, renamePass: Option[Source], maxRecords: Int)
@@ -125,13 +126,13 @@ object CdcStream {
     if (renames.nonEmpty) renamePass.foreach { p =>
       snap = Cdc.updatePh15Cn(snap, p.users(), renames, p.conf)
     }
-    (snap.localCheckpoint(true), results)
+    (Cdc.store(snap), results)
   }
 
   /** Run cycles until no 'N'/'E' events remain in any source or
     * maxCycles is hit. Each cycle is one `step` over the sources, stamped
     * `gen<cycle>_<n>`, with the ph15 source (if any) as its rename pass
-    * under its own conf; then each source's eventlog is checkpointed.
+    * under its own conf; then each source's eventlog is stored.
     * `sleeper` is injected so tests can count/skip real sleeping;
     * `heartbeat` is touched every cycle (liveness:1–21).
     *
@@ -177,17 +178,13 @@ object CdcStream {
         case Failure(e) => ph15Source.fold(stamped)(Seq(_)).map(_ -> Failure(e))
       }
       for ((src, result) <- outcomes) {
-        // the post-cycle backlog is observed on the checkpoint's own
-        // pass over the eventlog, not counted by a job of its own. A
-        // caller that appends each arriving batch by a union adds its
-        // partitions every cycle; the narrow coalesce keeps the
-        // checkpoint at most one partition per core.
+        // the post-cycle backlog is observed on the store's own pass
+        // over the eventlog, not counted by a job of its own. A caller
+        // that appends each arriving batch by a union adds its
+        // partitions every cycle; the store bounds them.
         val backlogObs = Observation()
-        result.flatMap(r => Try(r -> r.eventlog
-          .coalesce(r.eventlog.sparkSession.sparkContext.defaultParallelism)
-          .observe(backlogObs, count(when(rtrim(col("status")).isin("N", "E"), 1))
-            .as("pending"))
-          .localCheckpoint(true))) match {
+        result.flatMap(r => Try(r -> Cdc.store(r.eventlog
+          .observe(backlogObs, count(when(Cdc.pending, 1)).as("pending"))))) match {
           case Success((r, elog)) =>
             st = st.copy(eventlogs = st.eventlogs + (src.key -> elog))
             backlog += src.key -> backlogObs.get("pending").asInstanceOf[Long]

@@ -12,7 +12,7 @@ import Directory.Entry
   * attempt), eventlog writeback, rename queue and `Directory.dump`, for
   * capped batches (`Cdc.cycle` at a cap of 5,000), unbounded ones
   * (`Cdc.cycle` at `Int.MaxValue`, one chunk: its job count is pinned
-  * below) and unbounded ones over lowered bounds, which run as chunks
+  * below) and unbounded ones over a lowered uid bound, which run as chunks
   * and are held to the reference run chunk by chunk. The ph15 rename
   * pass (`Cdc.updatePh15Cn`) is held to the set-based one on the rename
   * queues of the same kind of batches.
@@ -48,16 +48,16 @@ class CappedCycleSpec extends AnyFunSuite {
 
   test("chunked drains agree with the set-based path run chunk by chunk") {
     val sc = TestSpark.spark.sparkContext
-    val (evB, uidB) = (40, 24)
+    val uidB = 24
     val chunkCounts = mutable.ArrayBuffer.empty[Int]
     val kept = mutable.ArrayBuffer.empty[Int]
     differential(count = 67, seed = 20261019L)({ (snap, users, eventlog, conf, readTime) =>
       val before = sc.getRDDStorageInfo.map(_.id).toSet
-      val r = Cdc.cycle(snap, users, eventlog, conf, Int.MaxValue, readTime, evB, uidB)
+      val r = Cdc.cycle(snap, users, eventlog, conf, Int.MaxValue, readTime, uidB)
       kept += (sc.getRDDStorageInfo.map(_.id).toSet -- before).size
       r
     }, { (snap, users, eventlog, conf, readTime) =>
-      val ranges = chunkRanges(eventlog, conf, evB, uidB)
+      val ranges = chunkRanges(eventlog, conf, uidB)
       chunkCounts += ranges.size
       chunkwise(snap, users, eventlog, conf, readTime, ranges)
     })
@@ -187,7 +187,7 @@ class CappedCycleSpec extends AnyFunSuite {
       eventRow(rid, s"pk_uniqueid=${uidOf(ua)}", 6.0),
       eventRow(11.0, s"pk_uniqueid=${uidOf(ub)}", 6.0)), EtlSchema.eventSchema)
     val readTime = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
-    val (evB, uidB) = (Cdc.driverEventBound, Cdc.driverBatchBound)
+    val uidB = Cdc.driverBatchBound
     def rows(df: DataFrame): Seq[String] = df.collect().toSeq.map(_.toString).sorted
     def lines(snap: Dataset[Entry]): Seq[String] =
       Directory.dump(snap).split("\n").toSeq.sorted
@@ -210,17 +210,15 @@ class CappedCycleSpec extends AnyFunSuite {
     }
 
     // the rest equal the reference, chunk by chunk where the cycle chunks:
-    // (why, eventlog, cap, event bound, uid bound, chunks)
+    // (why, eventlog, cap, uid bound, chunks)
     val ok = Seq(
       // its verdict cannot be written back: the eventlog row stays N
-      ("a selected event has no record_id", events(null), 100, evB, uidB, 1),
-      ("an unbounded batch over the event bound", events(10.0), Int.MaxValue, 1, uidB, 2),
-      ("an unbounded batch over the uid bound", events(10.0), Int.MaxValue, evB, 1, 2),
-      ("an unbounded batch within the bounds", events(10.0), Int.MaxValue, 2, 2, 1))
-    for ((why, elog, max, eventBound, uidBound, n) <- ok) {
-      val got = Cdc.cycle(loaded, changed, elog, conf, max, readTime,
-        eventBound, uidBound)
-      val ranges = chunkRanges(elog, conf, eventBound, uidBound)
+      ("a selected event has no record_id", events(null), 100, uidB, 1),
+      ("an unbounded batch over the uid bound", events(10.0), Int.MaxValue, 1, 2),
+      ("an unbounded batch within the bound", events(10.0), Int.MaxValue, 2, 1))
+    for ((why, elog, max, uidBound, n) <- ok) {
+      val got = Cdc.cycle(loaded, changed, elog, conf, max, readTime, uidBound)
+      val ranges = chunkRanges(elog, conf, uidBound)
       assert(ranges.size == n, why)
       val ref =
         if (n == 1) SetBasedReference.cycle(loaded, changed, elog, conf, max, readTime)
@@ -307,11 +305,11 @@ object CappedCycleSpec {
     java.sql.Timestamp) => Cdc.CycleResult
 
   /** The record_id ranges of a drain's chunks, cut as `Cdc.cycle` cuts an
-    * unbounded selection over its bounds: in record_id order, at most
-    * `eventBound` events on at most `uidBound` distinct valid uids each.
+    * unbounded selection over its bound: in record_id order, at most
+    * `uidBound` distinct valid uids each.
     */
-  def chunkRanges(eventlog: DataFrame, conf: EtlConf, eventBound: Int,
-      uidBound: Int): Seq[(Option[Double], Option[Double])] = {
+  def chunkRanges(eventlog: DataFrame, conf: EtlConf, uidBound: Int)
+      : Seq[(Option[Double], Option[Double])] = {
     val sel = Cdc.selectBatch(eventlog, Int.MaxValue, conf)
       .select(col("record_id"), col("uid")).collect().toSeq
       .map(r => (Option(r.get(0)).map(_.asInstanceOf[Double]),
@@ -320,7 +318,7 @@ object CappedCycleSpec {
     val chunks = mutable.ArrayBuffer(mutable.ArrayBuffer.empty[(Option[Double], Option[Long])])
     for (e <- sel) {
       val uids = chunks.last.flatMap(_._2).toSet
-      if (chunks.last.size == eventBound || (uids.size == uidBound && e._2.exists(!uids(_))))
+      if (uids.size == uidBound && e._2.exists(!uids(_)))
         chunks += mutable.ArrayBuffer.empty
       chunks.last += e
     }

@@ -241,10 +241,9 @@ class CdcStreamCycleSpec extends AnyFunSuite {
       (elog.rdd.getNumPartitions, st.snapshot.rdd.getNumPartitions)
     }
     info(s"(eventlog, snapshot) partitions per cycle: $parts")
-    assert(parts.map(_._1).max <= spark.sparkContext.defaultParallelism, parts)
-    // the second source and the pass read the first one's coalesced
-    // snapshot: its partition count holds across the step
-    assert(parts.last._2 == parts.head._2, parts)
+    // both are stored by one rule: at most one partition per core
+    val cores = spark.sparkContext.defaultParallelism
+    assert(parts.forall { case (e, s) => e <= cores && s <= cores }, parts)
     assert(st.backlog("postgres") > 0)
   }
 

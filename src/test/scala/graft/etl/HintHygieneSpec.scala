@@ -79,7 +79,7 @@ class HintHygieneSpec extends AnyFunSuite {
 
     val readTime = java.sql.Timestamp.valueOf("2017-07-11 10:00:00")
     for (r <- Seq(Cdc.cycle(pre.snapshot, users, elog, conf),
-        Cdc.cycle(pre.snapshot, users, elog, conf, Int.MaxValue, readTime, 1, 1))) {
+        Cdc.cycle(pre.snapshot, users, elog, conf, Int.MaxValue, readTime, uidBound = 1))) {
       r.snapshot.count()
       r.eventUpdates.count()
       r.eventlog.count()
